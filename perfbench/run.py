@@ -1,6 +1,6 @@
 """Layered benchmark of the engine: one workload per run, one process.
 
-    python3 perfbench/run.py --workload {olap_tpch,llm_dedup_search,avro_compact}
+    python3 perfbench/run.py --workload {query_mix,avro_compact}
         --seed N --seconds S --trace {0,1}
 
 Runs from the repository root on ``local[nproc]``. Set-up (session start,
@@ -35,12 +35,16 @@ BENCH_DIR = Path(__file__).resolve().parent
 ROOT = BENCH_DIR.parent
 STATE = ROOT / ".perfbench"
 DRIVER_MEMORY = "4g"
+# The JVM's class-data archive: written by the first run in a checkout, read
+# by the later ones. It takes about 9 s of class loading out of each JVM
+# start on a 4-vCPU VM; it changes nothing the engine does.
+CLASS_ARCHIVE = STATE / "classes.jsa"
 
 
 def parse_args(argv: list[str] | None) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True,
-                    choices=["olap_tpch", "llm_dedup_search", "avro_compact"])
+                    choices=["query_mix", "avro_compact"])
     ap.add_argument("--seed", type=int, default=0)
     ap.add_argument("--seconds", type=float, default=10.0)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
@@ -60,10 +64,17 @@ def preflight() -> str | None:
 
 def configure_env(work: Path, trace: bool) -> None:
     """Keep every file Spark writes inside the run's work directory, make
-    the engine importable by Python workers, and turn the event log on for
-    the traced run. Must run before the JVM starts."""
+    the engine importable by Python workers, use or write the class-data
+    archive, and turn the event log on for the traced run. Must run before
+    the JVM starts."""
     tmp = work / "tmp"
     tmp.mkdir(parents=True)
+    # An empty conf dir at a fixed path: no host spark-defaults.conf, and the
+    # JVM shares classes only when its class path is the one the archive was
+    # written with and no directory on it has files in it.
+    conf_dir = STATE / "conf"
+    conf_dir.mkdir(exist_ok=True)
+    os.environ["SPARK_CONF_DIR"] = str(conf_dir)
     old = os.environ.get("PYTHONPATH")
     os.environ["PYTHONPATH"] = str(ROOT) + (os.pathsep + old if old else "")
     os.environ["SPARK_LOCAL_DIRS"] = str(work / "spark-local")
@@ -82,15 +93,28 @@ def configure_env(work: Path, trace: bool) -> None:
             "spark.eventLog.compress": "false",
             "spark.eventLog.rolling.enabled": "false",
         })
-    # -XX:-UsePerfData: no hsperfdata file in the system temp directory
-    args = ["--driver-java-options", f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"]
+    # -XX:-UsePerfData: no hsperfdata file in the system temp directory.
+    # -XX:TieredStopAtLevel=1: C1 only. A run's JVM lives about half a minute; with
+    # C2 the JIT keeps up to 3 of 4 vCPUs busy for its first ~45 s and each
+    # pass gets faster for nine passes (6.8 s to 3.7 s on query_mix), so two
+    # timed passes would measure how far the JIT got. With C1 alone the first
+    # timed pass is already within a tenth of the later ones.
+    # JVM warnings go to stderr, so the result stays the last stdout line.
+    java = [f"-Djava.io.tmpdir={tmp}", "-XX:-UsePerfData", "-XX:TieredStopAtLevel=1",
+            "-Xlog:disable", "-Xlog:all=warning:stderr"]
+    if CLASS_ARCHIVE.is_file():
+        java.append(f"-XX:SharedArchiveFile={CLASS_ARCHIVE}")
+    else:
+        java.append(f"-XX:ArchiveClassesAtExit={work / CLASS_ARCHIVE.name}")
+    args = ["--driver-java-options", shlex.join(java)]
     for k, v in confs.items():
         args += ["--conf", f"{k}={v}"]
     os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join(args) + " pyspark-shell"
 
 
-def stop_spark(spark) -> None:
-    """Stop the session, then the JVM, and wait for it to exit."""
+def stop_spark(spark) -> int | None:
+    """Stop the session, then the JVM, and wait for it to exit (a JVM that
+    writes the class-data archive takes a while). Returns its exit code."""
     from pyspark import SparkContext
 
     gateway = SparkContext._gateway
@@ -98,13 +122,22 @@ def stop_spark(spark) -> None:
     spark.stop()
     if gateway is not None:
         gateway.shutdown()
-    if proc is not None:
-        try:
-            proc.stdin.close()  # the gateway JVM exits on stdin EOF
-            proc.wait(timeout=30)
-        except (OSError, subprocess.TimeoutExpired):
-            proc.kill()
-            proc.wait()
+    if proc is None:
+        return None
+    try:
+        proc.stdin.close()  # the gateway JVM exits on stdin EOF
+        return proc.wait(timeout=120)
+    except (OSError, subprocess.TimeoutExpired):
+        proc.kill()
+        proc.wait()
+        return None
+
+
+def keep_class_archive(work: Path, jvm_exit: int | None) -> None:
+    """Install the archive this run's JVM wrote, if it exited cleanly."""
+    written = work / CLASS_ARCHIVE.name
+    if jvm_exit == 0 and written.is_file() and not CLASS_ARCHIVE.exists():
+        os.replace(written, CLASS_ARCHIVE)
 
 
 def _git_head() -> str | None:
@@ -201,7 +234,7 @@ def main(argv: list[str] | None = None) -> int:
         env = env_stamp(spark, cores)
     finally:
         if spark is not None:
-            stop_spark(spark)
+            keep_class_archive(work, stop_spark(spark))
 
     folded = None
     if args.trace:

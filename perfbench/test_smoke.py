@@ -47,13 +47,25 @@ def test_every_metric_reported_and_nothing_failed(workload: str, trace: int) -> 
     values = {k: v["value"] for k, v in result["metrics"].items()}
     if trace:
         assert values["bench.failed_ops"] == 0
-        if workload == "olap_tpch":
-            assert values["py.tasks"] == 0
+        if workload == "query_mix":
+            assert_no_python_tasks_in_olap_queries(workload)
         if workload == "avro_compact":
             assert values["compact.leaf_success_ratio"] == 1.0
             assert values["avro_spark.files_written"] > 0
     else:
         assert all(v > 0 for v in values.values())
+
+
+def assert_no_python_tasks_in_olap_queries(workload: str) -> None:
+    """The OLAP queries of the mix run no Python worker: their job groups in
+    the traced run's artifact hold no Python task."""
+    art = json.loads(
+        (ROOT / ".perfbench" / "artifacts" / f"{workload}-s3-t1-smoke.json").read_text()
+    )
+    olap = {r["op"] for r in art["ops"] if r["module"] in ("relational", "batch_equiv")}
+    groups = {g: v for g, v in art["event_log_groups"].items() if g.split(":")[2] in olap}
+    assert olap and groups
+    assert all(v.get("py_tasks", 0) == 0 for v in groups.values()), groups
 
 
 def test_fails_without_the_engine(tmp_path: Path) -> None:
@@ -62,6 +74,6 @@ def test_fails_without_the_engine(tmp_path: Path) -> None:
     shutil.copy(ROOT / "BENCHMARK.json", tmp_path)
     shutil.copytree(BENCH_DIR, tmp_path / "perfbench",
                     ignore=shutil.ignore_patterns("__pycache__"))
-    proc = run_bench("olap_tpch", 0, cwd=tmp_path)
+    proc = run_bench(WORKLOADS[0], 0, cwd=tmp_path)
     assert proc.returncode != 0
     assert '"metrics"' not in proc.stdout

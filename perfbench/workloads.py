@@ -1,14 +1,14 @@
-"""The three workloads and their output checks.
+"""The two workloads and their output checks.
 
 Each workload has a set-up phase (inputs, warm-up) and a timed window of
-passes that runs until ``--seconds`` have elapsed (at least one pass).
+passes that runs until ``--seconds`` have elapsed and at least
+``MIN_PASSES`` passes are done.
 Every operation — warm-up included — is checked; an exception or a wrong
 output is a failed operation, never skipped.
 
-* ``olap_tpch`` / ``llm_dedup_search``: one pass runs each of the
-  workload's registry queries once (builder call, then ``collect``) at the
-  workload's scale, in an order the seed permutes per pass. Outputs are
-  compared with the DuckDB-oracle results in ``expected/``.
+* ``query_mix``: one pass runs each of the workload's registry queries once
+  (builder call, then ``collect``), in a fixed order. Outputs are compared
+  with the DuckDB-oracle results in ``expected/``.
 * ``avro_compact``: one pass compacts a seeded hive-partitioned folder of
   small Avro files with ``plans.compact.compact`` into a fresh target, then
   runs a read-back aggregate over the output with ``read_avro_folder``.
@@ -21,7 +21,6 @@ import gzip
 import importlib.util
 import json
 import math
-import random
 import shutil
 import statistics
 import time
@@ -34,55 +33,38 @@ import layers
 BENCH_DIR = Path(__file__).resolve().parent
 ROOT = BENCH_DIR.parent
 
+# One query per registry module the workload measures: a six-table join
+# (relational), the streaming batch equivalent (batch_equiv), and the LLM
+# queries of the dedup, similarity and text modules. The order is fixed:
+# moving text_quality or sim_cosine_topk ahead of a dedup query shifts the
+# dedup time by about a tenth. The tables are fixed, so this workload's
+# inputs do not depend on the seed.
 QUERY_WORKLOADS = {
-    "olap_tpch": (
-        "q01_pricing_summary",
-        "q02_scan_filter_project",
-        "q03_shipping_priority",
+    "query_mix": (
         "q05_local_supplier_volume",
-        "q10_returned_item",
-        "join_broadcast_dim",
-        "agg_distinct",
-        "window_topk_per_group",
         "ev_tumbling_1h",
-        "json_extract_events",
-    ),
-    "llm_dedup_search": (
         "dedup_ngram_jaccard",
-        "dedup_minhash_lsh",
         "sim_cosine_topk",
         "text_quality",
     ),
 }
-WORKLOADS = (*QUERY_WORKLOADS, "avro_compact")
 
-# Workloads whose query order the seed permutes. The LLM queries keep their
-# registry order: moving text_quality or sim_cosine_topk between the two dedup
-# queries alone shifts the dedup pair's time by about a tenth, which would
-# swamp any change the workload is meant to show. Their tables are fixed, so
-# this workload's inputs do not depend on the seed.
-PERMUTED = {"olap_tpch"}
-
-# Scale of the timed passes, and of the warm-up / smoke-test inputs.
-SCALES = {"full": 0.1, "tiny": 0.001}
-
-# Queries run once at tiny scale before timing: they warm the process-wide
-# paths (first parquet scan, shuffle, codegen, Python worker start). All
-# four LLM queries, because their first runs vary most; one OLAP query,
-# because warming all ten would not fit a run's budget.
-WARM_QUERIES = {
-    "olap_tpch": ("q03_shipping_priority",),
-    "llm_dedup_search": QUERY_WORKLOADS["llm_dedup_search"],
-}
+# Scale of the query tables: timed runs, and the smoke test.
+SCALES = {"full": 0.01, "tiny": 0.001}
 
 # Avro source shape: leaves x files x records. Compaction writes
-# OUT_FILES_PER_LEAF files per leaf. One pass is AVRO_CYCLES compactions,
-# each followed by its read-back scan.
+# OUT_FILES_PER_LEAF files per leaf. One pass is one compaction followed by
+# its read-back scan.
 AVRO_SOURCE = {"full": (3, 6, 400), "tiny": (1, 3, 50)}
 OUT_FILES_PER_LEAF = 2
-AVRO_CYCLES = 3
 
 MODULES = ("relational", "batch_equiv", "dedup", "similarity", "text")
+
+# Timed passes per run, at least. The first pass after the warm-up is still
+# a little slower (the JIT keeps compiling), so a window of whole passes
+# bounded by time alone would time one pass on a slow host and two on a
+# fast one, and mix that into the spread.
+MIN_PASSES = 2
 
 
 @functools.cache
@@ -144,7 +126,6 @@ class Bench:
     errors: list[str] = field(default_factory=list)
     ops: list[dict] = field(default_factory=list)  # timed operations
     passes: int = 0
-    cycles_per_pass: int = 1  # operations repeated within one pass
     window_s: float = 0.0
     extra: dict = field(default_factory=dict)
 
@@ -167,7 +148,8 @@ class Bench:
         self.errors.append(f"{op}: {why}"[:500])
 
     def run_window(self, one_pass) -> None:
-        """Closed loop, one client: passes until ``seconds`` have elapsed."""
+        """Closed loop, one client: passes until ``seconds`` have elapsed
+        and ``MIN_PASSES`` are done."""
         t0 = time.perf_counter()
         while True:
             label = str(self.passes)
@@ -177,7 +159,7 @@ class Bench:
                 # marks the end of the pass in the event log (retained blocks)
                 self.enter(label, "end", "mark")
                 self.sc.parallelize([0], 1).count()
-            if time.perf_counter() - t0 >= self.seconds:
+            if self.passes >= MIN_PASSES and time.perf_counter() - t0 >= self.seconds:
                 break
         self.window_s = time.perf_counter() - t0
 
@@ -218,35 +200,26 @@ def run_query(b: Bench, spec, sf_dir: str, expected: dict, pass_label: str,
 
 
 def query_workload(b: Bench, setup_done) -> None:
+    """A warm-up pass, then the timed passes, all on the same tables. The
+    warm-up takes every query's first-run costs (the first job, code
+    generation, JIT, the Python workers' start) out of the timed passes."""
     from spark_dba_spark import registry
 
     t0 = time.perf_counter()
     specs = registry.all_specs()
-    names = list(QUERY_WORKLOADS[b.workload])
-    data = {
-        k: str(fixtures.write_tables(b.work / f"sf{sf}", sf)) for k, sf in SCALES.items()
-    }
-    expected = {k: load_expected(sf) for k, sf in SCALES.items()}
+    sf = SCALES[b.timed_scale]
+    data = str(fixtures.write_tables(b.work / f"sf{sf}", sf))
+    expected = load_expected(sf)
     t1 = time.perf_counter()
-    for warm in WARM_QUERIES[b.workload]:
-        run_query(b, specs[warm], data["tiny"], expected["tiny"], "w", False)
+
+    def one_pass(label: str) -> list[dict]:
+        return [run_query(b, specs[name], data, expected, label, fingerprint=label == "0")
+                for name in QUERY_WORKLOADS[b.workload]]
+
+    one_pass("w")
     b.extra.update(inputs_s=t1 - t0, warm_s=time.perf_counter() - t1)
     setup_done()
-
-    rng = random.Random(b.seed)
-    scale = b.timed_scale
-
-    def one_pass(label: str) -> None:
-        order = names[:]
-        if b.workload in PERMUTED:
-            rng.shuffle(order)
-        for name in order:
-            b.ops.append(
-                run_query(b, specs[name], data[scale], expected[scale], label,
-                          fingerprint=label == "0")
-            )
-
-    b.run_window(one_pass)
+    b.run_window(lambda label: b.ops.extend(one_pass(label)))
 
 
 # ---------------------------------------------------------------------------
@@ -346,14 +319,13 @@ def scan_once(b: Bench, target: Path, expected: dict, pass_label: str,
 
 
 def compaction_cycle(b: Bench, src: Path, expected: dict, bytes_in: int,
-                     label: str, cycle: int) -> list[dict]:
+                     label: str) -> list[dict]:
     """compact() into a fresh target, then the read-back scan of it."""
-    target = b.work / f"out_{label}_{cycle}"
+    target = b.work / f"out_{label}"
     recs = [compact_once(b, src, target, len(expected), label)]
     recs[0]["bytes_in"] = bytes_in
     if recs[0].get("ok"):
-        first = label == "0" and cycle == 0
-        recs.append(scan_once(b, target, expected, label, fingerprint=first))
+        recs.append(scan_once(b, target, expected, label, fingerprint=label == "0"))
     shutil.rmtree(target, ignore_errors=True)
     return recs
 
@@ -365,17 +337,13 @@ def avro_workload(b: Bench, setup_done) -> None:
         src = b.work / f"avro_{k}"
         sources[k] = (src, *fixtures.write_avro_source(src, b.seed, *AVRO_SOURCE[k]))
     t1 = time.perf_counter()
-    compaction_cycle(b, *sources["tiny"], "w", 0)
+    compaction_cycle(b, *sources["tiny"], "w")
     src, expected, bytes_in = sources[b.timed_scale]
     b.extra.update(inputs_s=t1 - t0, warm_s=time.perf_counter() - t1, bytes_in=bytes_in)
     setup_done()
 
-    def one_pass(label: str) -> None:
-        for cycle in range(AVRO_CYCLES):
-            b.ops.extend(compaction_cycle(b, src, expected, bytes_in, label, cycle))
-
-    b.cycles_per_pass = AVRO_CYCLES
-    b.run_window(one_pass)
+    b.run_window(lambda label: b.ops.extend(
+        compaction_cycle(b, src, expected, bytes_in, label)))
     if b.tracer is not None:
         b.attempted += 1
         try:
@@ -431,7 +399,7 @@ def end_to_end(b: Bench, setup_s: float) -> dict[str, float]:
 def per_layer(b: Bench, folded: dict | None, peak_rss_mb: float,
               overhead_pct: float) -> dict[str, float]:
     t = b.tracer
-    n = max(1, b.passes * b.cycles_per_pass)
+    n = max(1, b.passes)
     timed = {str(i) for i in range(b.passes)}
 
     def per_pass(metric: str) -> float:
