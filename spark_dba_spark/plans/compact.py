@@ -190,10 +190,19 @@ def _process_partition(
     # C4 snapshot — taken right before the data is consumed (:276)
     snapshot = fs.snapshot(leaf)
 
+    # D3/"In Progress" dynamic sizing: ceil(bytes / target file size)
+    total_bytes = fs.data_size(leaf, params.ext)
+    n_out = planned_file_count(params, total_bytes)
+
     if params.fmt == "avro":
         from ..sources.avro_spark import read_avro_folder
 
-        df = read_avro_folder(spark, leaf, reader_schema=schema, recursive=False)
+        # At least n_out read partitions, so coalesce(n_out) below still
+        # writes n_out files (coalesce can only merge partitions).
+        df = read_avro_folder(
+            spark, leaf, reader_schema=schema, recursive=False,
+            min_partitions=n_out,
+        )
     else:
         reader = spark.read.format(params.fmt)
         if schema is not None:
@@ -203,9 +212,6 @@ def _process_partition(
     # source — at scale an uncached frame doubles input I/O per partition.
     df = df.persist()
 
-    # D3/"In Progress" dynamic sizing: ceil(bytes / target file size)
-    total_bytes = fs.data_size(leaf, params.ext)
-    n_out = planned_file_count(params, total_bytes)
     try:
         in_count = df.count()  # D4 (:292-293)
         log.info(

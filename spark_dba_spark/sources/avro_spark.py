@@ -12,7 +12,14 @@ connector (absent from this classpath, no network to fetch it):
   by one block, not one file. Each split resolves its file's writer schema
   against an optional *reader schema* — the schema-evolution ladder (§1.3)
   the reference calls out as its reason for avoiding spark-avro
-  (``DefragmentAvroFolder.scala:17-20``).
+  (``DefragmentAvroFolder.scala:17-20``). Splits are sized with Spark's
+  scan rule, ``min(split_bytes, max(spark.sql.files.openCostInBytes,
+  ceil(total_bytes / parallelism)))``, and packed into byte-balanced bins,
+  one decode task per bin; the bins reach the executors as the rows of a
+  JVM ``LocalRelation``, so planning runs no Python stage. A Python task
+  costs ≈0.4 s before the decode starts (4-vCPU VM, CPython 3.11,
+  PySpark 4.1), so a leaf of tiny files is read by a few tasks, not one
+  per file.
 - **write**: one container file per partition via ``mapInPandas`` with a
   streaming block writer; ``df.coalesce(n)`` upstream controls file count
   exactly like the reference's D3. Tasks write to an attempt-unique hidden
@@ -534,12 +541,59 @@ def _discover_hive_partitions(root: str, files: list):
 DEFAULT_SPLIT_BYTES = 128 << 20  # one Hadoop-block-ish range per task
 
 
+def _plan_bins(
+    files: list,
+    split_bytes: int,
+    open_cost: int,
+    parallelism: int,
+    min_partitions: int = 1,
+) -> list[list[tuple[str, int, int]]]:
+    """Cut ``files`` (pyarrow FileInfos) into byte-range splits and pack the
+    splits into byte-balanced bins, one decode task per bin.
+
+    The split size is Spark's own file-scan rule (``FilePartition.
+    maxSplitBytes``): ``min(split_bytes, max(open_cost, ceil(total /
+    parallelism)))``. Unlike Spark's packer, a file is not charged
+    ``open_cost`` on top of its length: opening a file costs far less than
+    the Python task a bin becomes, so tiny files share bins. Files larger
+    than the split size are cut into equal ranges (snapped to sync markers
+    at decode time). The splits then go largest first into the least-loaded
+    of ``k = clamp(ceil(total / split size), min_partitions, n_splits)``
+    bins. Each bin lists its splits in (path, start) order."""
+    import heapq
+
+    total = sum(int(i.size) for i in files)
+    max_split = max(
+        1, min(split_bytes, max(open_cost, math.ceil(total / max(1, parallelism))))
+    )
+    splits: list[tuple[str, int, int]] = []
+    for info in files:
+        size = int(info.size)
+        n = max(1, math.ceil(size / max_split))
+        step = math.ceil(size / n)
+        for k in range(n):
+            lo, hi = k * step, min((k + 1) * step, size)
+            if lo < hi:
+                splits.append((info.path, lo, hi))
+    if not splits:
+        return []
+    k = min(max(math.ceil(total / max_split), min_partitions, 1), len(splits))
+    heap = [(0, b) for b in range(k)]
+    bins: list[list[tuple[str, int, int]]] = [[] for _ in range(k)]
+    for sp in sorted(splits, key=lambda s: (s[1] - s[2], s[0], s[1])):
+        load, b = heapq.heappop(heap)
+        bins[b].append(sp)
+        heapq.heappush(heap, (load + sp[2] - sp[1], b))
+    return [sorted(b) for b in bins]
+
+
 def read_avro_folder(
     spark: SparkSession,
     path: str,
     reader_schema: str | dict | None = None,
     recursive: bool = True,
     split_bytes: int = DEFAULT_SPLIT_BYTES,
+    min_partitions: int = 1,
 ) -> DataFrame:
     """Folder of ``.avro`` container files → DataFrame.
 
@@ -550,35 +604,46 @@ def read_avro_folder(
     heuristic: "Latest file will have latest schema"
     (``DefragmentAvroFolder.scala:91-103``).
 
-    Files larger than ``split_bytes`` are planned as multiple byte-range
-    splits; each task syncs to the first block boundary (16-byte sync
-    marker) at/after its range start and decodes blocks whose start offset
-    falls inside its range — the Avro container split protocol
-    (reference: splittable ``AvroKeyInputFormat``,
+    Planning (driver, one listing): files are cut into byte-range splits
+    and packed into byte-balanced bins by :func:`_plan_bins`, with Spark's
+    scan sizing rule ``min(split_bytes, max(spark.sql.files.
+    openCostInBytes, ceil(total_bytes / parallelism)))`` where parallelism
+    is ``spark.sql.leafNodeDefaultParallelism`` (default: the context's
+    ``defaultParallelism``). The bin count is at least ``min_partitions``
+    and at most the number of splits. The bins travel to the executors as
+    one row each of a JVM ``LocalRelation`` (built from an Arrow table):
+    no Python stage and no shuffle, unless there are more bins than the
+    relation has partitions, when a round-robin repartition spreads them.
+    The decode is then one Python task per bin. The reason is the fixed
+    cost of a Python task: ≈0.4 s before the user function runs (4-vCPU
+    VM, CPython 3.11, PySpark 4.1), mostly the worker's
+    ``importlib.invalidate_caches()`` re-reading pyspark.zip's directory.
+    One task per tiny file, as the compactor's leaves have, spent nearly
+    all of a compaction in that set-up.
+
+    Each split syncs to the first block boundary (16-byte sync marker)
+    at/after its range start and decodes blocks whose start offset falls
+    inside its range — the Avro container split protocol (reference:
+    splittable ``AvroKeyInputFormat``,
     ``DefragmentAvroFolder.scala:267-272``). Task memory is bounded by one
     block, never one file.
 
     Filesystems pyarrow can't reach (e.g. a Hadoop-only scheme like
     ``wasbs://``, or ``hdfs://`` without libhdfs on the workers) fall back
     to a Spark ``binaryFile`` scan — whole-file-per-task (no block
-    splits), but working on ANY Hadoop filesystem, which was the behavior
-    before block-split reads existed.
+    splits, ``min_partitions`` not applied), but working on ANY Hadoop
+    filesystem, which was the behavior before block-split reads existed.
     """
     try:
         fs, root = resolve_fs(path)
     except ValueError:
         return _read_avro_binaryfile(spark, path, reader_schema, recursive)
+    files = _list_avro_files(fs, root, recursive)
     if reader_schema is None:
-        reader_schema = latest_file_schema(spark, path, recursive=recursive)
+        reader_schema = _newest_file_schema(fs, files, path)
     rs = ac.parse_schema(reader_schema)
     spark_schema = avro_record_to_struct(rs)
     col_order = [f.name for f in spark_schema.fields]
-
-    files = _list_avro_files(fs, root, recursive)
-    if not files:
-        # With an explicit reader schema an empty/just-swept folder is a
-        # valid empty relation; only schema probing has nothing to work on.
-        return spark.createDataFrame([], spark_schema)
 
     # Hive-layout partition discovery (k=v dir segments): partition values
     # live in the path, not the files — re-attach them as trailing columns,
@@ -592,47 +657,69 @@ def read_avro_folder(
         for c, t in zip(part_cols, part_types):
             spark_schema = spark_schema.add(T.StructField(c, t, True))
 
-    # Partition values ride IN the splits DataFrame (JSON per split row),
-    # not in the task closure: a values-by-path dict pickled into every
-    # task would grow with the file count — a million-file tree would ship
-    # a million-entry dict to each executor.
+    from ..catalog import _parse_bytes
+
+    parallelism = int(
+        spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    open_cost = _parse_bytes(
+        spark.conf.get("spark.sql.files.openCostInBytes", "4194304"), 4 << 20
+    )
+    bins = _plan_bins(files, split_bytes, open_cost, parallelism, min_partitions)
+    if not bins:
+        # With an explicit reader schema an empty/just-swept folder is a
+        # valid empty relation; only schema probing has nothing to work on.
+        return spark.createDataFrame([], spark_schema)
+
+    # Partition values ride IN the bin rows (JSON per split), not in the
+    # task closure: a values-by-path dict pickled into every task would
+    # grow with the file count — a million-file tree would ship a
+    # million-entry dict to each executor.
     import json as _json
 
-    splits: list[tuple[str, int, int, str]] = []
-    for info in files:
-        pv = (
-            _json.dumps(list(part_vals[info.path])) if part_cols else "[]"
-        )
-        size = int(info.size)
-        n = max(1, math.ceil(size / max(1, split_bytes)))
-        step = math.ceil(size / n)
-        for k in range(n):
-            lo, hi = k * step, min((k + 1) * step, size)
-            if lo < hi:
-                splits.append((info.path, lo, hi, pv))
+    import pyarrow as pa
 
-    splits_df = spark.createDataFrame(
-        splits, schema="path string, start long, end long, pv string"
-    ).repartition(len(splits))
+    bins_df = spark.createDataFrame(
+        pa.table(
+            {
+                "path": [[p for p, _, _ in b] for b in bins],
+                "start": [[lo for _, lo, _ in b] for b in bins],
+                "end": [[hi for _, _, hi in b] for b in bins],
+                "pv": [
+                    [
+                        _json.dumps(list(part_vals[p])) if part_cols else "[]"
+                        for p, _, _ in b
+                    ]
+                    for b in bins
+                ],
+            }
+        ),
+        schema="path array<string>, start array<long>, end array<long>, "
+        "pv array<string>",
+    )
+    # A LocalRelation of n rows scans as min(n, parallelism) partitions,
+    # one row each when n fits.
+    if len(bins) > parallelism:
+        bins_df = bins_df.repartition(len(bins))
 
     conv = _decoded_converter(rs)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for fpath, start, end, pv in zip(
-                pdf["path"], pdf["start"], pdf["end"], pdf["pv"]
-            ):
-                pvals = _json.loads(pv) if part_cols else ()
-                for out in _decode_split(
-                    fs, str(fpath), int(start), int(end), rs, col_order,
-                    conv=conv,
-                ):
-                    if part_cols:
-                        for c, v in zip(part_cols, pvals):
-                            out[c] = v
-                    yield out
+            for row in zip(pdf["path"], pdf["start"], pdf["end"], pdf["pv"]):
+                for fpath, start, end, pv in zip(*row):
+                    pvals = _json.loads(pv) if part_cols else ()
+                    for out in _decode_split(
+                        fs, str(fpath), int(start), int(end), rs, col_order,
+                        conv=conv,
+                    ):
+                        if part_cols:
+                            for c, v in zip(part_cols, pvals):
+                                out[c] = v
+                        yield out
 
-    return splits_df.mapInPandas(decode, spark_schema)
+    return bins_df.mapInPandas(decode, spark_schema)
 
 
 def _read_avro_binaryfile(
@@ -825,10 +912,14 @@ def latest_file_schema(
     M3 parity) — reads only the file's HEADER bytes through the resolved
     filesystem (any scheme), never the whole file."""
     fs, root = resolve_fs(path)
-    cands = _list_avro_files(fs, root, recursive)
-    if not cands:
+    return _newest_file_schema(fs, _list_avro_files(fs, root, recursive), path)
+
+
+def _newest_file_schema(fs, files: list, path: str) -> dict:
+    """Header schema of the newest of ``files`` (ties broken by path)."""
+    if not files:
         raise FileNotFoundError(f"no .avro files under {path}")
-    latest = max(cands, key=lambda i: (i.mtime, i.path))
+    latest = max(files, key=lambda i: (i.mtime, i.path))
     with fs.open_input_file(latest.path) as f:
         return _read_header_with_retry(f, int(latest.size))[0]
 

@@ -712,6 +712,60 @@ def test_block_split_read_multiple_tasks(spark, tmp_path):
         assert d2.select("id").distinct().count() == 5000
 
 
+def _tiny_folder(folder, n_files, rows_per_file=10):
+    folder.mkdir()
+    for f in range(n_files):
+        rows = mkrows(rows_per_file, start=f * rows_per_file)
+        (folder / f"f{f:02d}.avro").write_bytes(ac.write_container(rows, SCHEMA))
+    return n_files * rows_per_file
+
+
+def test_read_plans_splits_on_the_jvm(spark, tmp_path):
+    """The split table is a JVM LocalRelation: no Python stage plans it."""
+    _tiny_folder(tmp_path / "t", 4)
+    df = read_avro_folder(spark, str(tmp_path / "t"), reader_schema=SCHEMA)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan
+
+
+def test_tiny_files_pack_into_few_partitions(spark, tmp_path):
+    n = _tiny_folder(tmp_path / "t", 12)
+    df = read_avro_folder(spark, str(tmp_path / "t"), reader_schema=SCHEMA)
+    assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert df.count() == n
+
+    df3 = read_avro_folder(
+        spark, str(tmp_path / "t"), reader_schema=SCHEMA, min_partitions=3
+    )
+    assert df3.rdd.getNumPartitions() == 3
+    ids = [r["id"] for r in df3.collect()]
+    assert sorted(ids) == list(range(n))
+
+
+def test_plan_bins_balances_bytes():
+    """Largest-first into the least-loaded bin; every split lands once;
+    the bin count obeys the min_partitions floor and the n_splits cap."""
+    import types
+
+    files = [
+        types.SimpleNamespace(path=f"/d/f{i}", size=s)
+        for i, s in enumerate([900, 500, 400, 300, 200, 100, 100])
+    ]
+    bins = asp._plan_bins(files, 1 << 20, 1000, 4, min_partitions=3)
+    assert len(bins) == 3
+    assert sorted(sp for b in bins for sp in b) == sorted(
+        (f.path, 0, f.size) for f in files
+    )
+    loads = sorted(sum(hi - lo for _, lo, hi in b) for b in bins)
+    assert loads == [800, 800, 900]
+    assert len(asp._plan_bins(files, 1 << 20, 1000, 4, min_partitions=50)) == 7
+    # one file larger than the split size is cut into ranges
+    big = [types.SimpleNamespace(path="/d/big", size=10_000)]
+    bins = asp._plan_bins(big, 3000, 1000, 4)
+    assert [b[0][1:] for b in bins] == [(0, 2500), (2500, 5000), (5000, 7500), (7500, 10000)]
+
+
 def test_write_commit_protocol(spark, tmp_path):
     """Tasks write attempt-unique hidden temps and rename on success; a
     failing job leaves NO visible .avro files; the driver sweeps this

@@ -460,3 +460,61 @@ def test_compact_where_dry_run_and_cli_flag(spark, tmp_path):
     # only dt=a (6/1 >= 3) lands in the target
     assert (tmp_path / "out" / "dt=a").is_dir()
     assert not (tmp_path / "out" / "dt=b").exists()
+
+
+AVRO_SCHEMA = {
+    "type": "record",
+    "name": "Rec",
+    "fields": [{"name": "id", "type": "long"}, {"name": "name", "type": "string"}],
+}
+
+
+def write_tiny_avro_leaf(folder: str, n_files: int, rows_per_file: int = 20) -> list:
+    from spark_dba_spark.sources import avro_codec as ac
+
+    os.makedirs(folder, exist_ok=True)
+    rows = []
+    for f in range(n_files):
+        recs = [
+            {"id": i, "name": f"name_{i}"}
+            for i in range(f * rows_per_file, (f + 1) * rows_per_file)
+        ]
+        with open(f"{folder}/part_{f}.avro", "wb") as fh:
+            fh.write(ac.write_container(recs, AVRO_SCHEMA))
+        rows += recs
+    return rows
+
+
+def avro_output(folder: str) -> tuple[int, list]:
+    from spark_dba_spark.sources import avro_codec as ac
+
+    files = [
+        os.path.join(folder, f) for f in os.listdir(folder)
+        if f.endswith(".avro") and not f.startswith((".", "_"))
+    ]
+    recs = [r for p in files for r in ac.read_container(open(p, "rb").read())]
+    return len(files), recs
+
+
+def test_avro_file_count_is_exact(spark, tmp_path):
+    """file_count=2 over six tiny files: the read packs the files into at
+    least two bins, so coalesce(2) writes exactly two files."""
+    src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
+    expected = write_tiny_avro_leaf(src, n_files=6)
+    res = compact(spark, CompactionParams(source=src, target=tgt, file_count=2, fmt="avro"))
+    assert res.success, res.errors
+    n_files, got = avro_output(tgt)
+    assert n_files == 2
+    assert sorted(r["id"] for r in got) == sorted(r["id"] for r in expected)
+
+
+def test_avro_file_count_above_split_count(spark, tmp_path):
+    """coalesce cannot grow: asking for more files than there are splits
+    writes one file per split (one per tiny input file)."""
+    src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
+    expected = write_tiny_avro_leaf(src, n_files=3)
+    res = compact(spark, CompactionParams(source=src, target=tgt, file_count=5, fmt="avro"))
+    assert res.success, res.errors
+    n_files, got = avro_output(tgt)
+    assert n_files == 3
+    assert sorted(r["id"] for r in got) == sorted(r["id"] for r in expected)

@@ -26,10 +26,13 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
+    specs = registry.all_specs()
+    unknown = [n for n in args.names if n not in specs]
+    if unknown:
+        ap.error(f"unknown query names: {', '.join(unknown)}")
     out = Path(args.out)
     out.mkdir(parents=True, exist_ok=True)
     spark = get_spark("dump-plans", driver_memory="8g")
-    specs = registry.all_specs()
     for name in args.names:
         df = specs[name].builder(spark, args.sf)
         buf = io.StringIO()
