@@ -429,6 +429,12 @@ def _minhash_stages(spark: SparkSession, sf_dir: str):
     # round, guide §2.3 "shuffle fewer bytes"/§1.2 per-task work:
     # measured on the band-planner family, string → struct key + one-pass
     # expansion took the planner 4.58s → 2.76s gated-min at sf0.1).
+    # The equivalence also needs every sig slice to be all-null or
+    # none-null: concat_ws skips nulls, so the string key rendered [x, null]
+    # and [x] alike where the struct keeps them apart. array_min holds that
+    # invariant today: every sig entry minimises over the same hash pairs,
+    # so a doc's entries are all null (no shingles) or none are. Re-check
+    # the equivalence if the sig stage changes.
     bands = (
         sig.select(
             "doc_id",

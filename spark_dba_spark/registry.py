@@ -6,12 +6,22 @@ the DuckDB oracle SQL the driver uses as the correctness gate
 (CORRECTNESS_r{N}.json). ``__spark_entry__.py``, ``bench.py`` and the pytest
 parity suite all consume this registry, so there is exactly one source of
 truth for "what the engine can do" (SURVEY.md §2 inventory).
+
+The driver records oracle rows for the first ``WINDOW`` queries only, so the
+order is derived from its committed ``CORRECTNESS_r{N}.json`` rows: first the
+non-bench full-oracle queries whose latest row is not green (padded with the
+stalest greens), then the bench set, then the rest of that backlog, then all
+other queries by latest driver round, oldest first. Within a class,
+registration order holds.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import json
+import re
 from collections.abc import Callable
+from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -28,213 +38,50 @@ class QuerySpec:
     doc: str = ""
 
 
-# Registry iteration order is a PRIORITY order: CORRECTNESS_r01 recorded
-# rows for exactly the first 50 registered queries and none for the last 5,
-# so the external driver appears to cap its per-round oracle sweep at 50
-# entries. Names listed first here are guaranteed a driver correctness row;
-# names pushed last are covered by rounds where they sat earlier plus the
-# committed full local sweep (tools/check_oracle.py --json →
-# CORRECTNESS_LOCAL_r{N}.json, all queries, same comparator shape).
-#
-# ROTATION PROTOCOL FOR THE NEXT ROUND'S BUILDER: read CORRECTNESS_r{N}.json;
-# every registered query absent from it moves into PRIORITY_FIRST, and an
-# equal number of queries holding a green row from any prior round rotate
-# into PRIORITY_LAST (prefer families with several other green rows). Over
-# rounds, every query accumulates at least one driver-recorded green row.
-#
-# ROUND-14 WINDOW (VERDICT r13 "What's missing" #1; one window = 50
-# slots): CORRECTNESS_r13 delivered 50/50 green (fifth consecutive
-# zero-red round). Per the standing rotation protocol all 36 r13
-# slot-holders retire to PRIORITY_LAST. Slots 1-26 seat EXACTLY the 26
-# never-driver-checked continuation ops that queued contiguously behind
-# the r13 window (batches H-M; each with a full oracle, three
-# hostile-SF sweep rows, and a brute pytest twin — the set VERDICT r13
-# called "highest user-facing risk by construction").
-# emb_intrinsic_dim_twonn additionally carries this round's VERDICT
-# perf fix (local-top-2 Arrow scorer replacing the 256-corpus-sized
-# window; pinned by tests/test_r14_ops.py). Slots 27-36 are the ten
-# NEW r14 batch-N operators (PVM bridge, jackknife influence, MDE
-# power analysis, seasonality eta^2, sequence pattern match,
-# prefix-hash audit, probe hubness, prefix-dim recall, LSH band
-# planner, method confusion — same four-evidence protocol). Slots
-# 37-50 stay the frozen bench set. Nothing never-checked remains
-# beyond slot 50 (the backlog drained exactly into the window:
-# cumulative driver coverage reaches 465/465 once CORRECTNESS_r14
-# lands). The 36 r13-window greens rotate to PRIORITY_LAST; the r12
-# greens previously there fall back to the middle.
-#
-# ROUND-15 WINDOW (optimization round 2/2 — rotation only, no new
-# queries; the registry holds the same 549 names as r14):
-# CORRECTNESS_r14 landed 50/50 green, so per the standing protocol the
-# 36 r14 slot-holders (batches H-N) retire to PRIORITY_LAST and slots
-# 1-36 seat the 36 OLDEST never-driver-checked backlog ops — batches
-# O, P, Q, R, S, T and the first two of U, exactly in their queued
-# registration order (each op carries a full oracle, three hostile-SF
-# local sweep rows, and a pytest twin). The remaining backlog (rest of
-# U + batches V-AC, 48 ops) stays contiguous right after slot 50. The
-# r13 greens previously in PRIORITY_LAST fall back to the middle.
-PRIORITY_FIRST: tuple[str, ...] = (
-    # slots 1-6 — continuation batch O (never driver-checked)
-    "ev_slo_burn_rate",
-    "stats_cochran_armitage_trend",
-    "stats_mcnemar_weekend_purchase",
-    "stats_bh_fdr_weekend",
-    "emb_kmeans_elbow",
-    "sim_lsh_recall_by_corpus_scale",
-    # slots 7-12 — continuation batch P
-    "emb_sq_bits_sweep",
-    "stats_simpson_paradox_probe",
-    "ev_lead_lag_xcorr",
-    "stats_qte_weekend_value",
-    "sim_ann_rank_quality",
-    "dedup_shingle_size_sweep",
-    # slots 13-17 — continuation batch Q
-    "stats_weekend_effect_heterogeneity",
-    "stats_effect_size_weekend",
-    "stats_interrupted_time_series",
-    "text_length_dup_bias",
-    "ev_changepoint_binary_seg",
-    # slots 18-22 — continuation batch R
-    "mm_dedup_net_savings",
-    "graph_adamic_adar",
-    "stats_hash_split_fairness",
-    "orders_cohort_ndr",
-    "ev_type_mix_drift_weekly",
-    # slots 23-28 — continuation batch S
-    "orders_littles_law_audit",
-    "stats_nelson_aalen_interarrival",
-    "text_readability_grid",
-    "emb_triplet_margin_rate",
-    "sketch_ams_f2_error",
-    "corpus_dedup_quality_shift",
-    # slots 29-34 — continuation batch T
-    "orders_abc_migration",
-    "split_covariate_balance",
-    "dedup_simhash_bit_bias",
-    "mm_payload_chi2_uniformity",
-    "stats_friedman_daily_types",
-    "text_js_divergence_sources",
-    # slots 35-36 — continuation batch U (head)
-    "mm_byte_cond_entropy",
-    "text_burrows_delta",
-    # frozen bench set — a driver row EVERY round:
-    "q01_pricing_summary",
-    "ev_tumbling_1h",
-    "json_extract_events",
-    "q02_scan_filter_project",
-    "q03_shipping_priority",
-    "q05_local_supplier_volume",
-    "q10_returned_item",
-    "join_broadcast_dim",
-    "agg_distinct",
-    "window_topk_per_group",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "sim_cosine_topk",
-    "text_quality",
-    # --- beyond slot 50: the never-checked backlog, contiguous
-    # (enforced by test_remaining_backlog_queued_right_after_window) —
-    # batch U continuation (tail; full local evidence + twins):
-    "ev_hurst_variance_plot",
-    "dedup_minhash_perm_sweep",
-    # --- r15 backlog continued: batches V-AC (third window, never
-    # driver-checked; queued contiguously per the r7 plan) ---
-    "text_yules_k",
-    "ev_max_drawdown_daily",
-    "stats_ljung_box_daily",
-    "emb_jl_projection_distortion",
-    "supplier_single_source_exposure",
-    "customer_interpurchase_regularity",
-    "stats_mann_kendall_trend",
-    "stats_dickey_fuller_daily",
-    "mm_payload_ks_uniform",
-    "sim_rank_biased_overlap",
-    "graph_rich_club_coefficient",
-    "emb_coverage_radius_net",
-    "stats_jarque_bera_daily",
-    "emb_fisher_separability",
-    "ev_topk_turnover_weekly",
-    "mm_byte_runs_randomness",
-    "stats_kuiper_hour_uniformity",
-    "orders_tukey_fence_outliers",
-    "orders_revenue_bridge_monthly",
-    "stats_cramer_von_mises_weekend",
-    "stats_mood_median_weekend",
-    "ev_user_day_islands",
-    "orders_abc_xyz_matrix",
-    "text_collocation_pmi",
-    "stats_circular_resultant_hour",
-    "orders_fiscal_445_calendar",
-    "text_unicode_script_mix",
-    "stats_page_trend_test",
-    "ev_session_peak_concurrency",
-    "ev_capacity_shed_whatif",
-    "scalar_csv_roundtrip",
-    "orders_line_count_dispersion",
-    "emb_dim_variance_participation",
-    "stats_dow_hour_independence",
-    "orders_crk_concentration",
-    "ev_hurst_rescaled_range",
-    "stats_rate_ratio_weekend",
-    "sketch_hll_intersection_error",
-    "lineitem_discount_response_curve",
-    "emb_ingestion_drift_halves",
-    "dedup_lsh_bucket_skew",
-    "lineitem_return_rate_drivers",
-    "ev_hill_tail_index",
-    "mm_header_body_entropy",
-    "stats_median_test_nations",
-    "text_lang_script_agreement",
-)
-
-# r14-window greens (batches H-N) — rotate to the tail this round (driver
-# row <=1 round old; still in every committed local sweep). The middle
-# (not listed here or above) holds the r2-r13 greens in registration order.
-PRIORITY_LAST: tuple[str, ...] = (
-    "text_pii_redaction_corpus",
-    "mm_chunk_size_quantiles",
-    "text_bigram_entropy_rate",
-    "join_asof_forward",
-    "ev_tenure_churn_hazard",
-    "emb_cell_purity_by_label",
-    "mm_magic_mismatch_audit",
-    "emb_anisotropy_mean_vector",
-    "text_source_tf_cosine_matrix",
-    "sketch_linear_counting_error",
-    "ev_error_rate_by_load",
-    "stats_theil_index_by_nation",
-    "ev_type_hourly_corr_matrix",
-    "stats_evt_gumbel_daily_max",
-    "mm_chunk_boundary_stability",
-    "corpus_token_budget_by_quality",
-    "corpus_lang_rebalance_plan",
-    "orders_hhi_monthly_trend",
-    "ev_order_event_reconciliation",
-    "ev_attribution_window_sweep",
-    "corpus_dup_quality_crosstab",
-    "ev_zipf_user_activity",
-    "corpus_pack_efficiency_by_window",
-    "mm_payload_periodicity_probe",
-    "stats_weekend_mix_ztest",
-    "emb_intrinsic_dim_twonn",
-    "orders_pvm_decomposition",
-    "stats_jackknife_influence",
-    "stats_power_analysis_mde",
-    "ev_seasonality_strength",
-    "ev_sequence_pattern_match",
-    "mm_prefix_hash_audit",
-    "emb_probe_hubness",
-    "emb_prefix_dim_recall",
-    "dedup_lsh_band_planner",
-    "dedup_method_confusion",
-)
+WINDOW = 50  # the driver records oracle rows for the first 50 queries only
+_ROOT = Path(__file__).resolve().parent.parent
+_ROUND = re.compile(r"_r(\d+)")
 
 
-def _prioritize(specs: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
-    first = [n for n in PRIORITY_FIRST if n in specs]
-    last = [n for n in PRIORITY_LAST if n in specs]
-    middle = [n for n in specs if n not in set(first) | set(last)]
-    return {n: specs[n] for n in first + middle + last}
+def artifact_round(path: str | Path) -> int:
+    """Round number of a ``CORRECTNESS[_LOCAL]_r{N}[_suffix].json`` artifact."""
+    return int(_ROUND.search(Path(path).stem).group(1))
+
+
+def _green(row: dict) -> bool:
+    return bool(
+        row.get("rows_match")
+        and row.get("schema_match")
+        and row.get("hash_match", True)  # rows-only rows carry no hash
+        and row.get("err") is None
+    )
+
+
+def driver_rows(root: Path = _ROOT) -> dict[str, tuple[int, bool]]:
+    """Each query's latest driver row as ``(round, is_green)``."""
+    latest: dict[str, tuple[int, bool]] = {}
+    for f in sorted(root.glob("CORRECTNESS_r[0-9]*.json"), key=artifact_round):
+        rnd = artifact_round(f)
+        for name, row in json.loads(f.read_text()).items():
+            latest[name] = (rnd, _green(row))
+    return latest
+
+
+def prioritize(
+    specs: dict[str, QuerySpec], latest: dict[str, tuple[int, bool]]
+) -> dict[str, QuerySpec]:
+    """Order ``specs`` for the driver's window; see the module docstring."""
+    bench = [n for n, s in specs.items() if s.bench]
+    oracled = [n for n, s in specs.items() if s.oracle is not None and not s.bench]
+    green = {n for n, (_, ok) in latest.items() if ok}
+    fresh = [n for n in oracled if n not in green]
+    stalest = sorted((n for n in oracled if n in green), key=lambda n: latest[n][0])
+    nfresh = WINDOW - len(bench)
+    ordered = (fresh + stalest)[:nfresh] + bench + fresh[nfresh:]
+    placed = set(ordered)
+    rest = [n for n in specs if n not in placed]
+    rest.sort(key=lambda n: latest.get(n, (0,))[0])
+    return {n: specs[n] for n in ordered + rest}
 
 
 def _collect() -> dict[str, QuerySpec]:
@@ -269,7 +116,7 @@ def _collect() -> dict[str, QuerySpec]:
         import sys
 
         print(f"[spark_dba_spark.registry] module errors: {errors}", file=sys.stderr)
-    return _prioritize(specs)
+    return specs
 
 
 _CACHE: dict[str, QuerySpec] | None = None
@@ -278,7 +125,7 @@ _CACHE: dict[str, QuerySpec] | None = None
 def all_specs(refresh: bool = False) -> dict[str, QuerySpec]:
     global _CACHE
     if _CACHE is None or refresh:
-        _CACHE = _collect()
+        _CACHE = prioritize(_collect(), driver_rows())
     return _CACHE
 
 

@@ -47,9 +47,10 @@ def main() -> int:
         )
     lines += [
         "",
-        "Registration order = driver-sweep priority (see registry.py: the "
-        "external driver records correctness rows for the first ~50 "
-        "entries; `CORRECTNESS_LOCAL_r{N}.json` covers all of them).",
+        "Order = driver-sweep priority, derived by `registry.prioritize` "
+        "from the committed `CORRECTNESS_r{N}.json` rows: the external "
+        "driver records correctness rows for the first `registry.WINDOW` "
+        "entries; `CORRECTNESS_LOCAL_r{N}.json` covers all of them.",
     ]
     Path(args.out).write_text("\n".join(lines) + "\n")
     print(f"wrote {args.out} ({len(specs)} queries)")
