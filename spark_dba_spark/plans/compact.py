@@ -21,12 +21,23 @@ Semantics preserved from the reference (SURVEY.md §2.3, citations into
 Plus the reference's "In Progress" feature (README.md:21): dynamic file
 count = ceil(total_bytes / target_file_bytes) when --file-count is omitted.
 
-Spark-first notes: the read→coalesce→write pipeline is declared with the
-DataFrame API (no shuffle: coalesce is a narrow dependency, exactly like the
-reference's RDD coalesce at :290); schema evolution falls out of passing a
-reader schema (missing columns → null, extra columns → dropped) instead of
-Avro reader/writer resolution. At cluster scale the only changes are the
-tmp/trash locations (same filesystem as target for atomic rename) and
+Spark-first notes: an Avro leaf without ``sort_by``/``zorder_by`` is
+compacted in ONE Spark job of fused read+write tasks: the reader packs the
+leaf's files into exactly ``n_out`` byte-balanced bins, and each task copies
+its bin's container blocks into one output file (blocks whose writer schema
+matches the output are appended undecoded; others are decoded with schema
+resolution and re-encoded), so records never pass through JVM rows, a
+cache, or a separate count job — the source record count is the sum of the
+copied blocks' header counts. A second job, the decode-based D4 verify,
+reads the output back; it is also the only record-level check of the
+undecoded blocks, so with ``verify_counts=False`` a source block whose
+header count disagrees with its payload is copied unnoticed. Every other case (other formats, layout options,
+the ``binaryFile`` read fallback) declares read→persist→count→coalesce→
+write with the DataFrame API (no shuffle: coalesce is a narrow dependency,
+exactly like the reference's RDD coalesce at :290). Schema evolution falls
+out of passing a reader schema (missing columns → defaults or null, extra
+columns → dropped). At cluster scale the only changes are the tmp/trash
+locations (same filesystem as target for atomic rename) and
 `max_parallel` (how many partition compactions run concurrently against the
 scheduler).
 """
@@ -41,7 +52,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from ..session import ensure_session_invariants
-from ..sources.fsops import FsOps, unique_session_id
+from ..sources.fsops import FsOps, is_valid_data_file, unique_session_id
 from .logger import AuditLogger
 
 FORMAT_EXTENSIONS = {"parquet": "parquet", "avro": "avro", "orc": "orc"}
@@ -60,6 +71,8 @@ class CompactionParams:
     compression: str = "snappy"
     target_file_bytes: int = 128 * 1024 * 1024
     max_parallel: int = 4
+    # False also skips the only decode of blocks the avro block copy merges
+    # undecoded (see the module notes).
     verify_counts: bool = True
     # Extension beyond the reference: cluster rows inside each output file
     # so columnar min/max stats prune at read time (the compactor is the
@@ -170,8 +183,9 @@ def _process_partition(
     session_id: str,
     rel: str,
 ) -> str:
-    """One leaf folder end-to-end: validate → snapshot → read → coalesce →
-    write staged → snapshot recheck → (trash-swap) commit. Returns status."""
+    """One leaf folder end-to-end: validate → snapshot → write staged
+    (:func:`_write_leaf`) → verify → snapshot recheck → (trash-swap)
+    commit. Returns status."""
     thread = f"partition:{rel or '/'}"
     leaf = params.source.rstrip("/") + rel
     target_part = params.target.rstrip("/") + rel
@@ -180,82 +194,32 @@ def _process_partition(
     if not fs.is_valid_data_directory(leaf, params.ext):
         log.error(f"invalid {params.fmt} directory: {leaf}", thread)
         return "INVALID_DIR"
-    n_files = fs.count_data_files(leaf, params.ext)
+    # C4 snapshot (:276), taken before anything reads the leaf; it is also
+    # the one listing the file count and byte total come from.
+    snapshot = fs.snapshot(leaf)
+    data_files = [
+        s for s in snapshot
+        if not s.is_dir and is_valid_data_file(s.path, params.ext)
+    ]
+    n_files = len(data_files)
     if n_files < 2:
         log.error(f"nothing to merge (<2 files) in {leaf}", thread)
         return "TOO_FEW_FILES"
 
     schema = resolve_schema(spark, fs, params, leaf)
 
-    # C4 snapshot — taken right before the data is consumed (:276)
-    snapshot = fs.snapshot(leaf)
-
     # D3/"In Progress" dynamic sizing: ceil(bytes / target file size)
-    total_bytes = fs.data_size(leaf, params.ext)
+    total_bytes = sum(s.length for s in data_files)
     n_out = planned_file_count(params, total_bytes)
 
-    if params.fmt == "avro":
-        from ..sources.avro_spark import read_avro_folder
-
-        # At least n_out read partitions, so coalesce(n_out) below still
-        # writes n_out files (coalesce can only merge partitions).
-        df = read_avro_folder(
-            spark, leaf, reader_schema=schema, recursive=False,
-            min_partitions=n_out,
-        )
+    # C3 staged write (:183-204): tmp when overwriting, else direct target.
+    # The direct path is NOT atomic (same as the reference); a failed write
+    # or verify below deletes the partial target so no stale output
+    # survives either mode.
+    if params.overwrite:
+        staged = params.tmp_folder.rstrip("/") + f"/_tmp_{session_id}" + rel
     else:
-        reader = spark.read.format(params.fmt)
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.load(leaf)
-    # D2 (:272): pin the scan so count + write share one pass over the
-    # source — at scale an uncached frame doubles input I/O per partition.
-    df = df.persist()
-
-    try:
-        in_count = df.count()  # D4 (:292-293)
-        log.info(
-            f"{leaf}: {n_files} files / {total_bytes} bytes / {in_count} records "
-            f"→ {n_out} files",
-            thread,
-        )
-
-        # C3 staged write (:183-204): tmp when overwriting, else direct
-        # target. The direct path is NOT atomic (same as the reference); a
-        # verify/recheck failure below deletes the partial target so no
-        # stale output survives either mode.
-        if params.overwrite:
-            staged = (
-                params.tmp_folder.rstrip("/") + f"/_tmp_{session_id}" + rel
-            )
-        else:
-            staged = target_part
-        out_df = df.coalesce(n_out)
-        if params.sort_by:
-            out_df = out_df.sortWithinPartitions(*params.sort_by)
-        elif params.zorder_by:
-            from ..functions.layout import zorder_sort_within_partitions
-
-            out_df = zorder_sort_within_partitions(
-                out_df, list(params.zorder_by)
-            )
-        if params.fmt == "avro":
-            # Own-codec avro sink: pyarrow.fs scheme dispatch (local/hdfs/
-            # s3/registered) with a task-attempt commit protocol — no
-            # spark-avro jar needed.
-            from ..sources.avro_spark import write_avro_folder
-
-            write_avro_folder(
-                out_df, staged, schema=schema, codec=params.compression
-            )
-        else:
-            (
-                out_df.write.format(params.fmt)
-                .option("compression", params.compression)
-                .save(staged)
-            )
-    finally:
-        df.unpersist()
+        staged = target_part
 
     def _discard_staged(reason: str) -> None:
         # Leave no partial/stale output behind: in overwrite mode the staged
@@ -265,22 +229,32 @@ def _process_partition(
             fs.delete(staged, recursive=True)
             log.info(f"rolled back direct-written target {staged} ({reason})", thread)
 
-    if params.verify_counts:
-        if params.fmt == "avro":
-            from ..sources.avro_spark import read_avro_folder
+    try:
+        in_count = _write_leaf(spark, params, leaf, staged, schema, n_out)
+        log.info(
+            f"{leaf}: {n_files} files / {total_bytes} bytes / {in_count} records "
+            f"→ {n_out} files",
+            thread,
+        )
+        if params.verify_counts:
+            if params.fmt == "avro":
+                from ..sources.avro_spark import read_avro_folder
 
-            out_count = read_avro_folder(
-                spark, staged, reader_schema=schema, recursive=False
-            ).count()
-        else:
-            out_count = spark.read.format(params.fmt).load(staged).count()
-        if out_count != in_count:
-            log.error(
-                f"record count mismatch {in_count} → {out_count} in {staged}",
-                thread,
-            )
-            _discard_staged("count mismatch")
-            return "COUNT_MISMATCH"
+                out_count = read_avro_folder(
+                    spark, staged, reader_schema=schema, recursive=False
+                ).count()
+            else:
+                out_count = spark.read.format(params.fmt).load(staged).count()
+            if out_count != in_count:
+                log.error(
+                    f"record count mismatch {in_count} → {out_count} in {staged}",
+                    thread,
+                )
+                _discard_staged("count mismatch")
+                return "COUNT_MISMATCH"
+    except Exception:
+        _discard_staged("write or verify raised")
+        raise
 
     # C4 recheck (:301): abort commit if the source changed under us
     if not FsOps.equals_snapshot(snapshot, fs.snapshot(leaf)):
@@ -312,6 +286,77 @@ def _process_partition(
 
     log.info(f"compacted {leaf} → {target_part} ({n_out} files)", thread)
     return "SUCCESS"
+
+
+def _write_leaf(
+    spark: SparkSession, params: CompactionParams, leaf: str, staged: str,
+    schema, n_out: int,
+) -> int:
+    """Write ``leaf`` compacted into ``n_out`` files under ``staged`` and
+    return the source's record count (D4).
+
+    Avro without a layout option is one job: the read's ``n_out`` bins are
+    copied block by block, each into one output file, and the count comes
+    from the copied blocks' headers. Everything else (other formats,
+    ``sort_by``/``zorder_by``, the ``binaryFile`` read fallback) takes the
+    record path: read, pin and count, coalesce, write."""
+    if params.fmt == "avro":
+        from ..sources.avro_spark import (
+            has_block_scan,
+            read_avro_folder,
+            write_avro_folder,
+        )
+
+        df = read_avro_folder(
+            spark, leaf, reader_schema=schema, recursive=False,
+            partitions=n_out,
+        )
+        if has_block_scan(df) and not (params.sort_by or params.zorder_by):
+            # the output schema is the scan's reader schema, so the sink
+            # takes its block-copy path
+            stats: dict = {}
+            write_avro_folder(
+                df, staged, schema=schema, codec=params.compression,
+                stats=stats,
+            )
+            return stats["records"]
+    else:
+        reader = spark.read.format(params.fmt)
+        if schema is not None:
+            reader = reader.schema(schema)
+        df = reader.load(leaf)
+    # D2 (:272): pin the scan so count + write share one pass over the
+    # source — at scale an uncached frame doubles input I/O per partition.
+    df = df.persist()
+    try:
+        in_count = df.count()  # D4 (:292-293)
+        # coalesce is a narrow dependency, like the reference's RDD
+        # coalesce at :290 — no shuffle.
+        out_df = df.coalesce(n_out)
+        if params.sort_by:
+            out_df = out_df.sortWithinPartitions(*params.sort_by)
+        elif params.zorder_by:
+            from ..functions.layout import zorder_sort_within_partitions
+
+            out_df = zorder_sort_within_partitions(
+                out_df, list(params.zorder_by)
+            )
+        if params.fmt == "avro":
+            # Own-codec avro sink: pyarrow.fs scheme dispatch (local/hdfs/
+            # s3/registered) with a task-attempt commit protocol — no
+            # spark-avro jar needed.
+            write_avro_folder(
+                out_df, staged, schema=schema, codec=params.compression
+            )
+        else:
+            (
+                out_df.write.format(params.fmt)
+                .option("compression", params.compression)
+                .save(staged)
+            )
+    finally:
+        df.unpersist()
+    return in_count
 
 
 def _mkparent(fs: FsOps, p: str) -> None:

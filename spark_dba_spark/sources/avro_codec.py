@@ -91,6 +91,48 @@ def schema_name(schema: Any) -> str | None:
     return None
 
 
+_COMPLEX = {"record", "error", "enum", "fixed", "array", "map"}
+
+
+def parsing_canonical_form(schema: Any) -> str:
+    """The Avro spec's Parsing Canonical Form: two schemas with the same
+    form encode every datum to the same bytes. Names become full names;
+    only name, type, fields, symbols, items, values and size are kept, in
+    that order, so docs, aliases, defaults and logical types drop out."""
+
+    def canon(s: Any, ns: str | None) -> Any:
+        if isinstance(s, list):
+            return [canon(b, ns) for b in s]
+        if isinstance(s, str):  # primitive or a named-type reference
+            return s if s in PRIMITIVES or "." in s or not ns else f"{ns}.{s}"
+        t = s["type"]
+        if isinstance(t, (dict, list)) or t not in _COMPLEX:
+            return canon(t, ns)
+        out: dict[str, Any] = {}
+        if t not in ("array", "map"):
+            name = s["name"]
+            space = s.get("namespace", ns)
+            if "." not in name and space:
+                name = f"{space}.{name}"
+            ns = name.rpartition(".")[0] or None
+            out["name"] = name
+        out["type"] = "record" if t == "error" else t
+        if "fields" in s:
+            out["fields"] = [
+                {"name": fd["name"], "type": canon(fd["type"], ns)}
+                for fd in s["fields"]
+            ]
+        for k in ("symbols", "items", "values", "size"):
+            if k in s:
+                out[k] = canon(s[k], ns) if k in ("items", "values") else s[k]
+        return out
+
+    return json.dumps(
+        canon(parse_schema(schema), None), separators=(",", ":"),
+        ensure_ascii=False,
+    )
+
+
 # --------------------------------------------------------------------------
 # Binary encoding primitives (Avro spec: zigzag varints, little-endian IEEE)
 # --------------------------------------------------------------------------
@@ -555,23 +597,56 @@ def read_header(data: bytes) -> tuple[dict, str, bytes, int]:
     return schema, codec, sync, r.pos
 
 
+def iter_blocks(f, sync: bytes, pos: int, end: int) -> Iterator[tuple[int, bytes]]:
+    """Walk the container blocks of the seekable binary file ``f`` that
+    start in ``[pos, end)``; ``pos`` must be a block boundary. Yields
+    ``(record count, compressed payload)`` per block, after checking the
+    sync marker that ends it. The one block walker: whole-container
+    decodes, byte-range splits and block copies all read through it."""
+    while pos < end:
+        f.seek(pos)
+        r = _Reader(f.read(20))  # two varints: record count, payload size
+        count = r.read_long()
+        size = r.read_long()
+        if count < 0 or size < 0:
+            raise ValueError(f"corrupt block header @ {pos}")
+        f.seek(pos + r.pos)
+        payload = f.read(size)
+        if len(payload) != size:
+            raise EOFError(f"truncated block @ {pos}")
+        if f.read(16) != sync:
+            raise ValueError(f"sync marker mismatch @ {pos} — corrupt container")
+        yield count, payload
+        pos += r.pos + size + 16
+
+
+def decode_block(
+    raw: bytes, count: int, writer_schema: Any, reader_schema: Any = None
+) -> Iterator[Any]:
+    """The ``count`` records of a decompressed block payload, resolved
+    against ``reader_schema``. Raises once they are read if bytes are left
+    over: the header's count is smaller than what the payload holds (a
+    count that is too large runs off the end and raises ``EOFError``)."""
+    br = _Reader(raw)
+    for _ in range(count):
+        yield decode_datum(br, writer_schema, reader_schema)
+    if not br.at_end():
+        raise ValueError(
+            f"{len(raw) - br.pos} bytes left in a block after its "
+            f"{count} records — corrupt block"
+        )
+
+
 def read_container(data: bytes, reader_schema: Any = None) -> Iterator[dict]:
     """Decode every record in an Avro container byte string, resolving each
     file's embedded writer schema against `reader_schema` (schema evolution,
     §1.3 of SURVEY.md) when given."""
     writer_schema, codec, sync, pos = read_header(data)
     rs = parse_schema(reader_schema) if reader_schema is not None else None
-    r = _Reader(data)
-    r.pos = pos
-    while not r.at_end():
-        n_records = r.read_long()
-        block_len = r.read_long()
-        block = _decompress(codec, r.read(block_len))
-        if r.read(16) != sync:
-            raise ValueError("sync marker mismatch — corrupt container")
-        br = _Reader(block)
-        for _ in range(n_records):
-            yield decode_datum(br, writer_schema, rs)
+    for count, payload in iter_blocks(io.BytesIO(data), sync, pos, len(data)):
+        yield from decode_block(
+            _decompress(codec, payload), count, writer_schema, rs
+        )
 
 
 def schema_of_file(path: str) -> dict:
@@ -634,6 +709,18 @@ class ContainerWriter:
             self._buf.truncate(mark)
             raise
         self._count += 1
+        if (
+            self._count >= self.block_records
+            or self._buf.tell() >= self.block_bytes
+        ):
+            self.flush_block()
+
+    def append_encoded(self, raw: bytes, count: int) -> None:
+        """Append ``count`` records already encoded with this writer's
+        schema (a decompressed block payload). Small blocks merge into
+        one, flushed at the same record and byte bounds as :meth:`append`."""
+        self._buf.write(raw)
+        self._count += count
         if (
             self._count >= self.block_records
             or self._buf.tell() >= self.block_bytes

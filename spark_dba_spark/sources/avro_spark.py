@@ -22,7 +22,12 @@ connector (absent from this classpath, no network to fetch it):
   per file.
 - **write**: one container file per partition via ``mapInPandas`` with a
   streaming block writer; ``df.coalesce(n)`` upstream controls file count
-  exactly like the reference's D3. Tasks write to an attempt-unique hidden
+  exactly like the reference's D3. A frame the reader returned untouched
+  is written by **block copy** instead: one task per read bin walks the
+  bin's source blocks and appends them to one output file without
+  decoding the records of any file whose writer schema already has the
+  output's canonical form, the Avro analogue of
+  ``DataFileWriter.appendAllFrom``. Tasks write to an attempt-unique hidden
   temp name and commit by rename (atomic on local/HDFS; copy+delete on
   object stores, where duplicate attempts stay safe because both commit
   identical bytes to the same final name), so speculative/zombie duplicate
@@ -40,9 +45,11 @@ pickled into the task closures, so executors need no scheme registry.
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import math
 import os
 import uuid
+from dataclasses import dataclass
 from typing import Any, Iterator
 
 import pandas as pd
@@ -546,7 +553,7 @@ def _plan_bins(
     split_bytes: int,
     open_cost: int,
     parallelism: int,
-    min_partitions: int = 1,
+    partitions: int | None = None,
 ) -> list[list[tuple[str, int, int]]]:
     """Cut ``files`` (pyarrow FileInfos) into byte-range splits and pack the
     splits into byte-balanced bins, one decode task per bin.
@@ -558,8 +565,9 @@ def _plan_bins(
     the Python task a bin becomes, so tiny files share bins. Files larger
     than the split size are cut into equal ranges (snapped to sync markers
     at decode time). The splits then go largest first into the least-loaded
-    of ``k = clamp(ceil(total / split size), min_partitions, n_splits)``
-    bins. Each bin lists its splits in (path, start) order."""
+    of ``k`` bins: ``k = min(partitions, n_splits)`` when ``partitions`` is
+    given, else ``min(ceil(total / split size), n_splits)``. Each bin lists
+    its splits in (path, start) order."""
     import heapq
 
     total = sum(int(i.size) for i in files)
@@ -577,7 +585,7 @@ def _plan_bins(
                 splits.append((info.path, lo, hi))
     if not splits:
         return []
-    k = min(max(math.ceil(total / max_split), min_partitions, 1), len(splits))
+    k = min(partitions or max(1, math.ceil(total / max_split)), len(splits))
     heap = [(0, b) for b in range(k)]
     bins: list[list[tuple[str, int, int]]] = [[] for _ in range(k)]
     for sp in sorted(splits, key=lambda s: (s[1] - s[2], s[0], s[1])):
@@ -593,7 +601,7 @@ def read_avro_folder(
     reader_schema: str | dict | None = None,
     recursive: bool = True,
     split_bytes: int = DEFAULT_SPLIT_BYTES,
-    min_partitions: int = 1,
+    partitions: int | None = None,
 ) -> DataFrame:
     """Folder of ``.avro`` container files → DataFrame.
 
@@ -609,9 +617,10 @@ def read_avro_folder(
     scan sizing rule ``min(split_bytes, max(spark.sql.files.
     openCostInBytes, ceil(total_bytes / parallelism)))`` where parallelism
     is ``spark.sql.leafNodeDefaultParallelism`` (default: the context's
-    ``defaultParallelism``). The bin count is at least ``min_partitions``
-    and at most the number of splits. The bins travel to the executors as
-    one row each of a JVM ``LocalRelation`` (built from an Arrow table):
+    ``defaultParallelism``). An integer ``partitions`` asks for exactly
+    that many bins instead, capped at the number of splits. The bins
+    travel to the executors as one row each of a JVM ``LocalRelation``
+    (built from an Arrow table):
     no Python stage and no shuffle, unless there are more bins than the
     relation has partitions, when a round-robin repartition spreads them.
     The decode is then one Python task per bin. The reason is the fixed
@@ -628,11 +637,18 @@ def read_avro_folder(
     ``DefragmentAvroFolder.scala:267-272``). Task memory is bounded by one
     block, never one file.
 
+    The returned frame carries its scan plan (filesystem, bins, reader
+    schema) for :func:`write_avro_folder`, which copies the source blocks
+    bin by bin instead of decoding them when the frame is written back
+    untransformed (see there). Any transformation returns a new frame
+    without the plan. Frames with hive partition columns carry none.
+
     Filesystems pyarrow can't reach (e.g. a Hadoop-only scheme like
     ``wasbs://``, or ``hdfs://`` without libhdfs on the workers) fall back
     to a Spark ``binaryFile`` scan — whole-file-per-task (no block
-    splits, ``min_partitions`` not applied), but working on ANY Hadoop
-    filesystem, which was the behavior before block-split reads existed.
+    splits, ``partitions`` not applied, no scan plan), but working on ANY
+    Hadoop filesystem, which was the behavior before block-split reads
+    existed.
     """
     try:
         fs, root = resolve_fs(path)
@@ -666,7 +682,7 @@ def read_avro_folder(
     open_cost = _parse_bytes(
         spark.conf.get("spark.sql.files.openCostInBytes", "4194304"), 4 << 20
     )
-    bins = _plan_bins(files, split_bytes, open_cost, parallelism, min_partitions)
+    bins = _plan_bins(files, split_bytes, open_cost, parallelism, partitions)
     if not bins:
         # With an explicit reader schema an empty/just-swept folder is a
         # valid empty relation; only schema probing has nothing to work on.
@@ -683,6 +699,7 @@ def read_avro_folder(
     bins_df = spark.createDataFrame(
         pa.table(
             {
+                "b": list(range(len(bins))),
                 "path": [[p for p, _, _ in b] for b in bins],
                 "start": [[lo for _, lo, _ in b] for b in bins],
                 "end": [[hi for _, _, hi in b] for b in bins],
@@ -695,8 +712,8 @@ def read_avro_folder(
                 ],
             }
         ),
-        schema="path array<string>, start array<long>, end array<long>, "
-        "pv array<string>",
+        schema="b long, path array<string>, start array<long>, "
+        "end array<long>, pv array<string>",
     )
     # A LocalRelation of n rows scans as min(n, parallelism) partitions,
     # one row each when n fits.
@@ -719,7 +736,28 @@ def read_avro_folder(
                                 out[c] = v
                         yield out
 
-    return bins_df.mapInPandas(decode, spark_schema)
+    df = bins_df.mapInPandas(decode, spark_schema)
+    if not part_cols:
+        df._avro_scan = _BlockScan(fs, bins_df, bins, rs)
+    return df
+
+
+@dataclass(frozen=True)
+class _BlockScan:
+    """What :func:`read_avro_folder` planned: the source filesystem, the
+    bins as a ``LocalRelation`` (one row per bin) and as Python lists, and
+    the reader schema."""
+
+    fs: Any
+    bins_df: DataFrame
+    bins: list[list[tuple[str, int, int]]]
+    reader_schema: Any
+
+
+def has_block_scan(df: DataFrame) -> bool:
+    """True when ``df`` is an untransformed :func:`read_avro_folder` frame
+    that :func:`write_avro_folder` can write by copying blocks."""
+    return getattr(df, "_avro_scan", None) is not None
 
 
 def _read_avro_binaryfile(
@@ -746,17 +784,28 @@ def _read_avro_binaryfile(
         .select("content")
     )
 
-    conv = _decoded_converter(rs)
+    return bin_df.mapInPandas(
+        functools.partial(
+            _decode_blobs, reader_schema=rs, conv=_decoded_converter(rs),
+            col_order=col_order,
+        ),
+        spark_schema,
+    )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["content"]:
-                recs = list(ac.read_container(bytes(blob), reader_schema=rs))
-                if conv is not None:
-                    recs = [conv(r) for r in recs]
-                yield pd.DataFrame.from_records(recs, columns=col_order)
 
-    return bin_df.mapInPandas(decode, spark_schema)
+def _decode_blobs(
+    batches: Iterator[pd.DataFrame], *, reader_schema: Any, conv,
+    col_order: list[str],
+) -> Iterator[pd.DataFrame]:
+    """Whole-container decode of a ``binaryFile`` ``content`` column: one
+    pandas frame per file."""
+    for pdf in batches:
+        for blob in pdf["content"]:
+            recs = ac.read_container(bytes(blob), reader_schema=reader_schema)
+            yield pd.DataFrame.from_records(
+                list(recs if conv is None else map(conv, recs)),
+                columns=col_order,
+            )
 
 
 def _latest_file_schema_hadoop(
@@ -825,15 +874,16 @@ def _read_header_with_retry(f, flen: int):
             size = min(size * 16, _HEADER_MAX_BYTES)
 
 
-def _decode_split(
-    fs, fpath: str, start: int, end: int, reader_schema: Any,
-    col_order: list[str], conv=None,
-) -> Iterator[pd.DataFrame]:
-    """Decode the container blocks whose start offset lies in [start, end).
+def _split_blocks(
+    fs, fpath: str, start: int, end: int
+) -> Iterator[tuple[Any, str, int, bytes]]:
+    """``(writer_schema, codec, record count, compressed payload)`` for each
+    container block whose start offset lies in [start, end); every sync
+    marker is checked.
 
     Block-boundary ownership: a block "starts" right after a sync marker
     (the header itself ends with the sync, so the first body block is a
-    boundary too). The split owning offset p decodes the block starting at
+    boundary too). The split owning offset p walks the block starting at
     p; scanning begins at ``start-16`` so a sync ending exactly at
     ``start`` is found by this split and not the previous one. A split
     whose range covers the header's end owns the first body block
@@ -844,8 +894,8 @@ def _decode_split(
         flen = f.size()
         writer_schema, codec, sync, body_pos = _read_header_with_retry(f, flen)
         if start <= body_pos:
-            # ``pos < end`` in the decode loop rejects it when the range
-            # ends before the body starts (that block belongs to the split
+            # the walk's ``pos < end`` rejects it when the range ends
+            # before the body starts (that block belongs to the split
             # containing body_pos).
             pos = body_pos
         else:
@@ -869,40 +919,33 @@ def _decode_split(
                     window = window[-15:]
             if pos < 0 or pos >= end:
                 return  # no block starts inside this range
+        try:
+            for count, payload in ac.iter_blocks(f, sync, pos, min(end, flen)):
+                yield writer_schema, codec, count, payload
+        except (ValueError, EOFError) as exc:
+            raise ValueError(f"{fpath}: {exc}") from exc
 
-        rows: list[dict] = []
-        while pos < min(end, flen):
-            f.seek(pos)
-            # two varints (<=20 bytes) then the block payload
-            hdr = f.read(32)
-            if not hdr:
-                break
-            r = ac._Reader(hdr)
-            n_records = r.read_long()
-            block_len = r.read_long()
-            data_at = pos + r.pos
-            f.seek(data_at)
-            payload = f.read(block_len)
-            if f.read(16) != sync:
-                raise ValueError(f"sync marker mismatch in {fpath} @ {pos}")
-            block = ac._decompress(codec, payload)
-            br = ac._Reader(block)
-            if conv is None:
-                for _ in range(n_records):
-                    rows.append(
-                        ac.decode_datum(br, writer_schema, reader_schema)
-                    )
-            else:
-                for _ in range(n_records):
-                    rows.append(
-                        conv(ac.decode_datum(br, writer_schema, reader_schema))
-                    )
-            pos = data_at + block_len + 16
-            if len(rows) >= _DECODE_CHUNK_ROWS:
-                yield pd.DataFrame.from_records(rows, columns=col_order)
-                rows = []
-        if rows:
+
+def _decode_split(
+    fs, fpath: str, start: int, end: int, reader_schema: Any,
+    col_order: list[str], conv=None,
+) -> Iterator[pd.DataFrame]:
+    """Decode the records of the blocks :func:`_split_blocks` walks for
+    [start, end), resolved against ``reader_schema``, as pandas chunks."""
+    rows: list[dict] = []
+    for writer_schema, codec, count, payload in _split_blocks(
+        fs, fpath, start, end
+    ):
+        decoded = ac.decode_block(
+            ac._decompress(codec, payload), count, writer_schema,
+            reader_schema,
+        )
+        rows.extend(decoded if conv is None else map(conv, decoded))
+        if len(rows) >= _DECODE_CHUNK_ROWS:
             yield pd.DataFrame.from_records(rows, columns=col_order)
+            rows = []
+    if rows:
+        yield pd.DataFrame.from_records(rows, columns=col_order)
 
 
 def latest_file_schema(
@@ -1012,15 +1055,13 @@ def read_avro_stream(
     except ValueError:
         # No pyarrow driver for this scheme — whole-file decode through
         # the JVM-read content column (any Hadoop FS, no intra-file splits).
-        def decode_whole(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for blob in pdf["content"]:
-                    recs = list(ac.read_container(bytes(blob), reader_schema=rs))
-                    if u_conv is not None:
-                        recs = [u_conv(r) for r in recs]
-                    yield pd.DataFrame.from_records(recs, columns=col_order)
-
-        return stream.select("content").mapInPandas(decode_whole, spark_schema)
+        return stream.select("content").mapInPandas(
+            functools.partial(
+                _decode_blobs, reader_schema=rs, conv=u_conv,
+                col_order=col_order,
+            ),
+            spark_schema,
+        )
 
     sb = max(1, split_bytes)
     base_uri = path
@@ -1069,10 +1110,29 @@ def write_avro_folder(
     mode: str = "append",
     block_bytes: int | None = None,
     partition_by: list[str] | None = None,
+    stats: dict | None = None,
 ) -> int:
     """Write ``df`` as one Avro container file per partition under ``path``.
     Returns the number of files written. File count is controlled upstream
     (``df.coalesce(n)``), exactly like the reference's D3+D5 pipeline.
+    ``stats``, when given, receives ``records``: the number written.
+
+    Block copy: when ``df`` is a frame :func:`read_avro_folder` returned
+    untransformed (:func:`has_block_scan`) and the output schema has the
+    parsing canonical form of its reader schema, the sink skips the
+    DataFrame and runs one ``mapInPandas`` over the read's bins
+    (:func:`_copy_bins`): one output file per bin, one task reading and
+    writing it. A source file whose writer schema has the output's
+    canonical form (so the same binary encoding) has its blocks
+    decompressed — which checks a snappy block's CRC — and appended to
+    the output's block buffer undecoded, small blocks merging up to
+    ``block_records``/``block_bytes``. Other files decode with schema
+    resolution and re-encode, that file only. The driver then raises
+    unless every planned split was walked exactly once; ``records`` is
+    the sum of the source block headers' record counts. Undecoded blocks
+    are trusted: a source block whose header count disagrees with its
+    payload (the null and deflate codecs carry no checksum) is merged as
+    is, and only a decode of the output finds it.
 
     ``mode``: 'append' (default — new uniquely-named files next to any
     existing), 'error' (fail if the folder already has .avro files),
@@ -1111,6 +1171,12 @@ def write_avro_folder(
         else struct_to_avro_record(df.schema)
     )
     spark_schema = df.schema
+    scan = getattr(df, "_avro_scan", None)
+    if scan is not None and (
+        ac.parsing_canonical_form(avro_schema)
+        != ac.parsing_canonical_form(scan.reader_schema)
+    ):
+        scan = None  # another encoding than the one read: record path
     existing = _list_avro_files(fs, root, recursive=False)
     if existing and mode in ("error", "errorifexists"):
         raise FileExistsError(f"{path} already contains .avro files")
@@ -1160,8 +1226,19 @@ def write_avro_folder(
         else:
             yield pd.DataFrame({"file": [], "n": []})
 
+    if scan is None:
+        job = df.mapInPandas(write_partition, out_schema)
+    else:
+        job = scan.bins_df.mapInPandas(
+            functools.partial(
+                _copy_bins, src_fs=scan.fs, out_fs=fs, root=root,
+                run_token=run_token, schema=avro_schema, codec=codec,
+                block_records=block_records, block_bytes=block_bytes,
+            ),
+            "file string, n long, path array<string>, start array<long>",
+        )
     try:
-        summary = df.mapInPandas(write_partition, out_schema).collect()
+        summary = job.collect()
     finally:
         # Driver-side sweep — in a finally so ABORTED runs also clean up:
         # failed/zombie attempts from THIS run leave hidden
@@ -1173,7 +1250,112 @@ def write_avro_folder(
                 f"_tmp-{run_token}-"
             ):
                 fs.delete_file(info.path)
+    if scan is not None:
+        walked = sorted(
+            (p, s) for r in summary for p, s in zip(r["path"], r["start"])
+        )
+        if walked != sorted((p, lo) for b in scan.bins for p, lo, _ in b):
+            raise RuntimeError(
+                f"block copy into {path} walked {len(walked)} splits, not "
+                f"each of the {sum(map(len, scan.bins))} planned exactly once"
+            )
+    if stats is not None:
+        stats["records"] = sum(r["n"] for r in summary)
     return sum(1 for r in summary if r["file"])
+
+
+def _copy_bins(
+    batches: Iterator[pd.DataFrame], *, src_fs, out_fs, root: str,
+    run_token: str, schema: Any, codec: str, block_records: int,
+    block_bytes: int | None,
+) -> Iterator[pd.DataFrame]:
+    """``mapInPandas`` body of the block-copy write (see
+    :func:`write_avro_folder`): each bin row of :func:`read_avro_folder`'s
+    plan becomes one container ``part-<bin>-<run>.avro`` under ``root``,
+    committed by the same attempt-unique temp + rename as the record path.
+    Yields one row per bin: the file (None when its splits held no
+    record), the records it took from block headers, and the splits
+    walked."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    attempt = ctx.taskAttemptId() if ctx is not None else os.getpid()
+    for pdf in batches:
+        for b, paths, starts, ends in zip(
+            pdf["b"], pdf["path"], pdf["start"], pdf["end"]
+        ):
+            splits = [
+                (str(p), int(lo), int(hi))
+                for p, lo, hi in zip(paths, starts, ends)
+            ]
+            final = f"{root}/part-{b:05d}-{run_token}.avro"
+            tmp = f"{root}/_tmp-{run_token}-a{attempt}-part-{b:05d}.avro"
+            n = _write_blocks(
+                (blk for sp in splits for blk in _split_blocks(src_fs, *sp)),
+                out_fs, tmp, schema, codec, block_records, block_bytes,
+            )
+            if n:
+                # rename-commit; object-store caveat as in write_avro_folder
+                out_fs.move(tmp, final)
+            yield pd.DataFrame({
+                "file": [final if n else None],
+                "n": [n],
+                "path": [[p for p, _, _ in splits]],
+                "start": [[lo for _, lo, _ in splits]],
+            })
+
+
+def _write_blocks(
+    blocks, out_fs, tmp: str, schema: Any, codec: str, block_records: int,
+    block_bytes: int | None,
+) -> int:
+    """Write source ``blocks`` (as :func:`_split_blocks` yields them) into
+    a new container at ``tmp``; returns the records written. Opens no file
+    until the first block."""
+    out_form = ac.parsing_canonical_form(schema)
+    reencode = None
+    last_ws, same = None, False
+    n = 0
+    stream = writer = None
+    try:
+        for ws, src_codec, count, payload in blocks:
+            raw = ac._decompress(src_codec, payload)  # checks a snappy CRC
+            if not count:
+                # nothing to write; decode_block still rejects a payload
+                # that holds bytes its zero count does not account for
+                next(ac.decode_block(raw, 0, ws, schema), None)
+                continue
+            if writer is None:
+                stream = out_fs.open_output_stream(tmp)
+                writer = ac.ContainerWriter(
+                    stream, schema, codec=codec, block_records=block_records,
+                    block_bytes=block_bytes,
+                )
+            if ws is not last_ws:  # a new source file
+                last_ws, same = ws, ac.parsing_canonical_form(ws) == out_form
+            n += count
+            if same:
+                writer.append_encoded(raw, count)
+            else:
+                reencode = reencode or _reencoder(schema)
+                for rec in ac.decode_block(raw, count, ws, schema):
+                    writer.append(reencode(rec))
+        if writer is not None:
+            writer.close()
+    finally:
+        if stream is not None:
+            stream.close()
+    return n
+
+
+def _reencoder(schema: Any):
+    """Codec-decoded record → the value the DataFrame round trip of the
+    record path would encode: multi-branch unions keep the branch their
+    value's class selects (see :func:`_decoded_converter`)."""
+    dec, enc = _decoded_converter(schema), _encode_converter(schema)
+    if dec is None:  # no multi-branch union anywhere: both are identity
+        return lambda rec: rec
+    return lambda rec: enc(dec(rec))
 
 
 def _write_avro_partitioned(

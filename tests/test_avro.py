@@ -736,7 +736,7 @@ def test_tiny_files_pack_into_few_partitions(spark, tmp_path):
     assert df.count() == n
 
     df3 = read_avro_folder(
-        spark, str(tmp_path / "t"), reader_schema=SCHEMA, min_partitions=3
+        spark, str(tmp_path / "t"), reader_schema=SCHEMA, partitions=3
     )
     assert df3.rdd.getNumPartitions() == 3
     ids = [r["id"] for r in df3.collect()]
@@ -745,25 +745,98 @@ def test_tiny_files_pack_into_few_partitions(spark, tmp_path):
 
 def test_plan_bins_balances_bytes():
     """Largest-first into the least-loaded bin; every split lands once;
-    the bin count obeys the min_partitions floor and the n_splits cap."""
+    an explicit bin count holds, capped at the number of splits."""
     import types
 
     files = [
         types.SimpleNamespace(path=f"/d/f{i}", size=s)
         for i, s in enumerate([900, 500, 400, 300, 200, 100, 100])
     ]
-    bins = asp._plan_bins(files, 1 << 20, 1000, 4, min_partitions=3)
+    bins = asp._plan_bins(files, 1 << 20, 1000, 4, partitions=3)
     assert len(bins) == 3
     assert sorted(sp for b in bins for sp in b) == sorted(
         (f.path, 0, f.size) for f in files
     )
     loads = sorted(sum(hi - lo for _, lo, hi in b) for b in bins)
     assert loads == [800, 800, 900]
-    assert len(asp._plan_bins(files, 1 << 20, 1000, 4, min_partitions=50)) == 7
+    assert len(asp._plan_bins(files, 1 << 20, 1000, 4, partitions=50)) == 7
     # one file larger than the split size is cut into ranges
     big = [types.SimpleNamespace(path="/d/big", size=10_000)]
     bins = asp._plan_bins(big, 3000, 1000, 4)
     assert [b[0][1:] for b in bins] == [(0, 2500), (2500, 5000), (5000, 7500), (7500, 10000)]
+
+
+def test_block_count_must_match_payload():
+    """A block header count one below what the payload holds raises
+    instead of silently dropping the last record; one above runs off the
+    block's end."""
+    recs = [{"id": i} for i in range(3)]
+    schema = {"type": "record", "name": "R", "fields": [{"name": "id", "type": "long"}]}
+    data = bytearray(ac.write_container(recs, schema))
+    body = ac.read_header(bytes(data))[3]
+    assert data[body] == 6  # zigzag varint of the count 3
+    data[body] = 4
+    with pytest.raises(ValueError, match="left in a block"):
+        list(ac.read_container(bytes(data)))
+    data[body] = 8
+    with pytest.raises(EOFError):
+        list(ac.read_container(bytes(data)))
+    # the block copy skips a zero-count block, but not one holding bytes
+    raw = ac._decompress("null", bytes(data[body + 2:-16]))
+    with pytest.raises(ValueError, match="left in a block"):
+        asp._write_blocks(
+            iter([(schema, "null", 0, raw)]), None, "unused", schema, "null",
+            10, None,
+        )
+
+
+def test_parsing_canonical_form():
+    """Docs, defaults, aliases and logical types drop out; names become
+    full names; field order, names and types still count."""
+    a = {
+        "type": "record", "name": "Rec", "namespace": "x", "doc": "d",
+        "fields": [
+            {"name": "id", "type": {"type": "long", "logicalType": "timestamp-micros"},
+             "default": 0, "aliases": ["key"]},
+            {"name": "e", "type": ["null", {"type": "enum", "name": "E", "symbols": ["A"]}]},
+            {"name": "m", "type": {"type": "map", "values": "E"}},
+        ],
+    }
+    b = {
+        "type": "record", "name": "x.Rec",
+        "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "e", "type": ["null", {"type": "enum", "name": "x.E", "symbols": ["A"]}]},
+            {"name": "m", "type": {"type": "map", "values": "x.E"}},
+        ],
+    }
+    pcf = ac.parsing_canonical_form
+    assert pcf(a) == pcf(b) == pcf(json.dumps(a))
+    assert pcf({"type": "int"}) == pcf("int") == "\"int\""
+    assert pcf(SCHEMA) != pcf(SCHEMA_V2)
+    swapped = dict(SCHEMA, fields=SCHEMA["fields"][::-1])
+    assert pcf(swapped) != pcf(SCHEMA)
+    assert pcf(dict(SCHEMA, name="Other")) != pcf(SCHEMA)
+
+
+def test_only_untransformed_reads_carry_a_block_scan(spark, tmp_path):
+    """The block-copy plan rides on the frame the reader returns and on
+    nothing derived from it; hive-partitioned reads carry none."""
+    _tiny_folder(tmp_path / "t", 3)
+    df = read_avro_folder(spark, str(tmp_path / "t"), reader_schema=SCHEMA)
+    assert asp.has_block_scan(df)
+    assert not asp.has_block_scan(df.filter("id > 3"))
+    assert not asp.has_block_scan(df.select("id", "name", "price"))
+    (tmp_path / "h").mkdir()
+    _tiny_folder(tmp_path / "h" / "k=1", 2)
+    assert not asp.has_block_scan(read_avro_folder(spark, str(tmp_path / "h")))
+    # a transformed frame, or another output schema, takes the record path
+    out = tmp_path / "out"
+    stats: dict = {}
+    assert write_avro_folder(df.filter("id >= 10"), str(out), stats=stats) >= 1
+    assert stats == {"records": 20}
+    back = read_avro_folder(spark, str(out)).collect()
+    assert sorted(r["id"] for r in back) == list(range(10, 30))
 
 
 def test_write_commit_protocol(spark, tmp_path):

@@ -497,8 +497,8 @@ def avro_output(folder: str) -> tuple[int, list]:
 
 
 def test_avro_file_count_is_exact(spark, tmp_path):
-    """file_count=2 over six tiny files: the read packs the files into at
-    least two bins, so coalesce(2) writes exactly two files."""
+    """file_count=2 over six tiny files: the read packs the files into
+    exactly two bins, and each bin is written as one file."""
     src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
     expected = write_tiny_avro_leaf(src, n_files=6)
     res = compact(spark, CompactionParams(source=src, target=tgt, file_count=2, fmt="avro"))
@@ -509,8 +509,8 @@ def test_avro_file_count_is_exact(spark, tmp_path):
 
 
 def test_avro_file_count_above_split_count(spark, tmp_path):
-    """coalesce cannot grow: asking for more files than there are splits
-    writes one file per split (one per tiny input file)."""
+    """Bins cannot outnumber splits: asking for more files than there are
+    splits writes one file per split (one per tiny input file)."""
     src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
     expected = write_tiny_avro_leaf(src, n_files=3)
     res = compact(spark, CompactionParams(source=src, target=tgt, file_count=5, fmt="avro"))
@@ -518,3 +518,235 @@ def test_avro_file_count_above_split_count(spark, tmp_path):
     n_files, got = avro_output(tgt)
     assert n_files == 3
     assert sorted(r["id"] for r in got) == sorted(r["id"] for r in expected)
+
+
+# --------------------------------------------------------------------------
+# Block-copy compaction (avro without sort_by/zorder_by)
+# --------------------------------------------------------------------------
+
+MIXED_V1 = {
+    "type": "record",
+    "name": "Sale",
+    "fields": [
+        {"name": "id", "type": "long"},
+        {"name": "ts", "type": {"type": "long", "logicalType": "timestamp-micros"}},
+        {"name": "day", "type": ["null", {"type": "int", "logicalType": "date"}],
+         "default": None},
+        {"name": "price", "type": {"type": "bytes", "logicalType": "decimal",
+                                   "precision": 10, "scale": 2}},
+        {"name": "tag", "type": ["null", "string"], "default": None},
+    ],
+}
+MIXED_V2 = {
+    **MIXED_V1,
+    "fields": MIXED_V1["fields"] + [
+        {"name": "qty", "type": ["null", "int"], "default": None},
+    ],
+}
+
+
+def write_mixed_avro_leaf(folder: str) -> None:
+    """Six files: three old-schema, three new-schema (newer mtimes, so the
+    latest-file rule picks the new schema), over the null, deflate and
+    snappy codecs, several blocks each."""
+    import datetime
+
+    from spark_dba_spark.sources import avro_codec as ac
+
+    os.makedirs(folder, exist_ok=True)
+    codecs = ["null", "deflate", "snappy"]
+    for f in range(6):
+        v2 = f >= 3
+        recs = []
+        for i in range(f * 40, (f + 1) * 40):
+            rec = {
+                "id": i,
+                "ts": datetime.datetime(2024, 1, 1) + datetime.timedelta(
+                    seconds=i * 3607, microseconds=i),
+                "day": None if i % 5 == 0 else datetime.date(2020, 1, 1)
+                + datetime.timedelta(days=i),
+                "price": (i * 1234).to_bytes(4, "big", signed=True),
+                "tag": None if i % 3 == 0 else f"t{i % 7}",
+            }
+            if v2:
+                rec["qty"] = None if i % 4 == 0 else i % 11
+            recs.append(rec)
+        path = f"{folder}/part_{f}.avro"
+        with open(path, "wb") as fh:
+            fh.write(ac.write_container(
+                recs, MIXED_V2 if v2 else MIXED_V1, codec=codecs[f % 3],
+                block_records=15,
+            ))
+        os.utime(path, (1_700_000_000 + f, 1_700_000_000 + f))
+
+
+def test_block_copy_matches_record_path_on_mixed_leaf(spark, tmp_path):
+    """Two writer schemas × three codecs, logical types and nullable
+    unions: the block-copy output holds the record path's record multiset
+    (sort_by forces the record path)."""
+    src = str(tmp_path / "src")
+    write_mixed_avro_leaf(src)
+    fused = compact(spark, CompactionParams(
+        source=src, target=str(tmp_path / "fused"), file_count=2, fmt="avro"))
+    records = compact(spark, CompactionParams(
+        source=src, target=str(tmp_path / "records"), file_count=2,
+        fmt="avro", sort_by=("id",)))
+    assert fused.partitions == records.partitions == {"/": "SUCCESS"}
+    n_files, got = avro_output(str(tmp_path / "fused"))
+    _, want = avro_output(str(tmp_path / "records"))
+    assert n_files == 2 and len(got) == 240
+    assert collections.Counter(repr(sorted(r.items())) for r in got) == (
+        collections.Counter(repr(sorted(r.items())) for r in want)
+    )
+
+
+def test_block_copy_walks_a_split_file_once(spark, tmp_path):
+    """A file larger than the split size is cut into several splits; the
+    copy emits each of its blocks exactly once."""
+    from spark_dba_spark.sources import avro_codec as ac
+    from spark_dba_spark.sources import avro_spark as asp
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    big = [{"id": i, "name": f"n{i:05d}" * 4} for i in range(3000)]
+    small = [{"id": 10_000 + i, "name": "s"} for i in range(10)]
+    with open(f"{src}/big.avro", "wb") as fh:
+        fh.write(ac.write_container(big, AVRO_SCHEMA, codec="snappy", block_records=50))
+    with open(f"{src}/small.avro", "wb") as fh:
+        fh.write(ac.write_container(small, AVRO_SCHEMA, codec="snappy"))
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "1024")
+    try:
+        bins = asp.read_avro_folder(spark, src, partitions=2)._avro_scan.bins
+        assert sum(p.endswith("big.avro") for b in bins for p, _, _ in b) > 2
+        res = compact(spark, CompactionParams(
+            source=src, target=str(tmp_path / "tgt"), file_count=2, fmt="avro"))
+    finally:
+        spark.conf.unset(key) if old is None else spark.conf.set(key, old)
+    assert res.partitions == {"/": "SUCCESS"}, res.errors
+    _, got = avro_output(str(tmp_path / "tgt"))
+    assert sorted(r["id"] for r in got) == sorted(r["id"] for r in big + small)
+
+
+def test_block_copy_decodes_no_record(tmp_path, monkeypatch):
+    """A same-schema 100-file leaf copies with zero record decodes, and
+    the bins report the source block headers' record total. Each file has
+    two full 3-record blocks and a 1-record tail block, which merges with
+    the next file's first block into one output block."""
+    import pandas as pd
+    import pyarrow.fs as pafs
+
+    from spark_dba_spark.sources import avro_codec as ac
+    from spark_dba_spark.sources import avro_spark as asp
+
+    src, out = tmp_path / "src", tmp_path / "out"
+    src.mkdir(), out.mkdir()
+    expected = []
+    for f in range(100):
+        recs = [{"id": f * 7 + i, "name": f"r{f}"} for i in range(7)]
+        (src / f"p{f:03d}.avro").write_bytes(
+            ac.write_container(recs, AVRO_SCHEMA, codec="snappy", block_records=3))
+        expected += recs
+
+    def no_decode(*_a, **_k):
+        raise AssertionError("a record was decoded")
+
+    monkeypatch.setattr(ac, "decode_datum", no_decode)
+    fs = pafs.LocalFileSystem()
+    bins = asp._plan_bins(asp._list_avro_files(fs, str(src), False), 1 << 27, 1 << 22, 4, 3)
+    pdf = pd.DataFrame({
+        "b": range(len(bins)),
+        "path": [[p for p, _, _ in b] for b in bins],
+        "start": [[lo for _, lo, _ in b] for b in bins],
+        "end": [[hi for _, _, hi in b] for b in bins],
+    })
+    rows = pd.concat(asp._copy_bins(
+        iter([pdf]), src_fs=fs, out_fs=fs, root=str(out), run_token="t",
+        schema=AVRO_SCHEMA, codec="snappy", block_records=3, block_bytes=None,
+    ))
+    assert rows["n"].sum() == len(expected) == 700
+    assert sorted(os.listdir(out)) == [f"part-{b:05d}-t.avro" for b in range(3)]
+    monkeypatch.undo()
+    got = [r for p in sorted(out.iterdir()) for r in ac.read_container(p.read_bytes())]
+    assert sorted(got, key=lambda r: r["id"]) == expected
+
+
+def test_avro_compaction_runs_write_and_verify_only(spark, tmp_path, monkeypatch):
+    """Structural guard: compacting one avro leaf runs one write job plus
+    the verify's count, so no separate read+count job can come back. The
+    verify is measured on its own because AQE submits a count's shuffle
+    stage as a job of its own."""
+    import spark_dba_spark.plans.compact as cm
+    from spark_dba_spark.sources.avro_spark import read_avro_folder
+
+    src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
+    write_tiny_avro_leaf(src, n_files=6)
+    sc = spark.sparkContext
+    orig = cm._process_partition
+
+    def in_group(*a, **k):  # leaves run on pool threads: tag each one's jobs
+        sc.setJobGroup("guard-compact", "compact")
+        return orig(*a, **k)
+
+    monkeypatch.setattr(cm, "_process_partition", in_group)
+    res = compact(spark, CompactionParams(source=src, target=tgt, file_count=2, fmt="avro"))
+    assert res.partitions == {"/": "SUCCESS"}, res.errors
+    sc.setJobGroup("guard-verify", "verify")
+    try:
+        read_avro_folder(spark, tgt, reader_schema=AVRO_SCHEMA, recursive=False).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    verify_jobs = len(tracker.getJobIdsForGroup("guard-verify"))
+    assert verify_jobs >= 1
+    assert len(tracker.getJobIdsForGroup("guard-compact")) == 1 + verify_jobs
+
+
+def test_failed_direct_write_rolls_back_target(spark, tmp_path):
+    """A snappy block with a bad CRC fails the write job: the leaf reports
+    EXCEPTION, the direct-written target is removed (a rerun is not
+    refused with 'target exists'), and the source is untouched."""
+    from spark_dba_spark.sources import avro_codec as ac
+
+    src, tgt = tmp_path / "src", tmp_path / "tgt"
+    src.mkdir()
+    for f in range(4):
+        recs = [{"id": f * 10 + i, "name": "x"} for i in range(10)]
+        data = bytearray(ac.write_container(recs, AVRO_SCHEMA, codec="snappy"))
+        if f == 2:
+            data[-17] ^= 0xFF  # last CRC byte of the last block
+        (src / f"part_{f}.avro").write_bytes(bytes(data))
+    before = {p.name: p.read_bytes() for p in src.iterdir()}
+    res = compact(spark, CompactionParams(
+        source=str(src), target=str(tgt), file_count=2, fmt="avro"))
+    assert res.partitions == {"/": "EXCEPTION"}
+    assert not tgt.exists()
+    assert {p.name: p.read_bytes() for p in src.iterdir()} == before
+
+
+@pytest.mark.parametrize("delta", [-1, 1])
+def test_block_copy_miscounted_block_fails_verify(spark, tmp_path, delta):
+    """A null-codec block whose header count is one off its payload has no
+    checksum to catch it and is merged undecoded; the verify's decode of
+    the merged output block still finds it (bytes left over, or a read
+    past the block's end), so the leaf reports EXCEPTION and the target
+    is rolled back."""
+    from spark_dba_spark.sources import avro_codec as ac
+
+    src, tgt = tmp_path / "src", tmp_path / "tgt"
+    src.mkdir()
+    for f in range(4):
+        recs = [{"id": f * 10 + i, "name": "x"} for i in range(3)]
+        data = bytearray(ac.write_container(recs, AVRO_SCHEMA, codec="null"))
+        if f == 1:
+            body = ac.read_header(bytes(data))[3]
+            assert data[body] == 2 * 3  # zigzag varint of the count 3
+            data[body] = 2 * (3 + delta)
+        (src / f"part_{f}.avro").write_bytes(bytes(data))
+    res = compact(spark, CompactionParams(
+        source=str(src), target=str(tgt), file_count=1, fmt="avro"))
+    assert res.partitions == {"/": "EXCEPTION"}
+    if delta < 0:
+        assert "left in a block" in " ".join(res.errors)
+    assert not tgt.exists()
