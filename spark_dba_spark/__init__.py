@@ -21,6 +21,12 @@ Layout:
 
 __version__ = "0.2.0"
 
+from spark_dba_spark import zipcache as _zipcache  # noqa: E402
+
+# Every PySpark task re-reads pyspark.zip's directory unless this is in
+# place; a worker gets it when it unpickles its first engine function.
+_zipcache.install()
+
 
 def __getattr__(name):  # lazy top-level API (avoids import-time Spark deps)
     _API = {

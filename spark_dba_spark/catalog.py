@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .session import ensure_session_invariants
+from .sources import fsops
 
 _SIZE_SUFFIX = {
     "k": 1024,
@@ -146,20 +147,13 @@ def load_par(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame
     path = f"{sf_dir}/{name}.parquet"
     _, total = _stat_sig(path)
     if total is None:
-        # Non-statable path (hdfs://, s3://, ...): fall back to the
-        # relation's own size estimate so a sub-split remote table still
-        # gets the insurance repartition — exactly the case this function
-        # exists for (VERDICT r14 "What's wrong" #2). The stat comes from
-        # the file index Spark already built for the scan; on any failure,
-        # no-op (at real scale the no-op is also the right answer).
+        # Non-statable path (hdfs://, s3://, ...): size the files the scan
+        # will read through the engine's pyarrow filesystem layer, so a
+        # sub-split remote table still gets the insurance repartition. On
+        # any failure, no-op (at real scale the no-op is also the right
+        # answer).
         try:
-            total = int(
-                df._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-                .toString()
-            )
+            total = fsops.files_size(path, df.inputFiles())
         except Exception:
             return df
     try:

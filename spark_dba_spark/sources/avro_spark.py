@@ -17,9 +17,11 @@ connector (absent from this classpath, no network to fetch it):
   ceil(total_bytes / parallelism)))``, and packed into byte-balanced bins,
   one decode task per bin; the bins reach the executors as the rows of a
   JVM ``LocalRelation``, so planning runs no Python stage. A Python task
-  costs ≈0.4 s before the decode starts (4-vCPU VM, CPython 3.11,
-  PySpark 4.1), so a leaf of tiny files is read by a few tasks, not one
-  per file.
+  on a reused worker costs about 0.1 s before the decode starts, and a
+  one-task job about 0.18 s end to end (4-vCPU VM, CPython 3.11, PySpark
+  4.1; it was 0.3-0.4 s before :mod:`spark_dba_spark.zipcache` stopped
+  every task re-reading pyspark.zip's directory), so a leaf of tiny files
+  is still read by a few tasks, not one per file.
 - **write**: one container file per partition via ``mapInPandas`` with a
   streaming block writer; ``df.coalesce(n)`` upstream controls file count
   exactly like the reference's D3. A frame the reader returned untouched
@@ -59,6 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import avro_codec as ac
+from .fsops import _rebase_onto_root, register_fs_scheme, resolve_fs  # noqa: F401
 
 # ---------------------------------------------------------------------------
 # Schema mapping: Avro <-> Spark
@@ -391,54 +394,6 @@ def _encode_converter(schema: Any):
     return None
 
 
-# ---------------------------------------------------------------------------
-# pyarrow.fs scheme dispatch (shared by read + write)
-# ---------------------------------------------------------------------------
-
-# Test-extensible scheme registry: scheme -> factory(uri) -> (FileSystem,
-# in-fs path). Registered factories run on the DRIVER only; the resolved
-# pyarrow FileSystem object (picklable by contract) travels to executors
-# inside the task closure.
-_FS_SCHEMES: dict[str, Any] = {}
-
-
-def register_fs_scheme(scheme: str, factory) -> None:
-    """Register ``factory(uri) -> (pyarrow.fs.FileSystem, path)`` for a URI
-    scheme — lets tests (or deployments with exotic stores) route the avro
-    sink/scan through any pyarrow-compatible filesystem."""
-    _FS_SCHEMES[scheme] = factory
-
-
-def resolve_fs(path: str):
-    """Path/URI → ``(pyarrow FileSystem, path-within-fs)``.
-
-    Local paths and ``file://`` → LocalFileSystem; registered schemes →
-    their factory; anything else (``hdfs://``, ``s3://``, ``gs://``) →
-    ``pyarrow.fs.FileSystem.from_uri`` — the reference's any-Hadoop-FS sink
-    posture (``DefragmentAvroFolder.scala:298``) without a spark-avro jar.
-    """
-    import pyarrow.fs as pafs
-
-    if "://" in path:
-        scheme = path.split("://", 1)[0]
-        if scheme in _FS_SCHEMES:
-            return _FS_SCHEMES[scheme](path)
-        if scheme == "file":
-            return pafs.LocalFileSystem(), path[len("file://"):]
-        # Hadoop spells S3 as s3a:// / s3n://; pyarrow only knows s3://.
-        if scheme in ("s3a", "s3n"):
-            path = "s3://" + path.split("://", 1)[1]
-        try:
-            return pafs.FileSystem.from_uri(path)
-        except Exception as exc:
-            raise ValueError(
-                f"pyarrow has no filesystem for {path!r} ({exc}); register "
-                "one with register_fs_scheme(), or use the Hadoop-FS read "
-                "fallback (read_avro_folder falls back automatically)"
-            ) from exc
-    return pafs.LocalFileSystem(), path
-
-
 def _list_avro_files(fs, root: str, recursive: bool) -> list:
     """Non-hidden ``*.avro`` FileInfos under root (M8/M20 conventions)."""
     import pyarrow.fs as pafs
@@ -624,11 +579,14 @@ def read_avro_folder(
     no Python stage and no shuffle, unless there are more bins than the
     relation has partitions, when a round-robin repartition spreads them.
     The decode is then one Python task per bin. The reason is the fixed
-    cost of a Python task: ≈0.4 s before the user function runs (4-vCPU
-    VM, CPython 3.11, PySpark 4.1), mostly the worker's
-    ``importlib.invalidate_caches()`` re-reading pyspark.zip's directory.
-    One task per tiny file, as the compactor's leaves have, spent nearly
-    all of a compaction in that set-up.
+    cost of a Python task: about 0.1 s before the user function runs on a
+    reused worker, 0.18 s for a one-task job (4-vCPU VM, CPython 3.11,
+    PySpark 4.1), most of it on the JVM side: scheduling, task launch,
+    and the first Arrow batch the worker waits for. It was 0.3-0.4 s,
+    mostly the worker's ``importlib.invalidate_caches()`` re-reading
+    pyspark.zip's directory, until :mod:`spark_dba_spark.zipcache` made
+    that re-read stat-keyed. One task per tiny file, as the compactor's
+    leaves have, spent nearly all of a compaction in that set-up.
 
     Each split syncs to the first block boundary (16-byte sync marker)
     at/after its range start and decodes blocks whose start offset falls
@@ -965,43 +923,6 @@ def _newest_file_schema(fs, files: list, path: str) -> dict:
     latest = max(files, key=lambda i: (i.mtime, i.path))
     with fs.open_input_file(latest.path) as f:
         return _read_header_with_retry(f, int(latest.size))[0]
-
-
-def _uri_path_component(p: str) -> str:
-    """Hadoop-style path component of a URI: scheme AND authority dropped
-    (``hdfs://nn:8020/data/x`` → ``/data/x``, ``file:/x`` → ``/x``). Plain
-    paths pass through. Note this is NOT always the path-within-fs that
-    :func:`resolve_fs` produces (pyarrow keeps the bucket in S3 paths, and
-    registered-scheme factories define their own mapping) — callers must
-    rebase onto the resolved root, see :func:`_rebase_onto_root`."""
-    if "://" in p:
-        rest = p.split("://", 1)[1]
-        i = rest.find("/")
-        return rest[i:] if i >= 0 else "/"
-    if p.startswith("file:"):
-        return p[len("file:"):]
-    return p
-
-
-def _rebase_onto_root(file_uri: str, base_uri: str, root: str) -> str:
-    """Map a per-file Hadoop URI (as reported by a ``binaryFile`` listing
-    of ``base_uri``) onto the path-within-fs space of ``resolve_fs(
-    base_uri) -> (fs, root)``: take the file's path component relative to
-    the base's path component and append it to ``root``. Naive scheme
-    stripping is wrong for authority-bearing URIs (``hdfs://nn:8020/d/x``
-    must NOT become ``nn:8020/d/x``) and for filesystems whose in-fs paths
-    are not URI paths (S3 keeps the bucket; SubTree-style factories use
-    relative roots). Falls back to the bare path component when the file
-    does not sit under the base (defensive; binaryFile listings always
-    do)."""
-    comp = _uri_path_component(file_uri)
-    base = _uri_path_component(base_uri).rstrip("/")
-    if base and comp.startswith(base) and (
-        len(comp) == len(base) or comp[len(base)] == "/"
-    ):
-        suffix = comp[len(base):]
-        return (root.rstrip("/") + suffix) if suffix else (root or comp)
-    return comp
 
 
 def read_avro_stream(

@@ -8,6 +8,11 @@ the JVM Hadoop FileSystem through py4j so the same code path works on
 file://, hdfs:// and (with rename caveats) object stores. These ops are
 integral to the compaction job's transactional semantics (snapshot
 consistency check, trash-then-swap commit).
+
+The module also holds the engine's pyarrow filesystem dispatch
+(:func:`resolve_fs`): the Avro read/write does its file I/O through it, on
+the driver and in the tasks, and :func:`files_size` states scan files with
+it.
 """
 
 from __future__ import annotations
@@ -16,6 +21,7 @@ import os
 import random
 import time
 from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import SparkSession
 
@@ -302,3 +308,107 @@ class FsOps:
         if not child.startswith(root + "/"):
             raise ValueError(f"{child} is not under {root}")
         return child[len(root):]
+
+
+# ---------------------------------------------------------------------------
+# pyarrow.fs scheme dispatch (the Avro read/write, catalog.load_par's sizing)
+# ---------------------------------------------------------------------------
+
+# Test-extensible scheme registry: scheme -> factory(uri) -> (FileSystem,
+# in-fs path). Registered factories run on the DRIVER only; the resolved
+# pyarrow FileSystem object (picklable by contract) travels to executors
+# inside the task closure.
+_FS_SCHEMES: dict[str, Any] = {}
+
+
+def register_fs_scheme(scheme: str, factory) -> None:
+    """Register ``factory(uri) -> (pyarrow.fs.FileSystem, path)`` for a URI
+    scheme — lets tests (or deployments with exotic stores) route the avro
+    sink/scan through any pyarrow-compatible filesystem."""
+    _FS_SCHEMES[scheme] = factory
+
+
+def resolve_fs(path: str):
+    """Path/URI → ``(pyarrow FileSystem, path-within-fs)``.
+
+    Local paths and ``file://`` → LocalFileSystem; registered schemes →
+    their factory; anything else (``hdfs://``, ``s3://``, ``gs://``) →
+    ``pyarrow.fs.FileSystem.from_uri`` — the reference's any-Hadoop-FS sink
+    posture (``DefragmentAvroFolder.scala:298``) without a spark-avro jar.
+    """
+    import pyarrow.fs as pafs
+
+    if "://" in path:
+        scheme = path.split("://", 1)[0]
+        if scheme in _FS_SCHEMES:
+            return _FS_SCHEMES[scheme](path)
+        if scheme == "file":
+            return pafs.LocalFileSystem(), path[len("file://"):]
+        # Hadoop spells S3 as s3a:// / s3n://; pyarrow only knows s3://.
+        if scheme in ("s3a", "s3n"):
+            path = "s3://" + path.split("://", 1)[1]
+        try:
+            return pafs.FileSystem.from_uri(path)
+        except Exception as exc:
+            raise ValueError(
+                f"pyarrow has no filesystem for {path!r} ({exc}); register "
+                "one with register_fs_scheme(), or use the Hadoop-FS read "
+                "fallback (read_avro_folder falls back automatically)"
+            ) from exc
+    return pafs.LocalFileSystem(), path
+
+
+def _uri_path_component(p: str) -> str:
+    """Hadoop-style path component of a URI: scheme AND authority dropped
+    (``hdfs://nn:8020/data/x`` → ``/data/x``, ``file:/x`` → ``/x``). Plain
+    paths pass through. Note this is NOT always the path-within-fs that
+    :func:`resolve_fs` produces (pyarrow keeps the bucket in S3 paths, and
+    registered-scheme factories define their own mapping) — callers must
+    rebase onto the resolved root, see :func:`_rebase_onto_root`."""
+    if "://" in p:
+        rest = p.split("://", 1)[1]
+        i = rest.find("/")
+        return rest[i:] if i >= 0 else "/"
+    if p.startswith("file:"):
+        return p[len("file:"):]
+    return p
+
+
+def _rebase_onto_root(file_uri: str, base_uri: str, root: str) -> str:
+    """Map a per-file Hadoop URI (as a ``binaryFile`` listing of
+    ``base_uri`` or ``DataFrame.inputFiles()`` reports it) onto the path-within-fs space of ``resolve_fs(
+    base_uri) -> (fs, root)``: take the file's path component relative to
+    the base's path component and append it to ``root``. Naive scheme
+    stripping is wrong for authority-bearing URIs (``hdfs://nn:8020/d/x``
+    must NOT become ``nn:8020/d/x``) and for filesystems whose in-fs paths
+    are not URI paths (S3 keeps the bucket; SubTree-style factories use
+    relative roots). Falls back to the bare path component when the file
+    does not sit under the base (defensive; binaryFile listings always
+    do)."""
+    comp = _uri_path_component(file_uri)
+    base = _uri_path_component(base_uri).rstrip("/")
+    if base and comp.startswith(base) and (
+        len(comp) == len(base) or comp[len(base)] == "/"
+    ):
+        suffix = comp[len(base):]
+        return (root.rstrip("/") + suffix) if suffix else (root or comp)
+    return comp
+
+
+def files_size(base_uri: str, file_uris: list[str]) -> int:
+    """Summed byte size of ``file_uris`` (Hadoop URIs under ``base_uri``,
+    as ``DataFrame.inputFiles()`` lists them), stated through the pyarrow
+    filesystem :func:`resolve_fs` gives ``base_uri``: one batched
+    ``get_file_info`` call. Raises when the scheme has no pyarrow
+    filesystem or a file is missing."""
+    import pyarrow.fs as pafs
+    from urllib.parse import unquote
+
+    fs, root = resolve_fs(base_uri)
+    infos = fs.get_file_info(
+        [_rebase_onto_root(unquote(u), base_uri, root) for u in file_uris]
+    )
+    missing = [i.path for i in infos if i.type != pafs.FileType.File]
+    if missing:
+        raise FileNotFoundError(missing[0])
+    return sum(i.size for i in infos)

@@ -658,6 +658,7 @@ def test_fs_scheme_dispatch_write_read(spark, tmp_path):
     import pyarrow.fs as pafs
 
     from spark_dba_spark.sources import avro_spark as asp
+    from spark_dba_spark.sources import fsops
 
     backing = tmp_path / "backing"
     backing.mkdir()
@@ -677,7 +678,7 @@ def test_fs_scheme_dispatch_write_read(spark, tmp_path):
         back = read_avro_folder(spark, "testfs://data/out")
         assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
     finally:
-        asp._FS_SCHEMES.pop("testfs", None)
+        fsops._FS_SCHEMES.pop("testfs", None)
 
 
 def test_block_split_read_multiple_tasks(spark, tmp_path):

@@ -12,8 +12,11 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from conftest import SF_DIR
 from spark_dba_spark import catalog
 from spark_dba_spark.session import ensure_session_invariants
 
@@ -153,3 +156,68 @@ def test_load_par_directory_table_sub_split(spark, tmp_path):
     df = catalog.load_par(spark, str(tmp_path), "dp", "k")
     assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     assert df.count() == 20
+
+
+@pytest.mark.parametrize("split, repartitioned", [(None, True), ("1k", False)])
+def test_load_par_sizes_unstatable_path_from_input_files(
+    spark, monkeypatch, split, repartitioned
+):
+    """A path ``_stat_sig`` cannot stat (``hdfs://``, ``s3://``, ...) is
+    sized from ``df.inputFiles()`` through ``fsops.files_size``: a sub-split
+    table still gets the insurance repartition, a large one does not, and
+    a sizing failure leaves the plain scan."""
+    from spark_dba_spark.sources import fsops
+
+    monkeypatch.setattr(catalog, "_stat_sig", lambda path: (None, None))
+    sized = []
+    real = fsops.files_size
+
+    def spy(base, uris):
+        sized.append(real(base, uris))
+        return sized[-1]
+
+    monkeypatch.setattr(fsops, "files_size", spy)
+    sf = SF_DIR
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    if split:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", split)
+    try:
+        df = catalog.load_par(spark, sf, "lineitem", "l_orderkey")
+        plan = df._jdf.queryExecution().toString()
+        assert ("REPARTITION" in plan) is repartitioned
+        assert sized == [os.path.getsize(f"{sf}/lineitem.parquet")]
+
+        def broken(base, uris):
+            raise OSError("no filesystem")
+
+        monkeypatch.setattr(fsops, "files_size", broken)
+        df = catalog.load_par(spark, sf, "lineitem", "l_orderkey")
+        assert "REPARTITION" not in df._jdf.queryExecution().toString()
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_files_size_through_registered_scheme(tmp_path):
+    """``files_size`` states Hadoop-style file URIs through the pyarrow
+    filesystem a registered scheme resolves to, percent-encoding undone."""
+    import pyarrow.fs as pafs
+
+    from spark_dba_spark.sources import fsops
+
+    d = tmp_path / "bucket" / "t b.parquet"
+    d.mkdir(parents=True)
+    (d / "part-0").write_bytes(b"x" * 10)
+    (d / "part-1").write_bytes(b"y" * 32)
+
+    def factory(uri):
+        return pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem()), uri.split("://", 1)[1]
+
+    fsops.register_fs_scheme("sizefs", factory)
+    try:
+        base = "sizefs://bucket/t b.parquet"
+        uris = [f"sizefs://bucket/t%20b.parquet/part-{i}" for i in (0, 1)]
+        assert fsops.files_size(base, uris) == 42
+        with pytest.raises(FileNotFoundError):
+            fsops.files_size(base, uris + ["sizefs://bucket/t%20b.parquet/gone"])
+    finally:
+        fsops._FS_SCHEMES.pop("sizefs", None)

@@ -1,7 +1,7 @@
 """r15 VERDICT item 2: bench the 14 headline queries on the ~10x local
 fixture substrate (tools/gen_scale_fixtures.py output) at two core
 counts, driver methodology (interleaved passes, first pass discarded as
-warm-up, per-query medians).
+warm-up, per-query medians over at least 5 timed passes).
 
     SPARK_GRAFT_SF_DIR=/root/fixtures/sf1 SPARK_GRAFT_CPUS=32 \
         python tools/scale_bench_r15.py
@@ -9,10 +9,11 @@ warm-up, per-query medians).
 Differences from bench.py, deliberate and recorded: 24g driver (a 16g
 driver survives any single sf1 pass but an interleaved 4-pass session
 accumulated enough broadcast/checkpoint pressure to fail a q05 broadcast
-build — recorded in OPTIMIZATION_r15.md), 3 passes instead of 9 (the
-substrate is 10x slower per pass), and no sf0.001 shape warm-up loop
-(the timed warm-up pass covers codegen). This tool never touches
-/root/testdata and is not the driver bench.
+build — recorded in OPTIMIZATION_r15.md), 6 passes instead of 9 (the
+substrate is 10x slower per pass; the first is a warm-up, so the
+medians are of 5 timed passes, and fewer are refused), and no sf0.001
+shape warm-up loop (the warm-up pass covers codegen). This tool never
+touches the `testdata` fixtures and is not ``bench.py``.
 """
 from __future__ import annotations
 
@@ -27,10 +28,20 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from spark_dba_spark import registry  # noqa: E402
 from spark_dba_spark.session import get_spark  # noqa: E402
 
+# Fewer timed samples than this make a median too weak against the host's
+# load waves (two samples make it a mean).
+MIN_TIMED_RUNS = 5
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/fixtures/sf1")
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "6"))
+    if n_runs - 1 < MIN_TIMED_RUNS:
+        sys.exit(
+            f"SPARK_GRAFT_BENCH_RUNS={n_runs}: the first pass is a warm-up, "
+            f"so at least {MIN_TIMED_RUNS + 1} passes are needed for "
+            f"medians of {MIN_TIMED_RUNS} timed ones"
+        )
     spark = get_spark("scale-bench", driver_memory="24g")
     specs = registry.bench_specs()
     samples: dict[str, list[float]] = {name: [] for name in specs}
