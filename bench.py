@@ -17,7 +17,12 @@ and spread (max−min) so the artifact carries its own noise floor — a
 uniform environment shift shows up as spread, not as a phantom regression
 (VERDICT r3 "What's wrong" #3). ``pass_totals``, loadavg before/after,
 default_parallelism and JVM GC delta make any future inflation
-attributable from the artifact alone (VERDICT r12 #2). Session startup is
+attributable from the artifact alone (VERDICT r12 #2). ``codegen_compiles``
+and ``codegen_ms`` (per query, one entry per pass, the warm-up pass first)
+count the generated classes compiled and the Janino time spent on them;
+``codegen_pass_compiles``/``codegen_pass_ms`` are the per-pass totals and
+``codegen_cache_max_entries`` the class-cache bound the session ran with.
+Session startup is
 excluded — constant overhead irrelevant to per-query throughput.
 """
 
@@ -62,8 +67,12 @@ def main() -> None:
         lambda it: it, "id bigint"
     ).count()
     # ... and run each bench query once at the smallest SF (sf0.001): warms
-    # codegen/JIT for exactly the timed shapes without touching the target
-    # scale factor's data. The timed pass below is steady-state throughput.
+    # JIT and the compile of most of the timed shapes' generated classes
+    # without touching the target scale factor's data. Some plans differ at
+    # sf0.1 (join strategies, AQE coalescing), so the first sf0.1 pass still
+    # compiles their classes: ``codegen_pass_compiles[0]`` shows how many,
+    # and the later passes compile 0 when the session's class cache
+    # (``codegen_cache_max_entries``) holds the whole set.
     for spec in specs.values():
         try:
             spec.builder(spark, "/root/testdata/sf0.001").collect()
@@ -121,12 +130,23 @@ def main() -> None:
     gc_t0, gc_n0 = gc_stats()
     samples: dict[str, list[float]] = {name: [] for name in specs}
     pass_totals: list[float] = []
+    # Generated classes compiled (cache misses) and Janino compile time,
+    # per query and pass, read outside each query's timed span.
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+        .CodeGenerator
+    cg_compiles: dict[str, list[int]] = {name: [] for name in specs}
+    cg_ms: dict[str, list[float]] = {name: [] for name in specs}
     for _ in range(n_runs):
         p0 = time.time()
         for name, spec in specs.items():
+            n0, ns0 = compiled.getCount(), codegen.compileTime()
             t0 = time.time()
             rows = spec.builder(spark, sf_dir).collect()
             samples[name].append(time.time() - t0)
+            cg_compiles[name].append(compiled.getCount() - n0)
+            cg_ms[name].append(round((codegen.compileTime() - ns0) / 1e6, 1))
             assert rows is not None
         pass_totals.append(round(time.time() - p0, 3))
     gc_t1, gc_n1 = gc_stats()
@@ -174,6 +194,18 @@ def main() -> None:
                 "gc_time_sec": round(gc_t1 - gc_t0, 3)
                 if gc_t0 >= 0 else -1.0,
                 "gc_count": gc_n1 - gc_n0 if gc_n0 >= 0 else -1,
+                "codegen_cache_max_entries": spark._jsparkSession
+                .sessionState().conf().codegenCacheMaxEntries(),
+                "codegen_compiles": cg_compiles,
+                "codegen_ms": cg_ms,
+                "codegen_pass_compiles": [
+                    sum(xs[i] for xs in cg_compiles.values())
+                    for i in range(n_runs)
+                ],
+                "codegen_pass_ms": [
+                    round(sum(xs[i] for xs in cg_ms.values()), 1)
+                    for i in range(n_runs)
+                ],
                 "runs": n_runs,
                 "runs_timed": n_runs - 1 if n_runs > 1 else n_runs,
                 "sf": sf,

@@ -3,9 +3,26 @@
 Two concerns:
 
 1. ``get_spark()`` — build a session for our own entry points (tests, bench,
-   compaction CLI) with the configs a 1000-executor deployment would also
-   want: AQE on (runtime re-planning, skew-join splitting, partition
-   coalescing), Arrow for any Python exchange, UTC session timezone.
+   perfbench, compaction CLI) with the configs a 1000-executor deployment
+   would also want: AQE on (runtime re-planning, skew-join splitting,
+   partition coalescing), Arrow for any Python exchange, UTC session
+   timezone, and a generated-code class cache that holds the engine's
+   working set.
+
+   The class cache (``spark.sql.codegen.cache.maxEntries``, Spark default
+   100) is an LRU over Janino-compiled classes. One ``query_mix`` pass at
+   sf0.01 needs 106 distinct classes and one pass of the 14 bench queries
+   about 200-215 (202 at sf0.001), so at the default every pass evicted
+   and recompiled most of its own classes: 63-84 recompiles per
+   ``query_mix`` pass (~0.7 s of Janino compile under perfbench's C1-only
+   JVM) and ~210 per bench pass. At 1000 a repeated pass recompiles 0, and
+   the loaded-class count and Metaspace of a long-lived session stop
+   growing pass over pass. It is a static conf: the JVM reads it once,
+   when the first class is generated, and a runtime ``spark.conf.set``
+   cannot change it. A foreign session (the driver harness builds its own)
+   therefore only gets it if passed at launch
+   (``--conf spark.sql.codegen.cache.maxEntries=1000``); without it the
+   engine is correct, it just recompiles.
 
 2. ``ensure_session_invariants(spark)`` — the driver harness constructs its
    *own* SparkSession and hands it to our query builders, so every conf the
@@ -16,6 +33,7 @@ Two concerns:
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -41,6 +59,10 @@ _PERF_CONFS = {
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
     "spark.ui.enabled": "false",
+    # Generated-code class cache, static (see the module docstring).
+    # Measured distinct classes per pass: query_mix 106 at sf0.01, the 14
+    # bench queries 202 at sf0.001 and ~210 at sf0.1; 1000 is ~5x headroom.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -74,42 +96,41 @@ def get_spark(
     return spark
 
 
-# Sessions already given the full pass — every conf.get/.set is a py4j
-# round-trip, and catalog.load runs this per table load (the r14 bench
-# profile billed ~20-50ms of plan-build per query to these calls alone).
-# WeakSet so a stopped session's entry dies with the wrapper object.
-_ENSURED: "weakref.WeakSet[SparkSession]" = None  # type: ignore[assignment]
+# Per session, the Java map behind its SQLConf (``SQLConf.settings``): every
+# conf.get/.set is a py4j round trip, and catalog.load runs this per table
+# load (the r14 bench profile billed ~20-50ms of plan-build per query to
+# these calls alone), so the fast path reads all set confs in ONE call.
+# Weak keys so a stopped session's entry dies with the wrapper object.
+_SETTINGS: "weakref.WeakKeyDictionary[SparkSession, object]" = (
+    weakref.WeakKeyDictionary()
+)
 
-# The invariant most likely to be flipped by a foreign harness (SQL `SET`,
-# notebook helper) and the one whose drift silently breaks oracle parity.
-_SENTINEL_KEY = "spark.sql.session.timeZone"
+
+def _holds_invariants(settings_text: str) -> bool:
+    """True if a ``java.util.Map.toString`` rendering of the session's set
+    confs (``{k1=v1, k2=v2}``) holds every invariant at its value."""
+    entries = f", {settings_text[1:-1]}, "
+    return all(f", {k}={v}, " in entries for k, v in _RUNTIME_INVARIANTS.items())
 
 
 def ensure_session_invariants(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable correctness invariants to any session.
 
-    First call per session applies every invariant (3 conf round-trips);
-    later calls re-check ONE sentinel conf (1 round-trip). If the sentinel
-    drifted — the harness or a SQL ``SET`` changed session state after we
-    ensured it — the full set is re-applied, restoring the self-healing
-    behavior this function originally had per table load (ADVICE r14: the
-    once-per-session memo traded that healing away silently). A caller
-    that flips a non-sentinel invariant alone still goes unrepaired; that
-    narrower gap is accepted and documented here.
+    The first call per session applies every invariant (a get per conf, a
+    set per drifted one) and keeps a handle on the session's conf map.
+    Later calls fetch that map's rendering in one round trip and return if
+    every invariant still holds; if any drifted (a harness ``SET``,
+    ``conf.unset`` or notebook helper changed session state after we
+    ensured it) the full pass runs again, so each of them heals within one
+    table load.
     """
-    global _ENSURED
-    if _ENSURED is None:
-        import weakref
-
-        _ENSURED = weakref.WeakSet()
-    if spark in _ENSURED:
+    settings = _SETTINGS.get(spark)
+    if settings is not None:
         try:
-            if spark.conf.get(_SENTINEL_KEY, None) == _RUNTIME_INVARIANTS[
-                _SENTINEL_KEY
-            ]:
+            if _holds_invariants(settings.toString()):
                 return spark
         except Exception:
-            return spark
+            pass  # fall through to the full pass
     for k, v in _RUNTIME_INVARIANTS.items():
         try:
             if spark.conf.get(k, None) != v:
@@ -117,5 +138,9 @@ def ensure_session_invariants(spark: SparkSession) -> SparkSession:
         except Exception:
             # Conf not recognized on some build — never fail a query over it.
             pass
-    _ENSURED.add(spark)
+    if settings is None:
+        try:
+            _SETTINGS[spark] = spark._jsparkSession.sessionState().conf().settings()
+        except Exception:
+            pass  # no handle: every call takes the full pass
     return spark

@@ -18,7 +18,7 @@ import pytest
 
 from conftest import SF_DIR
 from spark_dba_spark import catalog
-from spark_dba_spark.session import ensure_session_invariants
+from spark_dba_spark.session import _RUNTIME_INVARIANTS, ensure_session_invariants
 
 
 @pytest.fixture(scope="module")
@@ -85,14 +85,26 @@ def test_ensure_invariants_idempotent(spark):
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
-def test_ensure_invariants_heals_sentinel_drift(spark):
-    """A foreign SET on the sentinel conf after the first pass must be
-    repaired on the next call (r15: the once-per-session memo silently
-    dropped this self-healing; the sentinel re-check restores it)."""
+@pytest.mark.parametrize(
+    "key, foreign",
+    [
+        ("spark.sql.session.timeZone", "America/New_York"),
+        ("spark.sql.legacy.parquet.nanosAsLong", "false"),
+        ("spark.sql.execution.arrow.pyspark.enabled", "false"),
+    ],
+    ids=["timeZone", "nanosAsLong", "arrow"],
+)
+def test_ensure_invariants_heals_sentinel_drift(spark, key, foreign):
+    """A foreign SQL ``SET`` or ``conf.unset`` of any invariant after the
+    first pass must be repaired on the next call, not just the timezone's."""
+    want = _RUNTIME_INVARIANTS[key]
     ensure_session_invariants(spark)
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    spark.sql(f"SET {key}={foreign}")
     ensure_session_invariants(spark)
-    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert spark.conf.get(key) == want
+    spark.conf.unset(key)
+    ensure_session_invariants(spark)
+    assert spark.conf.get(key) == want
 
 
 def test_load_memo_evicts_superseded_entry(spark, tmp_path):
