@@ -15,6 +15,9 @@ higher-order folds, still no Arrow)."""
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -32,7 +35,15 @@ from ..functions.numeric import (
 from ..registry import QuerySpec
 from .dedup import _GRAPH_SYM_CTES, _PARA_CTES, PARA_W, _neardup_graph
 from .dedup import _paragraph_pairs
-from .similarity import _KM_ORACLE_PREFIX, KM_ITERS, _km_loop
+from .similarity import (
+    _KM_ORACLE_PREFIX,
+    KM_ITERS,
+    _km_loop,
+    _local_topk,
+    _probe_scan,
+    _sq_dists,
+    _to_matrix,
+)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8305,6 +8316,11 @@ ORDER BY event_type
 TWONN_PROBES = 256  # probe vectors (vec_id < TWONN_PROBES)
 
 
+def _grid(m):
+    """The canonical 2^-20 grid (_EMB_Q_SQL), exact in float64."""
+    return np.trunc(m * 1048576.0)
+
+
 def emb_intrinsic_dim_twonn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TwoNN intrinsic-dimension estimate (Facco et al. 2017) of the
     embedding manifold: ID = n / Σ ln(r2/r1) over the first/second
@@ -8314,11 +8330,11 @@ def emb_intrinsic_dim_twonn(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid distances make ln(r2/r1) = ln(d2q/d1q)/2 with exact integer
     inputs; each term is 9dp-rounded into the house decimal sum.
 
-    Scale (the r13 VERDICT fix): the probe set is collected (bounded:
-    <= {TWONN_PROBES} rows by construction) and broadcast as a numpy
-    matrix into the house Arrow GEMM scorer (the sim_cosine_topk
-    posture); every Arrow batch emits only its LOCAL top-2 squared
-    distances per probe, so the shuffle carries {TWONN_PROBES}·2 rows
+    Scale (the r13 VERDICT fix): the probe set (bounded: <=
+    {TWONN_PROBES} rows by construction) rides in the house Arrow GEMM
+    scorer (:func:`_probe_scan`, the sim_cosine_topk posture); every
+    Arrow batch emits only its LOCAL top-2 squared distances per probe
+    (:func:`_local_topk`), so the shuffle carries {TWONN_PROBES}·2 rows
     per batch instead of {TWONN_PROBES}·corpus, and the final top-2
     window sorts bounded groups (2·n_batches rows per probe) instead
     of 256 corpus-sized partitions. Multiset two-smallest is
@@ -8326,77 +8342,27 @@ def emb_intrinsic_dim_twonn(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs form. Distances stay EXACT in float64 BLAS: grid values
     < 2^21, so every term of |e|² + |p|² − 2e·p is an integer < 2^47
     and each intermediate stays below 2^53."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     emb = _emb(spark, sf_dir)
-    probe_rows = (
-        emb.filter(F.col("vec_id") < TWONN_PROBES)
-        .select("vec_id", "embedding")
-        .collect()  # bounded by the TWONN_PROBES constant
-    )
-    pids = np.array([r["vec_id"] for r in probe_rows], dtype=np.int64)
-    pq = (
-        np.trunc(
-            np.array(
-                [r["embedding"] for r in probe_rows], dtype=np.float64
-            )
-            * 1048576.0
+
+    def kernel(pdf, pids, pq):
+        d2 = _sq_dists(_grid(_to_matrix(pdf["embedding"])), pq)
+        d2[d2 <= 0.0] = np.inf  # exact duplicates break the ratio
+        q, _, s = _local_topk(
+            pids, pdf["vec_id"].to_numpy(), d2, 2, descending=False
         )
-        if probe_rows
-        else np.zeros((0, 1))
-    )  # the canonical 2^-20 grid (_EMB_Q_SQL), exact in float64
-    pn = (pq * pq).sum(axis=1)
-    bc = spark.sparkContext.broadcast((pids, pq, pn))
+        return pd.DataFrame({"pid": q, "d2": s.astype(np.int64)})
 
-    cand_schema = T.StructType(
-        [
-            T.StructField("pid", T.LongType()),
-            T.StructField("d2", T.LongType()),
-        ]
-    )
-
-    def local_top2(batches):
-        bpids, bpq, bpn = bc.value
-        for pdf in batches:
-            if not len(pdf) or not len(bpids):
-                continue
-            m = np.trunc(
-                np.array(
-                    [
-                        np.asarray(v, dtype=np.float64)
-                        for v in pdf["embedding"]
-                    ]
-                )
-                * 1048576.0
-            )
-            vids = pdf["vec_id"].to_numpy()
-            en = (m * m).sum(axis=1)
-            d2 = en[:, None] + bpn[None, :] - 2.0 * (m @ bpq.T)
-            d2[vids[:, None] == bpids[None, :]] = np.inf  # self-pairs
-            d2[d2 <= 0.0] = np.inf  # exact duplicates break the ratio
-            k = min(2, d2.shape[0])
-            vals = np.partition(d2, k - 1, axis=0)[:k].reshape(-1)
-            pid_col = np.tile(bpids, k)
-            keep = np.isfinite(vals)
-            if not keep.any():
-                continue
-            yield pd.DataFrame(
-                {
-                    "pid": pid_col[keep],
-                    "d2": vals[keep].astype(np.int64),
-                }
-            )
-
-    cand = (
+    cand = _probe_scan(
         emb.select("vec_id", "embedding")
         # the _docs_par insurance rule: the fixture corpus is ONE
         # parquet split, so the GEMM otherwise runs as a single task;
         # at real scale the scan has thousands of splits and this is
         # one bounded shuffle of the raw vectors
-        .repartition(spark.sparkContext.defaultParallelism, F.col("vec_id"))
-        .mapInPandas(local_top2, cand_schema)
+        .repartition(spark.sparkContext.defaultParallelism, F.col("vec_id")),
+        emb.filter(F.col("vec_id") < TWONN_PROBES).select(
+            "vec_id", "embedding"
+        ),
+        kernel, "pid long, d2 long", prep=_grid,
     )
     w = W.partitionBy("pid").orderBy("d2")
     top2 = (
@@ -9181,95 +9147,44 @@ def emb_prefix_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is what actually matters). Distances are exact integers on
     the 2^-20 grid; recall is an exact rational.
 
-    Scale: the house Arrow GEMM scorer posture — the probe matrix is
-    broadcast, every batch emits only its local top-{PFX_K} per
-    (prefix, probe) under the final window's total order (the r13
-    sim_cosine_topk reduction), so the shuffle is 4·{PFX_PROBES}·{PFX_K}
-    rows per batch and the final window sorts bounded groups. Exact in
-    float64 BLAS (integer grid values < 2^21; see TwoNN)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    Scale: the house Arrow GEMM scorer (:func:`_probe_scan`) — the
+    probe matrix rides in the scorer's closure, every batch emits only
+    its local top-{PFX_K} per (prefix, probe) under the final window's
+    total order (:func:`_local_topk`, the r13 sim_cosine_topk
+    reduction), so the shuffle is 4·{PFX_PROBES}·{PFX_K} rows per batch
+    and the final window sorts bounded groups. Exact in float64 BLAS
+    (integer grid values < 2^21; see TwoNN)."""
     emb = _emb(spark, sf_dir)
-    probe_rows = (
-        emb.filter(F.col("vec_id") < PFX_PROBES)
-        .select("vec_id", "embedding")
-        .collect()  # bounded by the PFX_PROBES constant
-    )
-    pids = np.array([r["vec_id"] for r in probe_rows], dtype=np.int64)
-    pq = (
-        np.trunc(
-            np.array(
-                [r["embedding"] for r in probe_rows], dtype=np.float64
+
+    def kernel(pdf, pids, pq):
+        full = _grid(_to_matrix(pdf["embedding"]))
+        vids = pdf["vec_id"].to_numpy()
+        frames = []
+        for m in PFX_DIMS:
+            q, v, s = _local_topk(
+                pids, vids, _sq_dists(full[:, :m], pq[:, :m]), PFX_K,
+                descending=False,
             )
-            * 1048576.0
-        )
-        if probe_rows
-        else np.zeros((0, max(PFX_DIMS)))
-    )
-    bc = spark.sparkContext.broadcast((pids, pq))
-
-    cand_schema = T.StructType(
-        [
-            T.StructField("m", T.IntegerType()),
-            T.StructField("pid", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("d2", T.LongType()),
-        ]
-    )
-
-    def local_topk(batches):
-        bpids, bpq = bc.value
-        for pdf in batches:
-            if not len(pdf) or not len(bpids):
-                continue
-            full = np.trunc(
-                np.array(
-                    [
-                        np.asarray(v, dtype=np.float64)
-                        for v in pdf["embedding"]
-                    ]
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "m": np.full(len(q), m, dtype=np.int32),
+                        "pid": q,
+                        "vec_id": v,
+                        "d2": s.astype(np.int64),
+                    }
                 )
-                * 1048576.0
             )
-            vids = pdf["vec_id"].to_numpy()
-            frames = []
-            for m in PFX_DIMS:
-                e = full[:, :m]
-                p = bpq[:, :m]
-                d2 = (
-                    (e * e).sum(axis=1)[:, None]
-                    + (p * p).sum(axis=1)[None, :]
-                    - 2.0 * (e @ p.T)
-                )
-                d2[vids[:, None] == bpids[None, :]] = np.inf
-                for j, pid in enumerate(bpids):
-                    col = d2[:, j]
-                    order = np.lexsort((vids, col))[:PFX_K]
-                    order = order[np.isfinite(col[order])]
-                    if not len(order):
-                        continue
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "m": np.full(len(order), m,
-                                             dtype=np.int32),
-                                "pid": np.full(len(order), pid,
-                                               dtype=np.int64),
-                                "vec_id": vids[order],
-                                "d2": col[order].astype(np.int64),
-                            }
-                        )
-                    )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+        return pd.concat(frames, ignore_index=True)
 
-    cand = (
+    cand = _probe_scan(
         emb.select("vec_id", "embedding")
         .repartition(spark.sparkContext.defaultParallelism,
-                     F.col("vec_id"))  # the _docs_par insurance rule
-        .mapInPandas(local_topk, cand_schema)
+                     F.col("vec_id")),  # the _docs_par insurance rule
+        emb.filter(F.col("vec_id") < PFX_PROBES).select(
+            "vec_id", "embedding"
+        ),
+        kernel, "m int, pid long, vec_id long, d2 long", prep=_grid,
     )
     w = W.partitionBy("m", "pid").orderBy("d2", "vec_id")
     topk = (

@@ -6,9 +6,11 @@ Spark-first design for vector workloads:
   (no full-corpus collects anywhere — exact all-pairs runs as a block-grid
   cogroup, ``sim_dup_pairs``).
 - The *query* side (bounded: N_QUERIES probe vectors, or K centroids)
-  ships as a broadcast, and each Arrow batch is scored with one numpy
-  matmul inside ``mapInPandas`` — the vectorized slow path (Arrow + BLAS),
-  never row-at-a-time Python.
+  rides in the ``mapInPandas`` scorer's closure, and each Arrow batch is
+  scored with one numpy matmul — the vectorized slow path (Arrow + BLAS),
+  never row-at-a-time Python. :func:`_probe_scan` is that scorer for
+  every brute-force probe set; :func:`_local_topk` is its one per-batch
+  top-k cut.
 - Top-k selection happens in Spark (window row_number), so the ranking
   shuffle is on the small (qid, candidate) stream, not raw vectors.
 
@@ -20,6 +22,7 @@ registered rows-only; recall vs brute force is asserted in pytest.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 import numpy as np
@@ -96,111 +99,127 @@ def _pin_columns(df: DataFrame) -> DataFrame:
     return df.filter(guard)
 
 
-# Probes per broadcast batch for the brute-force scorers. The driver never
-# holds more than one chunk of probe vectors at a time (toLocalIterator
-# streams partitions), so a probe set that grows with the corpus degrades
-# into more corpus passes instead of a driver OOM — each chunk is one
-# mapInPandas scan, unioned. With the default probe sets (N_QUERIES = 20)
-# everything fits one chunk and the plan is identical to the unchunked
-# form.
+# Probes per mapInPandas scan for the house Arrow GEMM scorer
+# (:func:`_probe_scan`). The driver holds one chunk of probe vectors at a
+# time (toLocalIterator streams partitions) and each finished chunk lives
+# on only inside its own scan's closure, so a probe set that grows with
+# the corpus degrades into more corpus passes instead of a driver OOM —
+# each chunk is one mapInPandas scan, unioned. With the default probe
+# sets (N_QUERIES = 20) everything fits one chunk and the plan is
+# identical to the unchunked form. A chunk's vectors are at most
+# PROBE_CHUNK·EMB_DIM·8 B = 512 KB, under the 1 MB
+# spark.broadcast.UDFCompressionThreshold above which PySpark ships a
+# pickled UDF command as a broadcast by itself.
 PROBE_CHUNK = 1024
 
 
-def _probe_chunks(df, chunk: int | None = None, normalize: bool = True):
-    """Yield (ids ndarray, matrix) per bounded chunk of (vec_id,
-    embedding) rows — row-normalized for cosine scorers, raw for MIPS —
-    never materializing the full probe set on the driver."""
-    chunk = chunk or PROBE_CHUNK  # module-level lookup: test-overridable
-
-    def emit(ids, vecs):
-        qm = np.array(vecs, dtype=np.float64)
-        if normalize:
-            qm = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-        return np.array(ids, dtype=np.int64), qm
-
-    buf_ids: list[int] = []
-    buf_vecs: list = []
-    for r in df.select("vec_id", "embedding").toLocalIterator():
-        buf_ids.append(r["vec_id"])
-        buf_vecs.append(r["embedding"])
-        if len(buf_ids) >= chunk:
-            yield emit(buf_ids, buf_vecs)
-            buf_ids, buf_vecs = [], []
-    if buf_ids:
-        yield emit(buf_ids, buf_vecs)
+def _unit_rows(m: np.ndarray) -> np.ndarray:
+    return m / np.linalg.norm(m, axis=1, keepdims=True)
 
 
-# --------------------------------------------------------------------------
-# Brute-force cosine top-k (query set broadcast, corpus distributed)
-# --------------------------------------------------------------------------
-
-def _local_topk_frame(qids, vids, scores, score_name):
-    """Per-batch exact top-k per query under (score DESC, vec_id ASC) —
-    the SAME total order as the final rank window, so any global winner
-    is a local winner inside its own batch and survives the cut (the
-    r13 VERDICT shuffle reduction: the scored stream shrinks from
-    n·n_queries rows to TOP_K·n_queries per Arrow batch). Self-matches
-    are masked BEFORE the cut so they can never crowd a winner out of
-    the local top-k."""
-    frames = []
-    for j, qid in enumerate(qids):
-        s = scores[:, j].copy()
-        s[vids == qid] = -np.inf
-        order = np.lexsort((vids, -s))[:TOP_K]
-        order = order[np.isfinite(s[order])]
-        if not len(order):
-            continue
-        frames.append(
-            pd.DataFrame(
-                {
-                    "qid": np.full(len(order), qid, dtype=np.int64),
-                    "vec_id": vids[order],
-                    score_name: s[order],
-                }
-            )
-        )
-    return pd.concat(frames, ignore_index=True) if frames else None
-
-
-def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
-    probes = emb.filter(F.col("vec_id") < N_QUERIES)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("sim", T.DoubleType()),
-        ]
+def _sq_dists(e: np.ndarray, p: np.ndarray) -> np.ndarray:
+    """(rows of e) × (rows of p) squared L2 distances as
+    |e|² + |p|² − 2e·p — exact in float64 BLAS when the inputs are
+    integers on a grid whose every intermediate stays below 2^53."""
+    return (
+        (e * e).sum(axis=1)[:, None]
+        + (p * p).sum(axis=1)[None, :]
+        - 2.0 * (e @ p.T)
     )
 
-    chunks = []
-    for qids, qn in _probe_chunks(probes):
-        bc = spark.sparkContext.broadcast((qids, qn))
 
-        def score(batches, _bc=bc):
-            bqids, bqn = _bc.value
+def _probe_scan(corpus, probes, kernel, schema, prep=None) -> DataFrame:
+    """The house Arrow GEMM scorer: score every Arrow batch of ``corpus``
+    against a bounded probe set in one ``mapInPandas`` pass.
+
+    ``probes`` is a (vec_id, vector) frame, collected PROBE_CHUNK rows at
+    a time; ``prep`` maps a chunk's float64 matrix to the payload the
+    kernel scores against (row-normalized, gridded, a lookup table; the
+    raw matrix by default). Each chunk's ids and payload ride in its
+    scan's closure — no hand-made broadcast to create or release.
+    ``kernel(pdf, qids, payload)`` turns one non-empty batch into a
+    pandas frame of ``schema`` (usually the :func:`_local_topk` cut).
+    Chunk scans are unioned; an empty probe set gives an empty frame of
+    ``schema``."""
+    scans = []
+
+    def add_scan(ids, vecs):
+        qids = np.array(ids, dtype=np.int64)
+        qm = np.array(vecs, dtype=np.float64)
+        payload = prep(qm) if prep else qm
+
+        def scan(batches):
             for pdf in batches:
-                if not len(pdf):
-                    continue
-                m = _to_matrix(pdf["embedding"])
-                mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-                sims = mn @ bqn.T  # (batch, n_queries)
-                out = _local_topk_frame(
-                    bqids, pdf["vec_id"].to_numpy(), sims, "sim"
-                )
-                if out is not None:
-                    yield out
+                if len(pdf):
+                    out = kernel(pdf, qids, payload)
+                    if len(out):
+                        yield out
 
-        chunks.append(
-            emb.select("vec_id", "embedding").mapInPandas(score, out_schema)
+        scans.append(corpus.mapInPandas(scan, schema))
+
+    ids: list[int] = []
+    vecs: list = []
+    for vid, vec in probes.toLocalIterator():
+        ids.append(vid)
+        vecs.append(vec)
+        if len(ids) >= PROBE_CHUNK:  # module-level lookup: test-overridable
+            add_scan(ids, vecs)
+            ids, vecs = [], []
+    if ids:
+        add_scan(ids, vecs)
+    if not scans:
+        return corpus.sparkSession.createDataFrame([], schema)
+    return functools.reduce(DataFrame.unionByName, scans)
+
+
+def _local_topk(qids, vids, scores, k: int, descending: bool):
+    """Exact per-batch top-``k`` of every probe column of ``scores``
+    (batch rows × probes) under the total order (score, vec_id ASC),
+    score DESC or ASC — the final rank window's order, so every global
+    winner is a local winner inside its own batch and survives the cut
+    (REPOSE's per-partition top-k; the r13 VERDICT shuffle reduction:
+    the scored stream shrinks from n·n_probes rows to k·n_probes per
+    batch). Self-matches (vec_id == qid) and non-finite scores are
+    dropped BEFORE the cut so they can never crowd a winner out.
+    Returns the (qid, vec_id, score) arrays of the kept rows."""
+    sign = -1 if descending else 1
+    q_out, v_out, s_out = [], [], []
+    for j, qid in enumerate(qids):
+        s = scores[:, j]
+        keep = np.flatnonzero((vids != qid) & np.isfinite(s))
+        keep = keep[np.lexsort((vids[keep], sign * s[keep]))[:k]]
+        q_out.append(np.full(len(keep), qid, dtype=np.int64))
+        v_out.append(vids[keep])
+        s_out.append(s[keep])
+    return np.concatenate(q_out), np.concatenate(v_out), np.concatenate(s_out)
+
+
+# --------------------------------------------------------------------------
+# Brute-force cosine / MIPS top-k (probes in the scorer, corpus distributed)
+# --------------------------------------------------------------------------
+
+def _dot_topk(spark: SparkSession, sf_dir: str, score: str,
+              normalize: bool) -> DataFrame:
+    """Top-TOP_K per probe by dot product — of unit rows (cosine) or of
+    raw vectors (MIPS) — through the house Arrow GEMM scorer and a rank
+    window on the bounded local-top-k stream."""
+    emb = _emb(spark, sf_dir)
+    unit = _unit_rows if normalize else None
+
+    def kernel(pdf, qids, qm):
+        m = _to_matrix(pdf["embedding"])
+        q, v, s = _local_topk(
+            qids, pdf["vec_id"].to_numpy(), (unit(m) if unit else m) @ qm.T,
+            TOP_K, descending=True,
         )
-    if not chunks:  # empty probe set → empty result, stable schema
-        chunks = [spark.createDataFrame([], out_schema)]
-    scored = chunks[0]
-    for c in chunks[1:]:
-        scored = scored.unionByName(c)
-    w = W.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
+        return pd.DataFrame({"qid": q, "vec_id": v, score: s})
+
+    scored = _probe_scan(
+        emb.select("vec_id", "embedding"),
+        emb.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding"),
+        kernel, f"qid long, vec_id long, {score} double", prep=unit,
+    )
+    w = W.partitionBy("qid").orderBy(F.desc(score), F.asc("vec_id"))
     return (
         scored.filter(F.col("vec_id") != F.col("qid"))
         .withColumn("rank", F.row_number().over(w))
@@ -208,6 +227,12 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "rank", "vec_id")
         .orderBy("qid", "rank")
     )
+
+
+def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-k of each probe (vec_id < N_QUERIES), self
+    excluded, ties to the lower vec_id."""
+    return _dot_topk(spark, sf_dir, "sim", normalize=True)
 
 
 def sim_mips_maxdot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,52 +240,8 @@ def sim_mips_maxdot(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization — the retrieval mode of recommender / two-tower models
     where vector magnitude carries signal (cosine deliberately erases
     it, so this is a different ranking, not a cosine variant). Same
-    chunked-probe broadcast + Arrow/BLAS batch scorer as sim_cosine_topk;
-    per-task top-k via the rank window after a map-side scored stream."""
-    emb = _emb(spark, sf_dir)
-    probes = emb.filter(F.col("vec_id") < N_QUERIES)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("dot", T.DoubleType()),
-        ]
-    )
-
-    chunks = []
-    for qids, qm in _probe_chunks(probes, normalize=False):
-        bc = spark.sparkContext.broadcast((qids, qm))
-
-        def score(batches, _bc=bc):
-            bqids, bqm = _bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                m = _to_matrix(pdf["embedding"])
-                dots = m @ bqm.T  # (batch, n_queries)
-                out = _local_topk_frame(
-                    bqids, pdf["vec_id"].to_numpy(), dots, "dot"
-                )
-                if out is not None:
-                    yield out
-
-        chunks.append(
-            emb.select("vec_id", "embedding").mapInPandas(score, out_schema)
-        )
-    if not chunks:
-        chunks = [spark.createDataFrame([], out_schema)]
-    scored = chunks[0]
-    for c in chunks[1:]:
-        scored = scored.unionByName(c)
-    w = W.partitionBy("qid").orderBy(F.desc("dot"), F.asc("vec_id"))
-    return (
-        scored.filter(F.col("vec_id") != F.col("qid"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("qid", "rank", "vec_id")
-        .orderBy("qid", "rank")
-    )
+    house Arrow GEMM scorer and rank window as sim_cosine_topk."""
+    return _dot_topk(spark, sf_dir, "dot", normalize=False)
 
 
 ORACLE_MIPS = f"""
@@ -287,51 +268,30 @@ RANGE_TAU = 0.25
 
 def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range query: every corpus vector within cosine ≥ RANGE_TAU of each
-    probe — the radius-based retrieval mode (vs top-k). Same broadcast-
-    probe + Arrow/BLAS scoring as sim_cosine_topk (chunked probe
-    collection, see :func:`_probe_chunks`); the filter happens
-    map-side so only in-range candidates ever shuffle."""
+    probe — the radius-based retrieval mode (vs top-k). Same house Arrow
+    GEMM scorer as sim_cosine_topk (:func:`_probe_scan`); the filter
+    happens map-side so only in-range candidates ever shuffle."""
     emb = _emb(spark, sf_dir)
-    probes = emb.filter(F.col("vec_id") < N_QUERIES)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("sim_r4", T.DoubleType()),
-        ]
-    )
-
-    chunks = []
-    for qids, qn in _probe_chunks(probes):
-        bc = spark.sparkContext.broadcast((qids, qn))
-
-        def score(batches, _bc=bc):
-            bqids, bqn = _bc.value
-            for pdf in batches:
-                m = _to_matrix(pdf["embedding"])
-                mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-                sims = mn @ bqn.T  # (batch, n_queries)
-                ci, qi = np.nonzero(sims >= RANGE_TAU)
-                vids = pdf["vec_id"].to_numpy()
-                keep = vids[ci] != bqids[qi]
-                yield pd.DataFrame(
-                    {
-                        "qid": bqids[qi[keep]],
-                        "vec_id": vids[ci[keep]],
-                        "sim_r4": np.round(sims[ci[keep], qi[keep]], 4),
-                    }
-                )
-
-        chunks.append(
-            emb.select("vec_id", "embedding").mapInPandas(score, out_schema)
+    def kernel(pdf, qids, qn):
+        sims = _unit_rows(_to_matrix(pdf["embedding"])) @ qn.T
+        ci, qi = np.nonzero(sims >= RANGE_TAU)
+        vids = pdf["vec_id"].to_numpy()
+        keep = vids[ci] != qids[qi]
+        ci, qi = ci[keep], qi[keep]
+        return pd.DataFrame(
+            {
+                "qid": qids[qi],
+                "vec_id": vids[ci],
+                "sim_r4": np.round(sims[ci, qi], 4),
+            }
         )
-    if not chunks:
-        chunks = [spark.createDataFrame([], out_schema)]
-    out = chunks[0]
-    for c in chunks[1:]:
-        out = out.unionByName(c)
-    return out.orderBy("qid", "vec_id")
+
+    return _probe_scan(
+        emb.select("vec_id", "embedding"),
+        emb.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding"),
+        kernel, "qid long, vec_id long, sim_r4 double", prep=_unit_rows,
+    ).orderBy("qid", "vec_id")
 
 
 ORACLE_RANGE_SEARCH = f"""
@@ -506,8 +466,7 @@ def _lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     planes = np.stack(
         [_hyperplanes(EMB_DIM, LSH_PLANES, t) for t in range(LSH_TABLES)]
-    )  # (tables, planes, dim)
-    bc = spark.sparkContext.broadcast(planes)
+    )  # (tables, planes, dim): 40 KB, rides in bucketize's closure
 
     bucket_schema = T.StructType(
         [
@@ -519,14 +478,12 @@ def _lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def bucketize(batches):
-        pl = bc.value
-        n_tables = pl.shape[0]
-        weights = 1 << np.arange(pl.shape[1], dtype=np.int64)
+        weights = 1 << np.arange(LSH_PLANES, dtype=np.int64)
         for pdf in batches:
             m = _to_matrix(pdf["embedding"])
             frames = []
-            for t in range(n_tables):
-                signs = (m @ pl[t].T) > 0
+            for t in range(LSH_TABLES):
+                signs = (m @ planes[t].T) > 0
                 frames.append(
                     pd.DataFrame(
                         {
@@ -817,10 +774,10 @@ def _ivf_structures(spark: SparkSession, sf_dir: str):
         .select("vec_id", "embedding")
         .collect()
     )  # bounded: K centroid vectors
-    cm = np.array([r["embedding"] for r in crows], dtype=np.float64)
-    cn = cm / np.linalg.norm(cm, axis=1, keepdims=True)
+    cn = _unit_rows(
+        np.array([r["embedding"] for r in crows], dtype=np.float64)
+    )
     cids = np.array([r["vec_id"] for r in crows], dtype=np.int64)
-    bc = spark.sparkContext.broadcast((cids, cn))
 
     assign_schema = T.StructType(
         [
@@ -830,12 +787,10 @@ def _ivf_structures(spark: SparkSession, sf_dir: str):
         ]
     )
 
-    def assign(batches):
-        acids, acn = bc.value
+    def assign(batches):  # the K centroids ride in this closure
         for pdf in batches:
-            m = _to_matrix(pdf["embedding"])
-            mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-            nearest = acids[np.argmax(mn @ acn.T, axis=1)]
+            mn = _unit_rows(_to_matrix(pdf["embedding"]))
+            nearest = cids[np.argmax(mn @ cn.T, axis=1)]
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
@@ -854,8 +809,9 @@ def _ivf_structures(spark: SparkSession, sf_dir: str):
         .select("vec_id", "embedding")
         .collect()
     )
-    qm = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
+    qn = _unit_rows(
+        np.array([r["embedding"] for r in qrows], dtype=np.float64)
+    )
     sims = qn @ cn.T
     order = np.argsort(-sims, axis=1)[:, :IVF_NPROBE]
     probes = [
@@ -884,7 +840,8 @@ def sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Centroids are a deterministic sample (vec_id < IVF_CENTROIDS — the
     fixture vectors are i.i.d. random, so seed vectors ARE random
     centroids; production would k-means-refine them, which changes recall,
-    not the dataflow). The centroid set is O(K·d) — bounded, broadcast.
+    not the dataflow). The centroid set is O(K·d) — bounded; it rides
+    in the assignment scorer's closure.
     The corpus never leaves the executors; the shuffle key is the list id.
     The ranking is APPROXIMATE relative to the true top-k (the recall
     pytests + RECALL artifact measure that gap) but deterministic end to
@@ -1799,14 +1756,15 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle, whose query-side LUT is literally the same
     distance CTE as the corpus encoding.
 
-    Scale posture: codebook + LUT broadcast is K·d + N_QUERIES·M·K
-    integers (a few KB); encode+score is ONE map-only Arrow pass over
-    the corpus with per-batch per-query top-k (exact under the total
-    (adc_d2, vec_id) order, so the emitted candidate stream is bounded
-    by batches·N_QUERIES·TOP_K rows, never corpus-sized); the only
-    shuffle is the final window on that bounded stream. At 100 TB the
-    corpus scan reads 8-byte codes instead of 256-byte vectors once the
-    encode pass is materialized."""
+    Scale posture: the house Arrow GEMM scorer (:func:`_probe_scan`)
+    — the codebook and the probes' LUT ride in the scorer's closure
+    (K·d + N_QUERIES·M·K integers, a few KB); encode+score is ONE
+    map-only Arrow pass over the corpus with per-batch per-query top-k
+    (exact under the total (adc_d2, vec_id) order, so the emitted
+    candidate stream is bounded by batches·N_QUERIES·TOP_K rows, never
+    corpus-sized); the only shuffle is the final window on that bounded
+    stream. At 100 TB the corpus scan reads 8-byte codes instead of
+    256-byte vectors once the encode pass is materialized."""
     qdf = _emb(spark, sf_dir).select(
         "vec_id",
         F.expr(
@@ -1825,60 +1783,39 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = np.array([r["qv"] for r in seeds], dtype=np.int64).reshape(
         PQ_K, PQ_M, PQ_SUBDIM
     )  # bounded: PQ_K codeword vectors
-    qrows = qdf.filter(F.col("vec_id") < N_QUERIES).orderBy("vec_id").collect()
-    qm = np.array([r["qv"] for r in qrows], dtype=np.int64).reshape(
-        len(qrows), PQ_M, PQ_SUBDIM
+
+    def lut(qm):
+        # LUT[q, m, k] = Σ_j (query_sub − codeword)² — exact int64
+        q = qm.astype(np.int64).reshape(len(qm), PQ_M, PQ_SUBDIM)
+        return np.ascontiguousarray(
+            ((q[:, None, :, :] - cb[None, :, :, :]) ** 2)
+            .sum(axis=3)
+            .transpose(0, 2, 1)
+        )  # (probes, PQ_M, PQ_K)
+
+    def kernel(pdf, qids, lut_):
+        m = np.array(list(pdf["qv"]), dtype=np.int64).reshape(
+            -1, PQ_M, PQ_SUBDIM
+        )
+        adc = np.zeros((len(m), len(qids)), dtype=np.int64)
+        for sub in range(PQ_M):
+            # encode: nearest codeword per subspace; np.argmin takes
+            # the FIRST min → ties break to the lowest codeword id
+            d = ((m[:, sub, None, :] - cb[None, :, sub, :]) ** 2).sum(
+                axis=2
+            )  # (n, PQ_K)
+            adc += lut_[:, sub, np.argmin(d, axis=1)].T  # (n, probes)
+        q, v, s = _local_topk(
+            qids, pdf["vec_id"].to_numpy(np.int64), adc, TOP_K,
+            descending=False,
+        )
+        return pd.DataFrame({"qid": q, "vec_id": v, "adc_d2": s})
+
+    cand = _probe_scan(
+        qdf.select("vec_id", "qv"),
+        qdf.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "qv"),
+        kernel, "qid long, vec_id long, adc_d2 long", prep=lut,
     )
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    # LUT[q, m, k] = Σ_j (query_sub − codeword)² — exact int64
-    lut = np.ascontiguousarray(
-        ((qm[:, None, :, :] - cb[None, :, :, :]) ** 2)
-        .sum(axis=3)
-        .transpose(0, 2, 1)
-    )  # (N_QUERIES, PQ_M, PQ_K)
-    bc = spark.sparkContext.broadcast((cb, lut, qids))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("adc_d2", T.LongType()),
-        ]
-    )
-
-    def score(batches):
-        cb_, lut_, qids_ = bc.value
-        for pdf in batches:
-            m = np.array(list(pdf["qv"]), dtype=np.int64).reshape(
-                -1, PQ_M, PQ_SUBDIM
-            )
-            n = m.shape[0]
-            adc = np.zeros((len(qids_), n), dtype=np.int64)
-            for sub in range(PQ_M):
-                # encode: nearest codeword per subspace; np.argmin takes
-                # the FIRST min → ties break to the lowest codeword id
-                d = ((m[:, sub, None, :] - cb_[None, :, sub, :]) ** 2).sum(
-                    axis=2
-                )  # (n, PQ_K)
-                codes = np.argmin(d, axis=1)
-                adc += lut_[:, sub, :][:, codes]  # (N_QUERIES, n)
-            vec_ids = pdf["vec_id"].to_numpy(np.int64)
-            frames = []
-            for qi, qid in enumerate(qids_):
-                mask = vec_ids != qid  # self excluded, as in sim_ivf
-                vv, dd = vec_ids[mask], adc[qi][mask]
-                # exact per-batch top-k under the (adc_d2, vec_id) total
-                # order — the global top-k is a subset of the union
-                idx = np.lexsort((vv, dd))[:TOP_K]
-                frames.append(
-                    pd.DataFrame(
-                        {"qid": qid, "vec_id": vv[idx], "adc_d2": dd[idx]}
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    cand = qdf.select("vec_id", "qv").mapInPandas(score, out_schema)
     w = W.partitionBy("qid").orderBy(F.asc("adc_d2"), F.asc("vec_id"))
     return (
         cand.withColumn("rank", F.row_number().over(w))
@@ -1949,48 +1886,32 @@ def sim_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     (d2, vec_id) and vote ties by (votes DESC, label ASC) — total
     orders on both engines, so the full value-hash oracle holds.
 
-    Scale posture: the probe matrix broadcasts ({N_QUERIES}×{EMB_DIM}
-    ints); ONE Arrow mapInPandas pass scores the corpus with a numpy
-    matmul and emits only per-batch per-probe top-k (the candidate
-    stream is batches×{N_QUERIES}×{KNN_K} rows, never corpus-sized);
-    the rank window and the label join run on that bounded stream."""
+    Scale posture: the house Arrow GEMM scorer (:func:`_probe_scan`)
+    — the probe matrix ({N_QUERIES}×{EMB_DIM} ints) rides in the
+    scorer's closure; ONE Arrow mapInPandas pass scores the corpus with
+    a numpy matmul and emits only per-batch per-probe top-k (the
+    candidate stream is batches×{N_QUERIES}×{KNN_K} rows, never
+    corpus-sized); the rank window and the label join run on that
+    bounded stream."""
     qdf = _emb(spark, sf_dir).select(
         "vec_id", "label", F.expr(_KM_QUANT_SQL).alias("qv")
     )
-    qrows = qdf.filter(F.col("vec_id") < N_QUERIES).orderBy("vec_id").collect()
-    qm = np.array([r["qv"] for r in qrows], dtype=np.float64)
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    bc = spark.sparkContext.broadcast((qm, qids))
 
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("d2", T.LongType()),
-        ]
+    def kernel(pdf, qids, qm):
+        # every term of ||x||² + ||q||² − 2x·q is an exact integer in
+        # float64 (the kmeans-assign bound analysis)
+        d2 = _sq_dists(np.array(list(pdf["qv"]), dtype=np.float64), qm)
+        q, v, s = _local_topk(
+            qids, pdf["vec_id"].to_numpy(np.int64), d2, KNN_K,
+            descending=False,
+        )
+        return pd.DataFrame({"qid": q, "vec_id": v, "d2": s.astype(np.int64)})
+
+    cand = _probe_scan(
+        qdf.select("vec_id", "qv"),
+        qdf.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "qv"),
+        kernel, "qid long, vec_id long, d2 long",
     )
-
-    def score(batches):
-        qm_, qids_ = bc.value
-        qn2 = (qm_ * qm_).sum(axis=1)
-        for pdf in batches:
-            m = np.array(list(pdf["qv"]), dtype=np.float64)
-            # ||x−q||² = ||x||² − 2x·q + ||q||² — every term an exact
-            # integer in float64 (the kmeans-assign bound analysis)
-            d2 = (m * m).sum(axis=1, keepdims=True) - 2 * (m @ qm_.T) + qn2
-            vec_ids = pdf["vec_id"].to_numpy(np.int64)
-            frames = []
-            for qi, qid in enumerate(qids_):
-                mask = vec_ids != qid
-                vv, dd = vec_ids[mask], d2[:, qi][mask].astype(np.int64)
-                idx = np.lexsort((vv, dd))[:KNN_K]
-                frames.append(
-                    pd.DataFrame({"qid": qid, "vec_id": vv[idx], "d2": dd[idx]})
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    cand = qdf.select("vec_id", "qv").mapInPandas(score, out_schema)
     w = W.partitionBy("qid").orderBy(F.asc("d2"), F.asc("vec_id"))
     knn = cand.withColumn("rn", F.row_number().over(w)).filter(
         F.col("rn") <= KNN_K

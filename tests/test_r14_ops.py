@@ -19,6 +19,7 @@ import duckdb
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from conftest import normalize_rows
 
@@ -230,29 +231,32 @@ def test_twonn_local_top2_equals_brute(spark, tmp_path):
     assert abs(got["intrinsic_dim_r6"] - round(n / s, 6)) < 1e-9
 
 
-def test_sim_topk_local_cut_matches_brute(spark, tmp_path):
+@pytest.mark.parametrize("metric", ["cosine", "mips"])
+def test_sim_topk_local_cut_matches_brute(spark, tmp_path, metric):
     """The per-batch local top-k cut must not change the global result —
     planted duplicates of a probe vector exercise the self-mask (the
-    self row may never crowd a genuine winner out of the local cut)."""
+    self row may never crowd a genuine winner out of the local cut).
+    Cosine ranks unit rows, MIPS the raw dot product."""
     from spark_dba_spark.operators.similarity import (
         N_QUERIES,
         TOP_K,
         sim_cosine_topk,
+        sim_mips_maxdot,
     )
 
+    build = sim_cosine_topk if metric == "cosine" else sim_mips_maxdot
     rng = np.random.default_rng(11)
     vecs = rng.normal(size=(60, 64))
     vecs[25] = vecs[2]  # duplicate of probe 2: sim == 1.0 neighbor
     _write_embeddings(tmp_path, vecs.tolist())
     got = {
         (r["qid"], r["rank"]): r["vec_id"]
-        for r in sim_cosine_topk(spark, str(tmp_path)).collect()
+        for r in build(spark, str(tmp_path)).collect()
     }
-    m = np.array(
-        [list(v) + [0.0] * 0 for v in vecs], dtype=np.float64
-    ).astype(np.float32).astype(np.float64)  # float32 round-trip
-    mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-    sims = mn @ mn.T
+    m = vecs.astype(np.float32).astype(np.float64)  # float32 round-trip
+    if metric == "cosine":
+        m = m / np.linalg.norm(m, axis=1, keepdims=True)
+    sims = m @ m.T
     for qid in range(N_QUERIES):
         order = sorted(
             (i for i in range(len(vecs)) if i != qid),
@@ -260,8 +264,8 @@ def test_sim_topk_local_cut_matches_brute(spark, tmp_path):
         )[:TOP_K]
         for rank, vid in enumerate(order, 1):
             assert got[(qid, rank)] == vid, (qid, rank)
-    # the duplicate must rank first for probe 2
-    assert got[(2, 1)] == 25
+    if metric == "cosine":  # the duplicate must rank first for probe 2
+        assert got[(2, 1)] == 25
 
 
 def test_gk_certificate_on_planted_ties(spark, tmp_path):
