@@ -179,12 +179,3 @@ def _normalize_events(df: DataFrame) -> DataFrame:
         )
     return df
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (for the SQL front door)."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -28,18 +28,23 @@ its bin's container blocks into one output file (blocks whose writer schema
 matches the output are appended undecoded; others are decoded with schema
 resolution and re-encoded), so records never pass through JVM rows, a
 cache, or a separate count job — the source record count is the sum of the
-copied blocks' header counts. A second job, the decode-based D4 verify,
-reads the output back; it is also the only record-level check of the
-undecoded blocks, so with ``verify_counts=False`` a source block whose
-header count disagrees with its payload is copied unnoticed. Every other case (other formats, layout options,
-the ``binaryFile`` read fallback) declares read→persist→count→coalesce→
-write with the DataFrame API (no shuffle: coalesce is a narrow dependency,
-exactly like the reference's RDD coalesce at :290). Schema evolution falls
-out of passing a reader schema (missing columns → defaults or null, extra
-columns → dropped). At cluster scale the only changes are the tmp/trash
-locations (same filesystem as target for atomic rename) and
-`max_parallel` (how many partition compactions run concurrently against the
-scheduler).
+copied blocks' header counts. The D4 verify runs inside the same tasks:
+each reopens the file it just committed and decodes every record against
+the output schema, and the driver compares the decoded total with the
+source count and checks that the staged folder lists exactly the
+committed files. That read-back is also the only record-level check of
+the undecoded blocks, so with ``verify_counts=False`` a source block
+whose header count disagrees with its payload is copied unnoticed. Every
+other case (other formats, layout options, the ``binaryFile`` read
+fallback) declares read→persist→count→coalesce→write with the DataFrame
+API (no shuffle: coalesce is a narrow dependency, exactly like the
+reference's RDD coalesce at :290); Avro there verifies by the same
+in-task read-back, Parquet and ORC by a Spark count of the staged
+folder. Schema evolution falls out of passing a reader schema (missing
+columns → defaults or null, extra columns → dropped). At cluster scale
+the only changes are the tmp/trash locations (same filesystem as target
+for atomic rename) and `max_parallel` (how many partition compactions
+run concurrently against the scheduler).
 """
 
 from __future__ import annotations
@@ -71,8 +76,9 @@ class CompactionParams:
     compression: str = "snappy"
     target_file_bytes: int = 128 * 1024 * 1024
     max_parallel: int = 4
-    # False also skips the only decode of blocks the avro block copy merges
-    # undecoded (see the module notes).
+    # D4. For avro, the write's own tasks decode each committed file back
+    # (no extra job); False also skips the only decode of blocks the avro
+    # block copy merges undecoded (see the module notes).
     verify_counts: bool = True
     # Extension beyond the reference: cluster rows inside each output file
     # so columnar min/max stats prune at read time (the compactor is the
@@ -230,27 +236,20 @@ def _process_partition(
             log.info(f"rolled back direct-written target {staged} ({reason})", thread)
 
     try:
-        in_count = _write_leaf(spark, params, leaf, staged, schema, n_out)
+        written: dict = {}
+        in_count = _write_leaf(
+            spark, params, leaf, staged, schema, n_out, written
+        )
         log.info(
             f"{leaf}: {n_files} files / {total_bytes} bytes / {in_count} records "
             f"→ {n_out} files",
             thread,
         )
         if params.verify_counts:
-            if params.fmt == "avro":
-                from ..sources.avro_spark import read_avro_folder
-
-                out_count = read_avro_folder(
-                    spark, staged, reader_schema=schema, recursive=False
-                ).count()
-            else:
-                out_count = spark.read.format(params.fmt).load(staged).count()
-            if out_count != in_count:
-                log.error(
-                    f"record count mismatch {in_count} → {out_count} in {staged}",
-                    thread,
-                )
-                _discard_staged("count mismatch")
+            err = _verify_output(spark, fs, params, staged, in_count, written)
+            if err:
+                log.error(err, thread)
+                _discard_staged("verify failed")
                 return "COUNT_MISMATCH"
     except Exception:
         _discard_staged("write or verify raised")
@@ -288,12 +287,42 @@ def _process_partition(
     return "SUCCESS"
 
 
+def _verify_output(
+    spark: SparkSession, fs: FsOps, params: CompactionParams, staged: str,
+    in_count: int, written: dict,
+) -> str | None:
+    """D4 (:292-293): the error when the staged output does not hold
+    ``in_count`` records, else None. For avro the write's tasks already
+    decoded each committed file back (``written``); the staged folder must
+    then list exactly those files. Other formats count the staged folder
+    with Spark."""
+    if params.fmt == "avro":
+        listed = {
+            s.path.rsplit("/", 1)[-1] for s in fs.list_status(staged)
+            if is_valid_data_file(s.path, params.ext)
+        }
+        committed = {f.rsplit("/", 1)[-1] for f in written["files"]}
+        if listed != committed:
+            return (
+                f"{staged} lists {sorted(listed)}, but the write committed "
+                f"{sorted(committed)}"
+            )
+        out_count = written["decoded"]
+    else:
+        out_count = spark.read.format(params.fmt).load(staged).count()
+    if out_count != in_count:
+        return f"record count mismatch {in_count} → {out_count} in {staged}"
+    return None
+
+
 def _write_leaf(
     spark: SparkSession, params: CompactionParams, leaf: str, staged: str,
-    schema, n_out: int,
+    schema, n_out: int, written: dict,
 ) -> int:
     """Write ``leaf`` compacted into ``n_out`` files under ``staged`` and
-    return the source's record count (D4).
+    return the source's record count (D4). An avro write fills
+    ``written`` with what :func:`write_avro_folder` reports, including,
+    with ``verify_counts``, the records its tasks decoded back.
 
     Avro without a layout option is one job: the read's ``n_out`` bins are
     copied block by block, each into one output file, and the count comes
@@ -314,12 +343,11 @@ def _write_leaf(
         if has_block_scan(df) and not (params.sort_by or params.zorder_by):
             # the output schema is the scan's reader schema, so the sink
             # takes its block-copy path
-            stats: dict = {}
             write_avro_folder(
                 df, staged, schema=schema, codec=params.compression,
-                stats=stats,
+                stats=written, verify=params.verify_counts,
             )
-            return stats["records"]
+            return written["records"]
     else:
         reader = spark.read.format(params.fmt)
         if schema is not None:
@@ -346,7 +374,8 @@ def _write_leaf(
             # s3/registered) with a task-attempt commit protocol — no
             # spark-avro jar needed.
             write_avro_folder(
-                out_df, staged, schema=schema, codec=params.compression
+                out_df, staged, schema=schema, codec=params.compression,
+                stats=written, verify=params.verify_counts,
             )
         else:
             (

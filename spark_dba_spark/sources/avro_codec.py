@@ -83,14 +83,6 @@ def _fields(schema: dict) -> list[dict]:
     return schema["fields"]
 
 
-def schema_name(schema: Any) -> str | None:
-    if isinstance(schema, dict):
-        return schema.get("name")
-    if isinstance(schema, str) and schema not in PRIMITIVES:
-        return schema
-    return None
-
-
 _COMPLEX = {"record", "error", "enum", "fixed", "array", "map"}
 
 

@@ -1032,11 +1032,20 @@ def write_avro_folder(
     block_bytes: int | None = None,
     partition_by: list[str] | None = None,
     stats: dict | None = None,
+    verify: bool = False,
 ) -> int:
     """Write ``df`` as one Avro container file per partition under ``path``.
     Returns the number of files written. File count is controlled upstream
     (``df.coalesce(n)``), exactly like the reference's D3+D5 pipeline.
     ``stats``, when given, receives ``records``: the number written.
+
+    ``verify``: each task reopens the file it just committed, through the
+    same filesystem, and decodes every record against the output schema
+    with :mod:`avro_codec` (:func:`_read_back`); ``stats`` then also
+    receives ``decoded``, the records so read, and ``files``, the paths
+    the tasks committed. The read-back runs inside the write's tasks, so
+    it adds no job. A block whose header count disagrees with its payload
+    raises there and fails the write.
 
     Block copy: when ``df`` is a frame :func:`read_avro_folder` returned
     untransformed (:func:`has_block_scan`) and the output schema has the
@@ -1053,7 +1062,7 @@ def write_avro_folder(
     the sum of the source block headers' record counts. Undecoded blocks
     are trusted: a source block whose header count disagrees with its
     payload (the null and deflate codecs carry no checksum) is merged as
-    is, and only a decode of the output finds it.
+    is, and only a decode of the output finds it (``verify``).
 
     ``mode``: 'append' (default — new uniquely-named files next to any
     existing), 'error' (fail if the folder already has .avro files),
@@ -1107,9 +1116,11 @@ def write_avro_folder(
     fs.create_dir(root, recursive=True)
     run_token = uuid.uuid4().hex[:12]
 
-    out_schema = T.StructType(
-        [T.StructField("file", T.StringType()), T.StructField("n", T.LongType())]
-    )
+    out_schema = T.StructType([
+        T.StructField("file", T.StringType()),
+        T.StructField("n", T.LongType()),
+        T.StructField("decoded", T.LongType()),
+    ])
 
     u_conv = _encode_converter(avro_schema)
 
@@ -1143,9 +1154,10 @@ def write_avro_folder(
             # still safe because both attempts commit IDENTICAL content
             # to the same final name, not because the move is atomic.
             fs.move(tmp, final)
-            yield pd.DataFrame({"file": [final], "n": [n]})
+            decoded = _read_back(fs, final, avro_schema) if verify else 0
+            yield pd.DataFrame({"file": [final], "n": [n], "decoded": [decoded]})
         else:
-            yield pd.DataFrame({"file": [], "n": []})
+            yield pd.DataFrame({"file": [], "n": [], "decoded": []})
 
     if scan is None:
         job = df.mapInPandas(write_partition, out_schema)
@@ -1155,8 +1167,10 @@ def write_avro_folder(
                 _copy_bins, src_fs=scan.fs, out_fs=fs, root=root,
                 run_token=run_token, schema=avro_schema, codec=codec,
                 block_records=block_records, block_bytes=block_bytes,
+                verify=verify,
             ),
-            "file string, n long, path array<string>, start array<long>",
+            "file string, n long, decoded long, path array<string>, "
+            "start array<long>",
         )
     try:
         summary = job.collect()
@@ -1180,23 +1194,28 @@ def write_avro_folder(
                 f"block copy into {path} walked {len(walked)} splits, not "
                 f"each of the {sum(map(len, scan.bins))} planned exactly once"
             )
+    files = [r["file"] for r in summary if r["file"]]
     if stats is not None:
         stats["records"] = sum(r["n"] for r in summary)
-    return sum(1 for r in summary if r["file"])
+        if verify:
+            stats["files"] = files
+            stats["decoded"] = sum(r["decoded"] for r in summary)
+    return len(files)
 
 
 def _copy_bins(
     batches: Iterator[pd.DataFrame], *, src_fs, out_fs, root: str,
     run_token: str, schema: Any, codec: str, block_records: int,
-    block_bytes: int | None,
+    block_bytes: int | None, verify: bool = False,
 ) -> Iterator[pd.DataFrame]:
     """``mapInPandas`` body of the block-copy write (see
     :func:`write_avro_folder`): each bin row of :func:`read_avro_folder`'s
     plan becomes one container ``part-<bin>-<run>.avro`` under ``root``,
     committed by the same attempt-unique temp + rename as the record path.
     Yields one row per bin: the file (None when its splits held no
-    record), the records it took from block headers, and the splits
-    walked."""
+    record), the records it took from block headers, the records
+    :func:`_read_back` decoded from the committed file (0 unless
+    ``verify``), and the splits walked."""
     from pyspark import TaskContext
 
     ctx = TaskContext.get()
@@ -1215,15 +1234,31 @@ def _copy_bins(
                 (blk for sp in splits for blk in _split_blocks(src_fs, *sp)),
                 out_fs, tmp, schema, codec, block_records, block_bytes,
             )
+            decoded = 0
             if n:
                 # rename-commit; object-store caveat as in write_avro_folder
                 out_fs.move(tmp, final)
+                if verify:
+                    decoded = _read_back(out_fs, final, schema)
             yield pd.DataFrame({
                 "file": [final if n else None],
                 "n": [n],
+                "decoded": [decoded],
                 "path": [[p for p, _, _ in splits]],
                 "start": [[lo for _, lo, _ in splits]],
             })
+
+
+def _read_back(fs, path: str, schema: Any) -> int:
+    """Records in the container at ``path``, counted by decoding each one
+    against ``schema`` block by block (memory bounded by one block). Every
+    sync marker is checked, and a block whose header count disagrees with
+    its payload raises."""
+    return sum(
+        sum(1 for _ in ac.decode_block(
+            ac._decompress(codec, payload), count, ws, schema))
+        for ws, codec, count, payload in _split_blocks(fs, path, 0, 1 << 62)
+    )
 
 
 def _write_blocks(

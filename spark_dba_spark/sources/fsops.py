@@ -3,16 +3,19 @@
 Python re-expression of the reference's HDFS utility suite
 (`hdfsutil/HadoopFileSystemOperation.scala:19-197`,
 `hdfsutil/HDFSAvroOperations.scala:19-136`,
-`hdfsutil/HDFSStringUtil.scala:13-28` — see SURVEY.md §2.2 M1-M25), built on
-the JVM Hadoop FileSystem through py4j so the same code path works on
-file://, hdfs:// and (with rename caveats) object stores. These ops are
-integral to the compaction job's transactional semantics (snapshot
-consistency check, trash-then-swap commit).
+`hdfsutil/HDFSStringUtil.scala:13-28` — see SURVEY.md §2.2 M1-M25). These
+ops are integral to the compaction job's transactional semantics
+(snapshot consistency check, trash-then-swap commit).
 
 The module also holds the engine's pyarrow filesystem dispatch
 (:func:`resolve_fs`): the Avro read/write does its file I/O through it, on
-the driver and in the tasks, and :func:`files_size` states scan files with
-it.
+the driver and in the tasks, :func:`files_size` states scan files with
+it, and :class:`FsOps` reads its metadata through it (existence, listings,
+snapshots, path resolution): one ``get_file_info`` call per listing, with
+no py4j round trip per entry. Mutations (rename, mkdirs, delete, create)
+go through the JVM Hadoop FileSystem over py4j, and so does the read side
+for any scheme ``resolve_fs`` cannot reach, so the same code works on
+file://, hdfs:// and (with rename caveats) object stores.
 """
 
 from __future__ import annotations
@@ -57,66 +60,148 @@ class FileStat:
     is_dir: bool = False
 
 
+def _hadoop_stat(st) -> FileStat:
+    """A Hadoop ``FileStatus`` proxy as a FileStat (a py4j round trip per
+    attribute)."""
+    return FileStat(
+        st.getPath().toUri().getPath(),
+        int(st.getLen()),
+        int(st.getModificationTime()),
+        bool(st.isDirectory()),
+    )
+
+
+def _arrow_stat(info, root: str, comp: str) -> FileStat:
+    """A pyarrow ``FileInfo`` under the in-fs path ``root`` as a FileStat
+    whose path sits under the Hadoop path component ``comp``, with
+    Hadoop's units: milliseconds, and length 0 for a directory."""
+    import pyarrow.fs as pafs
+
+    is_dir = info.type == pafs.FileType.Directory
+    return FileStat(
+        comp.rstrip("/") + info.path[len(root.rstrip("/")):] or "/",
+        0 if is_dir else int(info.size or 0),
+        (info.mtime_ns or 0) // 1_000_000,
+        is_dir,
+    )
+
+
 class FsOps:
-    """Hadoop FileSystem wrapper (driver-side metadata ops via py4j)."""
+    """Driver-side filesystem operations.
+
+    Read-side metadata (predicates, listings, snapshots, M22 path
+    resolution) goes through the pyarrow filesystem :func:`resolve_fs`
+    gives the path: one ``get_file_info`` call per predicate or listing
+    and no py4j round trip. Where ``resolve_fs`` has no filesystem for the
+    scheme, the JVM Hadoop FileSystem serves them (:meth:`_arrow` chooses,
+    in one place). Mutations (rename, mkdirs, delete, create) always go
+    through Hadoop. Paths come back as Hadoop path components (scheme and
+    authority dropped), whichever side listed them."""
 
     def __init__(self, spark: SparkSession):
         self._spark = spark
         self._jvm = spark._jvm
         self._conf = spark._jsc.hadoopConfiguration()
+        # Each attribute step through a py4j JVM view is a round trip:
+        # resolve the Path class once, not on every call.
+        self._Path = self._jvm.org.apache.hadoop.fs.Path
+        # A bare path names fs.defaultFS, which pyarrow serves only when it
+        # is the local filesystem.
+        self._local_default = self._conf.get(
+            "fs.defaultFS", "file:///"
+        ).startswith("file:")
 
     def _path(self, p: str):
-        return self._jvm.org.apache.hadoop.fs.Path(p)
+        return self._Path(p)
 
     def _fs(self, p: str):
         return self._path(p).getFileSystem(self._conf)
 
+    def _arrow(self, p: str):
+        """``(pyarrow FileSystem, in-fs path, Hadoop path component)`` for
+        ``p``, or None when Hadoop must serve it: ``resolve_fs`` has no
+        filesystem for its scheme, or ``p`` is a bare path and
+        ``fs.defaultFS`` is not local."""
+        if "://" not in p:
+            if not self._local_default:
+                return None
+            import pyarrow.fs as pafs
+
+            comp = os.path.abspath(_uri_path_component(p))
+            return pafs.LocalFileSystem(), comp, comp
+        try:
+            fs, root = resolve_fs(p)
+        except ValueError:
+            return None
+        return fs, root.rstrip("/") or root, _uri_path_component(p).rstrip("/") or "/"
+
+    def _stat(self, p: str) -> FileStat | None:
+        """``p``'s own FileStat, None when nothing is there."""
+        arrow = self._arrow(p)
+        if arrow is None:
+            fs, jp = self._fs(p), self._path(p)
+            return _hadoop_stat(fs.getFileStatus(jp)) if fs.exists(jp) else None
+        import pyarrow.fs as pafs
+
+        fs, root, comp = arrow
+        info = fs.get_file_info(root)
+        if info.type == pafs.FileType.NotFound:
+            return None
+        return _arrow_stat(info, root, comp)
+
+    def _listing(self, p: str, recursive: bool) -> list[FileStat]:
+        """Children of ``p`` (every file below it when ``recursive``,
+        directories omitted, as Hadoop's ``listFiles``), sorted by path. A
+        file lists as itself; a missing path raises."""
+        arrow = self._arrow(p)
+        if arrow is None:
+            fs, jp = self._fs(p), self._path(p)
+            if recursive:
+                out, it = [], fs.listFiles(jp, True)
+                while it.hasNext():
+                    out.append(_hadoop_stat(it.next()))
+            else:
+                out = [_hadoop_stat(st) for st in fs.listStatus(jp)]
+        else:
+            import pyarrow.fs as pafs
+
+            fs, root, comp = arrow
+            try:
+                infos = fs.get_file_info(pafs.FileSelector(root, recursive=recursive))
+            except NotADirectoryError:
+                infos = [fs.get_file_info(root)]
+            out = [_arrow_stat(i, root, comp) for i in infos]
+            if recursive:
+                out = [s for s in out if not s.is_dir]
+        return sorted(out, key=lambda s: s.path)
+
     # -- predicates (M19) --------------------------------------------------
     def exists(self, p: str) -> bool:
-        return self._fs(p).exists(self._path(p))
+        return self._stat(p) is not None
 
     def is_dir(self, p: str) -> bool:
-        fs = self._fs(p)
-        return fs.exists(self._path(p)) and fs.getFileStatus(self._path(p)).isDirectory()
+        st = self._stat(p)
+        return st is not None and st.is_dir
 
     def is_file(self, p: str) -> bool:
-        fs = self._fs(p)
-        return fs.exists(self._path(p)) and fs.getFileStatus(self._path(p)).isFile()
+        st = self._stat(p)
+        return st is not None and not st.is_dir
 
     # -- listings ----------------------------------------------------------
     def list_status(self, p: str) -> list[FileStat]:
         """Raw child listing as FileStats (M12)."""
-        out = []
-        for st in self._fs(p).listStatus(self._path(p)):
-            out.append(
-                FileStat(
-                    st.getPath().toUri().getPath(),
-                    int(st.getLen()),
-                    int(st.getModificationTime()),
-                    bool(st.isDirectory()),
-                )
-            )
-        return sorted(out, key=lambda s: s.path)
+        return self._listing(p, recursive=False)
 
     def list_visible_status(self, p: str) -> list[FileStat]:
         """Non-hidden children (M11)."""
         return [s for s in self.list_status(p) if not is_ignore_file(s.path)]
 
     def list_files_recursive(self, p: str) -> list[FileStat]:
-        """Recursive file listing (M14). NameNode-bound on huge trees —
-        the reference flags this as its own perf hazard."""
-        out = []
-        it = self._fs(p).listFiles(self._path(p), True)
-        while it.hasNext():
-            st = it.next()
-            out.append(
-                FileStat(
-                    st.getPath().toUri().getPath(),
-                    int(st.getLen()),
-                    int(st.getModificationTime()),
-                )
-            )
-        return sorted(out, key=lambda s: s.path)
+        """Recursive file listing (M14): one ``get_file_info`` call on the
+        pyarrow side; on the Hadoop side, several py4j round trips per
+        file. NameNode-bound on huge trees either way — the reference
+        flags this as its own perf hazard."""
+        return self._listing(p, recursive=True)
 
     def list_leaf_data_folders(self, root: str, ext: str) -> list[str]:
         """Distinct parent dirs of every valid data file under root —
@@ -184,11 +269,10 @@ class FsOps:
         surface."""
         name = local_path.rstrip("/").rsplit("/", 1)[-1]
         dest = target_folder.rstrip("/") + "/" + name
-        fs = self._fs(target_folder)
-        if fs.exists(self._path(dest)) and not overwrite:
+        if self.exists(dest) and not overwrite:
             raise FileExistsError(dest)
         self.mkdirs(target_folder)
-        fs.copyFromLocalFile(
+        self._fs(target_folder).copyFromLocalFile(
             False,  # keep the local source
             overwrite,
             self._path(local_path),
@@ -279,11 +363,18 @@ class FsOps:
             stream.close()
 
     def resolved_path(self, p: str) -> str:
-        """Scheme-independent resolved path component (M22): qualifies the
-        path against its FileSystem and follows symlinks via
-        ``fs.resolvePath`` (HadoopFileSystemOperation.scala:173-180), so
-        hdfs://nn/path and /path compare equal. Falls back to qualification
-        only when the path does not exist yet."""
+        """Scheme-independent resolved path component (M22,
+        HadoopFileSystemOperation.scala:173-180): the path qualified
+        against its filesystem, so hdfs://nn/path, file:///path and /path
+        compare equal. On the pyarrow side that is the absolute path
+        component, which is what Hadoop's ``resolvePath`` returns on the
+        local filesystem (it does not follow a local symlink either). The
+        Hadoop fallback still calls ``fs.resolvePath``, which follows
+        symlinks where the filesystem has them, and only qualifies a path
+        that does not exist yet."""
+        arrow = self._arrow(p)
+        if arrow is not None:
+            return arrow[2]
         jp = self._path(p)
         fs = self._fs(p)
         try:

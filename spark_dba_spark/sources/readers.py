@@ -71,15 +71,6 @@ def read_csv(
     )
 
 
-def read_json(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str | None = None,
-    **options,
-) -> DataFrame:
-    return read_folder(spark, path, fmt="json", schema=schema, **options)
-
-
 def json_infer_roundtrip(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Record→JSON map + schema-inferred re-read — D6 parity with the
     reference's TemplateApp (`TemplateApp.scala:62-64`: avro record →

@@ -673,12 +673,11 @@ def test_block_copy_decodes_no_record(tmp_path, monkeypatch):
 
 
 def test_avro_compaction_runs_write_and_verify_only(spark, tmp_path, monkeypatch):
-    """Structural guard: compacting one avro leaf runs one write job plus
-    the verify's count, so no separate read+count job can come back. The
-    verify is measured on its own because AQE submits a count's shuffle
-    stage as a job of its own."""
+    """Structural guard: compacting one avro leaf runs exactly one Spark
+    job, the fused write whose tasks also read their output back, so
+    neither a separate read+count job nor a separate verify job can come
+    back."""
     import spark_dba_spark.plans.compact as cm
-    from spark_dba_spark.sources.avro_spark import read_avro_folder
 
     src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
     write_tiny_avro_leaf(src, n_files=6)
@@ -692,15 +691,55 @@ def test_avro_compaction_runs_write_and_verify_only(spark, tmp_path, monkeypatch
     monkeypatch.setattr(cm, "_process_partition", in_group)
     res = compact(spark, CompactionParams(source=src, target=tgt, file_count=2, fmt="avro"))
     assert res.partitions == {"/": "SUCCESS"}, res.errors
-    sc.setJobGroup("guard-verify", "verify")
+    assert len(sc.statusTracker().getJobIdsForGroup("guard-compact")) == 1
+
+
+def _py4j_round_trips(monkeypatch, fn) -> int:
+    """py4j commands the driver sends, from any thread, while ``fn`` runs.
+    Memory commands are not counted: py4j sends them to release Java
+    proxies whenever Python's garbage collector gets to them, in bursts
+    that belong to whatever ran before."""
+    import itertools
+
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+    from py4j.java_gateway import GatewayConnection
+
+    sent = itertools.count()
+    for cls in (ClientServerConnection, GatewayConnection):
+        orig = cls.send_command
+
+        def counted(self, command, _orig=orig, **kw):
+            if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+                next(sent)
+            return _orig(self, command, **kw)
+
+        monkeypatch.setattr(cls, "send_command", counted)
     try:
-        read_avro_folder(spark, tgt, reader_schema=AVRO_SCHEMA, recursive=False).count()
+        fn()
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    verify_jobs = len(tracker.getJobIdsForGroup("guard-verify"))
-    assert verify_jobs >= 1
-    assert len(tracker.getJobIdsForGroup("guard-compact")) == 1 + verify_jobs
+        monkeypatch.undo()
+    return next(sent)
+
+
+def test_compaction_round_trips_flat_in_file_count(spark, tmp_path, monkeypatch):
+    """A compaction's py4j round trips do not grow with the leaf's file
+    count: FsOps lists and stats through pyarrow and the verify decodes
+    inside the write's tasks. When FsOps listed through py4j, a 10-file
+    leaf took about 1,300 round trips and a 200-file leaf about 10,400."""
+
+    def run(name: str, n_files: int) -> None:
+        src = str(tmp_path / f"src_{name}")
+        write_tiny_avro_leaf(src, n_files=n_files, rows_per_file=10)
+        res = compact(spark, CompactionParams(
+            source=src, target=str(tmp_path / f"tgt_{name}"), file_count=2,
+            fmt="avro"))
+        assert res.partitions == {"/": "SUCCESS"}, res.errors
+
+    run("warm", 3)  # first-call costs (class lookups, worker start) go here
+    few = _py4j_round_trips(monkeypatch, lambda: run("few", 10))
+    many = _py4j_round_trips(monkeypatch, lambda: run("many", 200))
+    assert abs(many - few) < 100, (few, many)
 
 
 def test_failed_direct_write_rolls_back_target(spark, tmp_path):
@@ -749,4 +788,30 @@ def test_block_copy_miscounted_block_fails_verify(spark, tmp_path, delta):
     assert res.partitions == {"/": "EXCEPTION"}
     if delta < 0:
         assert "left in a block" in " ".join(res.errors)
+    assert not tgt.exists()
+
+
+def test_stray_output_file_fails_verify(spark, tmp_path, monkeypatch):
+    """The verify covers the whole staged folder, not only the files the
+    write committed: an extra container that appears there before the
+    verify makes the leaf COUNT_MISMATCH, and the direct-written target is
+    rolled back."""
+    from spark_dba_spark.sources import avro_codec as ac
+    from spark_dba_spark.sources import avro_spark as asp
+
+    src, tgt = tmp_path / "src", tmp_path / "tgt"
+    write_tiny_avro_leaf(str(src), n_files=4)
+    orig = asp.write_avro_folder
+
+    def write_then_stray(df, path, *a, **k):
+        n = orig(df, path, *a, **k)
+        stray = [{"id": -1 - i, "name": "stray"} for i in range(5)]
+        (tmp_path / "tgt" / "stray.avro").write_bytes(
+            ac.write_container(stray, AVRO_SCHEMA))
+        return n
+
+    monkeypatch.setattr(asp, "write_avro_folder", write_then_stray)
+    res = compact(spark, CompactionParams(
+        source=str(src), target=str(tgt), file_count=2, fmt="avro"))
+    assert res.partitions == {"/": "COUNT_MISMATCH"}, res.errors
     assert not tgt.exists()
