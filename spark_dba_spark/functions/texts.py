@@ -49,16 +49,3 @@ def char_shingles(col: str = "text", k: int = 16) -> Column:
         f"ELSE array({col}) END)"
     )
     return F.expr(expr)
-
-
-def sql_word_ngrams(col: str = "text", n: int = 3) -> str:
-    """DuckDB rendering of word_ngrams (1-indexed list slicing)."""
-    ws = f"string_split({col}, ' ')"
-    gram = " || ' ' || ".join(f"ws[i + {j}]" for j in range(n))
-    return (
-        f"(SELECT list(DISTINCT g) FROM ("
-        f"SELECT CASE WHEN len({ws}) >= {n} THEN {gram} ELSE {col} END AS g "
-        f"FROM (SELECT {ws} AS ws), "
-        f"LATERAL unnest(generate_series(1, greatest(len(ws) - {n} + 1, 1))) AS t(i)"
-        f"))"
-    )

@@ -1339,15 +1339,22 @@ def stats_friedman_daily_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (day × type) aggregate with decimal map-side partials;
     every later frame is calendar×alphabet-bounded, including the
     in-day ranking windows."""
-    ev = catalog.load(spark, sf_dir, "events").select(
+    return assemble_friedman(
+        friedman_grain(catalog.load(spark, sf_dir, "events"))
+    )
+
+
+def friedman_grain(events: DataFrame) -> DataFrame:
+    """The (day, event_type, s) exact-decimal cells, shared by the batch
+    op and streaming/jobs.run_friedman_stream."""
+    ev = events.select(
         F.expr(f"({_US}) div {_DAY_US}").alias("day"),
         "event_type",
         "value",
     )
-    cells = ev.groupBy("day", "event_type").agg(
+    return ev.groupBy("day", "event_type").agg(
         F.sum(F.col("value").cast("decimal(25,6)")).alias("s")
     )
-    return assemble_friedman(cells)
 
 
 def assemble_friedman(cells: DataFrame) -> DataFrame:
@@ -1874,11 +1881,14 @@ def ev_hurst_variance_plot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one day-grain aggregate of the fact stream; everything
     after is ≤ span/m rows per scale — calendar-bounded."""
-    ev = catalog.load(spark, sf_dir, "events").select(
-        F.expr(f"({_US}) div {_DAY_US}").alias("day")
-    )
-    daily = ev.groupBy("day").agg(F.count("*").cast("long").alias("x"))
-    return assemble_hurst(daily)
+    return assemble_hurst(hurst_grain(catalog.load(spark, sf_dir, "events")))
+
+
+def hurst_grain(events: DataFrame) -> DataFrame:
+    """The (day, x) daily event counts, shared by the batch op and
+    streaming/jobs.run_hurst_stream."""
+    ev = events.select(F.expr(f"({_US}) div {_DAY_US}").alias("day"))
+    return ev.groupBy("day").agg(F.count("*").cast("long").alias("x"))
 
 
 def assemble_hurst(daily: DataFrame) -> DataFrame:
@@ -2444,15 +2454,22 @@ def ev_max_drawdown_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle to (type, day) grain — day-grain state is
     bounded by the calendar horizon, so the ordered window runs over
     ~30..3650 rows per type regardless of SF."""
-    ev = catalog.load(spark, sf_dir, "events").select(
+    return assemble_max_drawdown(
+        max_drawdown_grain(catalog.load(spark, sf_dir, "events"))
+    )
+
+
+def max_drawdown_grain(events: DataFrame) -> DataFrame:
+    """The (event_type, day, dv) exact micro-unit daily totals, shared by
+    the batch op and streaming/jobs.run_max_drawdown_stream."""
+    ev = events.select(
         "event_type",
         F.to_date("ts").alias("day"),
         F.expr("cast(floor(value * 1000000 + 0.5) as bigint)").alias("v_us"),
     )
-    daily = ev.groupBy("event_type", "day").agg(
+    return ev.groupBy("event_type", "day").agg(
         F.sum("v_us").cast("long").alias("dv")
     )
-    return assemble_max_drawdown(daily)
 
 
 def assemble_max_drawdown(daily: DataFrame) -> DataFrame:
@@ -4444,14 +4461,17 @@ def stats_kuiper_hour_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 0, read through the qrem split over 24N.
 
     Scale: (type × 24) cells after one map-side-combinable rollup."""
+    return assemble_kuiper(kuiper_grain(catalog.load(spark, sf_dir, "events")))
+
+
+def kuiper_grain(events: DataFrame) -> DataFrame:
+    """The (event_type, h, c) hour-of-day clock cells, shared by the batch
+    op and streaming/jobs.run_kuiper_hour_stream."""
     hr = f"(({_US}) div 3600000000) % 24"
-    ev = catalog.load(spark, sf_dir, "events").select(
-        "event_type", F.expr(hr).cast("int").alias("h")
-    )
-    by = ev.groupBy("event_type", "h").agg(
+    ev = events.select("event_type", F.expr(hr).cast("int").alias("h"))
+    return ev.groupBy("event_type", "h").agg(
         F.count("*").cast("long").alias("c")
     )
-    return assemble_kuiper(by)
 
 
 def assemble_kuiper(by: DataFrame) -> DataFrame:
@@ -6008,14 +6028,19 @@ def ev_capacity_shed_whatif(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: (hour × type) state after one shuffle; everything else is
     hour-grain."""
-    hr = f"({_US}) div 3600000000"
-    ev = catalog.load(spark, sf_dir, "events").select(
-        F.expr(hr).alias("hr"), "event_type"
+    return assemble_capacity_shed(
+        capacity_shed_grain(catalog.load(spark, sf_dir, "events"))
     )
-    ht = ev.groupBy("hr", "event_type").agg(
+
+
+def capacity_shed_grain(events: DataFrame) -> DataFrame:
+    """The (hr, event_type, c) hourly load ledger, shared by the batch op
+    and streaming/jobs.run_capacity_shed_stream."""
+    hr = f"({_US}) div 3600000000"
+    ev = events.select(F.expr(hr).alias("hr"), "event_type")
+    return ev.groupBy("hr", "event_type").agg(
         F.count("*").cast("long").alias("c")
     )
-    return assemble_capacity_shed(ht)
 
 
 def assemble_capacity_shed(ht: DataFrame) -> DataFrame:

@@ -3974,8 +3974,16 @@ def mm_chunk_cdc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: map-side HOFs on pinned partitions; one explode bounded by
     total bytes / expected chunk length; one shuffle on media_type
     with a distinct-count over chunk hashes."""
-    chunks = cdc_chunks(_assets_curation(spark, sf_dir))
     return assemble_chunk_cdc_profile(
+        *chunk_cdc_grains(cdc_chunks(_assets_curation(spark, sf_dir)))
+    )
+
+
+def chunk_cdc_grains(chunks: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The (by_hash, by_asset) pre-aggregations of the CDC profile over
+    ``cdc_chunks`` rows, shared by the batch op and
+    streaming/jobs.run_chunk_cdc_stream (which sinks each one)."""
+    return (
         chunks.groupBy("media_type", "chunk_hash").agg(
             F.count("*").cast("long").alias("n_occurrences"),
             # identical hash => identical content => identical length;
@@ -6814,15 +6822,22 @@ def ev_error_rate_by_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared with ``streaming.jobs.run_error_rate_by_load_stream``
     (hour-grain complete-mode stream; stream == batch pytest-pinned),
     so the oracle gating this form transitively gates the stream."""
-    ev = _events(spark, sf_dir).select(
+    return assemble_error_rate_by_load(
+        error_rate_by_load_grain(_events(spark, sf_dir))
+    )
+
+
+def error_rate_by_load_grain(events: DataFrame) -> DataFrame:
+    """The (hr, n_events, n_errors) hour grain, shared by the batch op
+    and streaming/jobs.run_error_rate_by_load_stream."""
+    ev = events.select(
         F.expr(f"({_US}) div 3600000000").alias("hr"),
         (F.col("event_type") == "error").cast("long").alias("is_err"),
     )
-    hours = ev.groupBy("hr").agg(
+    return ev.groupBy("hr").agg(
         F.count("*").cast("long").alias("n_events"),
         F.sum("is_err").cast("long").alias("n_errors"),
     )
-    return assemble_error_rate_by_load(hours)
 
 
 def assemble_error_rate_by_load(hours: DataFrame) -> DataFrame:
@@ -9570,15 +9585,20 @@ def ev_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     window runs over the DAILY frame (calendar-bounded — ~365
     rows/year) with a RANGE frame, so calendar gaps are handled and
     the fact stream never enters a window."""
-    ev = _events(spark, sf_dir).select(
+    return assemble_slo_burn(slo_burn_grain(_events(spark, sf_dir)))
+
+
+def slo_burn_grain(events: DataFrame) -> DataFrame:
+    """The (day, n, e) daily error ledger, shared by the batch op and
+    streaming/jobs.run_slo_burn_stream."""
+    ev = events.select(
         F.expr(f"({_US}) div 86400000000").alias("day"),
         (F.col("event_type") == "error").cast("long").alias("is_err"),
     )
-    daily = ev.groupBy("day").agg(
+    return ev.groupBy("day").agg(
         F.count("*").cast("long").alias("n"),
         F.sum("is_err").cast("long").alias("e"),
     )
-    return assemble_slo_burn(daily)
 
 
 def assemble_slo_burn(daily: DataFrame) -> DataFrame:
@@ -11788,14 +11808,21 @@ def ev_type_mix_drift_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the fact stream reduces to (week, type) counts
     (calendar×alphabet-bounded); the consecutive-week join and argmax
     run on that bounded frame."""
-    ev = _events(spark, sf_dir).select(
+    return assemble_type_mix_drift(
+        type_mix_drift_grain(_events(spark, sf_dir))
+    )
+
+
+def type_mix_drift_grain(events: DataFrame) -> DataFrame:
+    """The (wek, event_type, x) weekly counts, shared by the batch op and
+    streaming/jobs.run_type_mix_drift_stream."""
+    ev = events.select(
         F.expr(f"(({_US}) div 86400000000) div 7").alias("wek"),
         "event_type",
     )
-    wt = ev.groupBy("wek", "event_type").agg(
+    return ev.groupBy("wek", "event_type").agg(
         F.count("*").cast("long").alias("x")
     )
-    return assemble_type_mix_drift(wt)
 
 
 def assemble_type_mix_drift(wt: DataFrame) -> DataFrame:

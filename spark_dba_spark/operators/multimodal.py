@@ -1593,14 +1593,9 @@ def mm_payload_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     assets = _assets(spark, sf_dir).repartition(
         max(spark.sparkContext.defaultParallelism, 16), "doc_id"
     )
-    bands = payload_byte_bands(assets)
-    tot = bands.groupBy("media_type").agg(
-        F.count("*").cast("long").alias("n_total")
+    return assemble_byte_histogram(
+        *byte_histogram_grains(payload_byte_bands(assets))
     )
-    per_band = bands.groupBy("media_type", "band").agg(
-        F.count("*").cast("long").alias("n_bytes")
-    )
-    return assemble_byte_histogram(per_band, tot)
 
 
 def payload_byte_bands(assets: DataFrame) -> DataFrame:
@@ -1627,6 +1622,20 @@ def payload_byte_bands(assets: DataFrame) -> DataFrame:
                 " as int) div 16)"
             )
         ).alias("band"),
+    )
+
+
+def byte_histogram_grains(bands: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The (per_band, tot) counts over ``payload_byte_bands`` rows, shared
+    by the batch histogram and streaming/jobs.run_byte_histogram_stream
+    (which sinks each one)."""
+    return (
+        bands.groupBy("media_type", "band").agg(
+            F.count("*").cast("long").alias("n_bytes")
+        ),
+        bands.groupBy("media_type").agg(
+            F.count("*").cast("long").alias("n_total")
+        ),
     )
 
 
@@ -2107,10 +2116,9 @@ def mm_byte_delta_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     assets = _assets(spark, sf_dir).repartition(
         max(spark.sparkContext.defaultParallelism, 16), "doc_id"
     )
-    bands = byte_delta_bands(assets)
-    cnt = bands.groupBy("media_type", "band").agg(
-        F.count("*").alias("n_deltas")
-    ).localCheckpoint(eager=True)  # bounded cells; feeds totals + shares
+    cnt = byte_delta_cells(byte_delta_bands(assets)).localCheckpoint(
+        eager=True
+    )  # bounded cells; feeds totals + shares
     tot = cnt.groupBy("media_type").agg(F.sum("n_deltas").alias("n_total"))
     return assemble_byte_delta_profile(cnt, tot)
 
@@ -2147,6 +2155,15 @@ def byte_delta_bands(assets: DataFrame) -> DataFrame:
                 "else length(bin(delta)) end"
             ).alias("band"),
         )
+    )
+
+
+def byte_delta_cells(bands: DataFrame) -> DataFrame:
+    """The (media_type, band, n_deltas) counts over ``byte_delta_bands``
+    rows, shared by the batch profile and
+    streaming/jobs.run_byte_delta_stream."""
+    return bands.groupBy("media_type", "band").agg(
+        F.count("*").alias("n_deltas")
     )
 
 

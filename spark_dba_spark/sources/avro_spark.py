@@ -503,6 +503,18 @@ def _discover_hive_partitions(root: str, files: list):
 DEFAULT_SPLIT_BYTES = 128 << 20  # one Hadoop-block-ish range per task
 
 
+def _cut_ranges(
+    path: str, size: int, max_split: int
+) -> list[tuple[str, int, int]]:
+    """``path``'s bytes [0, size) as ``ceil(size / max_split)`` ranges of
+    equal length (the last may be shorter), none for an empty file: the one
+    split rule of the batch reader and ``read_avro_stream``. Decoding snaps
+    each range to the sync markers inside it."""
+    n = max(1, math.ceil(size / max_split))
+    step = max(1, math.ceil(size / n))
+    return [(path, lo, min(lo + step, size)) for lo in range(0, size, step)]
+
+
 def _plan_bins(
     files: list,
     split_bytes: int,
@@ -529,15 +541,10 @@ def _plan_bins(
     max_split = max(
         1, min(split_bytes, max(open_cost, math.ceil(total / max(1, parallelism))))
     )
-    splits: list[tuple[str, int, int]] = []
-    for info in files:
-        size = int(info.size)
-        n = max(1, math.ceil(size / max_split))
-        step = math.ceil(size / n)
-        for k in range(n):
-            lo, hi = k * step, min((k + 1) * step, size)
-            if lo < hi:
-                splits.append((info.path, lo, hi))
+    splits = [
+        sp for info in files
+        for sp in _cut_ranges(info.path, int(info.size), max_split)
+    ]
     if not splits:
         return []
     k = min(partitions or max(1, math.ceil(total / max_split)), len(splits))
@@ -989,16 +996,12 @@ def read_avro_stream(
 
     def plan_splits(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out: list[tuple[str, int, int]] = []
-            for p, size in zip(pdf["path"], pdf["length"]):
-                fp = _rebase_onto_root(str(p), base_uri, _root)
-                size = int(size)
-                n = max(1, math.ceil(size / sb))
-                step = math.ceil(size / n)
-                for k in range(n):
-                    lo, hi = k * step, min((k + 1) * step, size)
-                    if lo < hi:
-                        out.append((fp, lo, hi))
+            out = [
+                sp for p, size in zip(pdf["path"], pdf["length"])
+                for sp in _cut_ranges(
+                    _rebase_onto_root(str(p), base_uri, _root), int(size), sb
+                )
+            ]
             yield pd.DataFrame(out, columns=["path", "start", "end"])
 
     splits = stream.select("path", "length").mapInPandas(

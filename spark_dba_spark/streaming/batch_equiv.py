@@ -6,6 +6,17 @@ SPECS register the batch forms so the DuckDB oracle can gate their
 semantics; :mod:`spark_dba_spark.streaming.jobs` runs the *same* logic as
 real `readStream` jobs, and the pytest suite asserts stream output ==
 batch output (so the oracle transitively covers the streaming path).
+
+The twin rule: a batch op is ``assemble(grain(source))``. The grain (the
+pre-aggregation over the fact rows: ``tumbling_counts``,
+``sliding_counts``, ``session_counts``, ``topk_counts``, the
+``click_error_pairs`` join) is defined once here, beside the batch op;
+the stream twin is ``assemble(sink(grain(stream source)))``, calling the
+same function on ``jobs.stream_events``. Where streaming forbids the batch
+form, the stream keeps its own code and says why: watermarks need
+TIMESTAMP (not NTZ) and the join's watermarks go on each side before the
+join. Batch-only steps (the final ordering) stay at the batch call site.
+This module never imports ``jobs``.
 """
 
 from __future__ import annotations
@@ -29,12 +40,11 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Tumbling window (1 hour)
 # --------------------------------------------------------------------------
 
-def ev_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOT load_par: the windowed partial agg over events is cheap relative
-    # to an insurance shuffle of the rows (A/B: +0.27s at sf0.1).
-    ev = _events(spark, sf_dir)
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Grain of the 1h tumbling aggregation, shared by ``ev_tumbling_1h``
+    and jobs.run_tumbling_stream / run_tumbling_watermarked."""
     return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), dsum("value", "sum_value"))
         .select(
             F.col("w.start").alias("win_start"),
@@ -43,7 +53,14 @@ def ev_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "sum_value",
         )
-        .orderBy("win_start", "event_type")
+    )
+
+
+def ev_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # NOT load_par: the windowed partial agg over events is cheap relative
+    # to an insurance shuffle of the rows (A/B: +0.27s at sf0.1).
+    return tumbling_counts(_events(spark, sf_dir)).orderBy(
+        "win_start", "event_type"
     )
 
 
@@ -79,18 +96,22 @@ def topk_rank_tail(agg: DataFrame) -> DataFrame:
     )
 
 
+def topk_counts(events: DataFrame) -> DataFrame:
+    """Grain of the windowed top-k: per (hour window, event type) count,
+    shared by ``ev_windowed_topk`` and jobs.run_windowed_topk_stream."""
+    return (
+        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count("*").alias("n"))
+        .select(F.col("w.start").alias("win_start"), "event_type", "n")
+    )
+
+
 def ev_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top event types per tumbling hour — the streaming-leaderboard
     shape (trending hashtags, top error codes per window). Batch form:
     one windowed count shuffle, then the rank window on the (bounded:
     windows × types) aggregate — the rank never sees the fact stream."""
-    ev = _events(spark, sf_dir)
-    agg = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("win_start"), "event_type", "n")
-    )
-    return topk_rank_tail(agg)
+    return topk_rank_tail(topk_counts(_events(spark, sf_dir)))
 
 
 ORACLE_WINDOWED_TOPK = f"""
@@ -112,10 +133,13 @@ ORDER BY win_start, rnk
 # Sliding window (1 hour, sliding 30 minutes → every event in 2 windows)
 # --------------------------------------------------------------------------
 
-def ev_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Grain of the 1h/30m sliding aggregation, shared by
+    ``ev_sliding_1h_30m`` and jobs.run_sliding_stream."""
     return (
-        ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
+        events.groupBy(
+            F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type"
+        )
         .agg(F.count("*").alias("n"), dsum("value", "sum_value"))
         .select(
             F.col("w.start").alias("win_start"),
@@ -123,7 +147,12 @@ def ev_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "sum_value",
         )
-        .orderBy("win_start", "event_type")
+    )
+
+
+def ev_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return sliding_counts(_events(spark, sf_dir)).orderBy(
+        "win_start", "event_type"
     )
 
 
@@ -145,10 +174,14 @@ FROM w GROUP BY 1, 2 ORDER BY win_start, event_type
 # Session window (30-minute gap) per user
 # --------------------------------------------------------------------------
 
-def ev_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+def session_counts(events: DataFrame) -> DataFrame:
+    """Grain of the 30-minute sessionization: per (user, session_window)
+    count and exact-decimal value sum, shared by ``ev_session_30m`` and
+    jobs.run_session_stream."""
     return (
-        ev.groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
+        events.groupBy(
+            F.session_window("ts", SESSION_GAP).alias("w"), "user_id"
+        )
         .agg(F.count("*").alias("n"), dsum("value", "sum_value"))
         .select(
             "user_id",
@@ -157,7 +190,12 @@ def ev_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "sum_value",
         )
-        .orderBy("user_id", "session_start")
+    )
+
+
+def ev_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return session_counts(_events(spark, sf_dir)).orderBy(
+        "user_id", "session_start"
     )
 
 
@@ -354,25 +392,37 @@ ORDER BY level, bucket NULLS FIRST
 JOIN_WINDOW = "30 minutes"
 
 
-def ev_click_error_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    clicks = ev.filter(F.col("event_type") == "click").select(
+def click_error_sides(events: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The (clicks, errors) sides of the click → error join, shared by
+    ``ev_click_error_join`` and jobs.run_click_error_join."""
+    clicks = events.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
         F.col("ts").alias("click_ts"),
     )
-    errors = ev.filter(F.col("event_type") == "error").select(
+    errors = events.filter(F.col("event_type") == "error").select(
         F.col("user_id").alias("e_user"),
         F.col("event_id").alias("error_id"),
         F.col("ts").alias("error_ts"),
     )
-    pairs = clicks.join(
+    return clicks, errors
+
+
+def click_error_pairs(clicks: DataFrame, errors: DataFrame) -> DataFrame:
+    """Clicks joined to errors of the same user within ``JOIN_WINDOW``: the
+    pair grain both twins share (the stream puts a watermark on each side
+    first, which the interval condition needs to bound join state)."""
+    return clicks.join(
         errors,
         (F.col("c_user") == F.col("e_user"))
         & (F.col("error_ts") >= F.col("click_ts"))
         & (F.col("error_ts") <= F.col("click_ts") + F.expr(
             f"INTERVAL {JOIN_WINDOW}")),
     )
+
+
+def ev_click_error_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pairs = click_error_pairs(*click_error_sides(_events(spark, sf_dir)))
     return (
         pairs.groupBy(F.col("c_user").alias("user_id"))
         .agg(

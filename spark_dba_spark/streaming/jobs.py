@@ -2,15 +2,32 @@
 
 The reference has no streaming surface (SURVEY.md §2.4); this layer provides
 it Spark-natively: file-source ``readStream`` → event-time windowed
-aggregation with watermarks → sink. Each job's transformation is *shared*
-with its batch twin in :mod:`batch_equiv` (same `window()` /
-`session_window()` expressions), so the DuckDB oracle that gates the batch
-form transitively gates the streaming semantics; the pytest suite closes the
-loop by asserting stream output == batch output under an availableNow run.
+aggregation with watermarks → sink. A twin's transformation is *shared*
+with its batch form (in :mod:`batch_equiv` or an operator module), so the
+DuckDB oracle that gates the batch form transitively gates the streaming
+semantics; the pytest suite closes the loop by asserting stream output ==
+batch output under an availableNow run.
+
+The twin rule: a batch op is ``assemble(grain(source))``, with the grain
+(the pre-aggregation over the fact rows) defined beside the batch op; its
+stream twin here is ``assemble(sink(grain(stream source)))``: the SAME
+grain function over ``stream_events`` / ``stream_documents``, one
+``_sink`` (availableNow memory-sink queries), then the same assemble tail
+over the sink tables. Where streaming forbids the batch form, the stream
+keeps its own code and its docstring or comment says why: watermarks need
+TIMESTAMP (so ts is cast and watermarked first, and window bounds are cast
+back to NTZ), one query cannot aggregate an aggregate (complete mode), no
+``countDistinct`` (``dropDuplicates`` state instead), no lag/rank window
+over the unbounded stream (``session_window``, or a rank tail over the
+sink). Steps only the batch needs stay at the batch call site: the
+``repartition`` ahead of a byte fan-out, the ``localCheckpoint`` of cells
+that feed a second batch aggregation, the final ordering of a grain. (An
+assemble tail may checkpoint its bounded input; a sink table is one too.)
 
 Scale posture: file streams shard by file; watermarks bound state; the
-stateful operator (`user_running_totals`) keys state by user_id so state is
-partitioned across executors and GC'd via timeouts.
+``applyInPandasWithState`` operators (``run_user_totals_stream`` and the
+debounce and gap trackers) key state by user_id so state is partitioned
+across executors (no timeout: a user's state lives as long as the query).
 """
 
 from __future__ import annotations
@@ -25,58 +42,90 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .. import catalog
-from ..functions.numeric import dsum, rat_round6_spark
+from ..functions.numeric import rat_round6_spark
 from ..session import ensure_session_invariants
+from .batch_equiv import (
+    SESSION_GAP,
+    click_error_pairs,
+    click_error_sides,
+    segment_rollup,
+    session_counts,
+    sliding_counts,
+    topk_counts,
+    topk_rank_tail,
+    tumbling_counts,
+)
+
+
+def _file_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-source stream over one fixture table with the batch reader's
+    schema, one file per trigger."""
+    ensure_session_invariants(spark)
+    raw_schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    # The fixture table is a single file, but file-source streams want a
+    # directory: stream the sf_dir with a glob filter. In production this
+    # would be a landing directory files arrive into.
+    return (
+        spark.readStream.schema(raw_schema)
+        .option("pathGlobFilter", f"{table}.parquet")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(sf_dir)
+    )
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events fixture with the batch layer's
     exact schema and ts normalization (nanos long → TIMESTAMP_NTZ)."""
-    ensure_session_invariants(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # The fixture table is a single file, but file-source streams want a
-    # directory: stream the sf_dir with a glob filter. In production this
-    # would be a landing directory files arrive into.
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sf_dir)
-    )
-    return catalog._normalize_events(stream)
+    return catalog._normalize_events(_file_stream(spark, sf_dir, "events"))
 
 
-def tumbling_counts(events: DataFrame) -> DataFrame:
-    """Shared transformation for the 1h tumbling aggregation (same shape as
-    batch_equiv.ev_tumbling_1h)."""
+def _watermarked_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``stream_events`` with ts cast to TIMESTAMP and a 1-hour watermark.
+
+    Watermarks require TIMESTAMP (not NTZ); under the UTC session invariant
+    the cast is value-preserving."""
     return (
-        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), dsum("value", "sum_value"))
-        .select(
-            F.col("w.start").alias("win_start"),
-            F.col("w.end").alias("win_end"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
+        stream_events(spark, sf_dir)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", "1 hour")
     )
+
+
+def _ntz(df: DataFrame, *cols: str) -> DataFrame:
+    """Cast watermarked window bounds back to TIMESTAMP_NTZ, so schemas
+    line up with the batch twin."""
+    return df.withColumns({c: F.col(c).cast("timestamp_ntz") for c in cols})
+
+
+def _sink(
+    spark: SparkSession, mode: str, queries: dict[str, DataFrame]
+) -> list[DataFrame]:
+    """Run each named streaming DataFrame as a ``memory``-sink query under
+    ``trigger(availableNow=True)`` in output ``mode``, and return the sink
+    tables in the same order. Every query starts before any is awaited, so
+    the queries of a multi-query twin run side by side."""
+    running = [
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+        for name, df in queries.items()
+    ]
+    for q in running:
+        q.awaitTermination()
+    return [spark.table(name) for name in queries]
 
 
 def run_tumbling_stream(
     spark: SparkSession, sf_dir: str, query_name: str = "tumbling_stream"
 ) -> DataFrame:
     """availableNow run of the tumbling aggregation into a memory sink
-    (complete mode → all windows emitted). Returns the sink contents."""
-    q = (
-        tumbling_counts(stream_events(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    (complete mode → all windows emitted). Returns the sink contents. The
+    grain is the shared ``batch_equiv.tumbling_counts`` of
+    ``ev_tumbling_1h``."""
+    grain = tumbling_counts(stream_events(spark, sf_dir))
+    return _sink(spark, "complete", {query_name: grain})[0]
 
 
 def run_tumbling_watermarked(
@@ -88,23 +137,12 @@ def run_tumbling_watermarked(
     Watermarks require TIMESTAMP (not NTZ); under the UTC session invariant
     the cast is value-preserving, and the output windows are cast back so
     schemas line up with the batch twin."""
-    ev = (
-        stream_events(spark, sf_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
+    grain = _ntz(
+        tumbling_counts(_watermarked_events(spark, sf_dir)),
+        "win_start",
+        "win_end",
     )
-    q = (
-        tumbling_counts(ev)
-        .withColumn("win_start", F.col("win_start").cast("timestamp_ntz"))
-        .withColumn("win_end", F.col("win_end").cast("timestamp_ntz"))
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _sink(spark, "append", {query_name: grain})[0]
 
 
 def run_active_users_stream(
@@ -116,108 +154,61 @@ def run_active_users_stream(
     shape Spark 3.4+ unlocked for exact windowed distinct. Watermarked
     append mode: only watermark-closed windows emit, so the result is a
     prefix of the batch twin (same contract as run_tumbling_watermarked).
+    The batch twin's ``distinct()`` has no streaming form, so this job
+    keeps its own code.
     """
-    ev = (
-        stream_events(spark, sf_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
+    deduped = (
+        _watermarked_events(spark, sf_dir)
+        .select(F.window("ts", "1 hour").alias("w"), "ts", "user_id")
+        .dropDuplicates(["w", "user_id"])
     )
-    deduped = ev.select(
-        F.window("ts", "1 hour").alias("w"), "ts", "user_id"
-    ).dropDuplicates(["w", "user_id"])
-    q = (
+    counts = (
         deduped.groupBy("w")
         .agg(F.count("*").alias("active_users"))
         .select(
             F.col("w.start").cast("timestamp_ntz").alias("win_start"),
             "active_users",
         )
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _sink(spark, "append", {query_name: counts})[0]
 
 
 def run_dedup_stream(
     spark: SparkSession, sf_dir: str, query_name: str = "dedup_stream"
 ) -> DataFrame:
     """Streaming exact-dedup on event_id with watermark-bounded state."""
-    ev = (
-        stream_events(spark, sf_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-    )
-    q = (
-        ev.dropDuplicates(["event_id"])
+    firsts = (
+        _watermarked_events(spark, sf_dir)
+        .dropDuplicates(["event_id"])
         .select("event_id", "user_id", "event_type")
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _sink(spark, "append", {query_name: firsts})[0]
 
 
 def run_sliding_stream(
     spark: SparkSession, sf_dir: str, query_name: str = "sliding_stream"
 ) -> DataFrame:
-    """1h/30m sliding-window aggregation (same expressions as
-    batch_equiv.ev_sliding_1h_30m) under an availableNow streaming run."""
-    ev = stream_events(spark, sf_dir)
-    q = (
-        ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), dsum("value", "sum_value"))
-        .select(
-            F.col("w.start").alias("win_start"), "event_type", "n", "sum_value"
-        )
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    """1h/30m sliding-window aggregation (the shared
+    ``batch_equiv.sliding_counts`` grain of ev_sliding_1h_30m) under an
+    availableNow streaming run."""
+    grain = sliding_counts(stream_events(spark, sf_dir))
+    return _sink(spark, "complete", {query_name: grain})[0]
 
 
 def run_session_stream(
     spark: SparkSession, sf_dir: str, query_name: str = "session_stream"
 ) -> DataFrame:
     """Session windows (30-minute gap) per user — the stateful merge
-    operator (same session_window expression as batch_equiv.ev_session_30m).
-    Watermark bounds session state; windows close once the watermark passes
-    the gap."""
-    from .batch_equiv import SESSION_GAP
-
-    ev = (
-        stream_events(spark, sf_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
+    operator (the shared ``batch_equiv.session_counts`` grain of
+    ev_session_30m). Watermark bounds session state; windows close once
+    the watermark passes the gap. The watermark needs TIMESTAMP, so the
+    session bounds are cast back to the batch twin's NTZ."""
+    grain = _ntz(
+        session_counts(_watermarked_events(spark, sf_dir)),
+        "session_start",
+        "session_end",
     )
-    q = (
-        ev.groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
-        .agg(F.count("*").alias("n"), dsum("value", "sum_value"))
-        .select(
-            "user_id",
-            F.col("w.start").cast("timestamp_ntz").alias("session_start"),
-            F.col("w.end").cast("timestamp_ntz").alias("session_end"),
-            "n",
-            "sum_value",
-        )
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _sink(spark, "complete", {query_name: grain})[0]
 
 
 def run_pii_audit_stream(
@@ -233,16 +224,8 @@ def run_pii_audit_stream(
     tests/test_streaming.py::test_pii_audit_stream_equals_batch."""
     from ..operators.curation import assemble_pii_audit, pii_per_doc
 
-    q = (
-        assemble_pii_audit(pii_per_doc(stream_documents(spark, sf_dir)))
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    audit = assemble_pii_audit(pii_per_doc(stream_documents(spark, sf_dir)))
+    return _sink(spark, "complete", {query_name: audit})[0]
 
 
 def run_session_bounce_stream(
@@ -256,7 +239,9 @@ def run_session_bounce_stream(
     bounded by the watermark — and the daily bounce rollup happens on
     the (bounded: sessions-per-day) session rows through the SHARED
     ``assemble_session_bounce_profile`` contract, so the DuckDB oracle
-    gating the batch form transitively gates this stream.
+    gating the batch form transitively gates this stream. The session
+    grain itself is the stream's own code: the batch islands use a lag
+    window, which a stream cannot run.
 
     Boundary semantics: ``session_window`` starts a new session when a
     gap is >= 30 min, the batch islands when a gap is STRICTLY > 30 min
@@ -265,15 +250,10 @@ def run_session_bounce_stream(
     tests/test_streaming.py::test_session_bounce_stream_equals_batch
     asserts that precondition explicitly before pinning stream==batch."""
     from ..operators.curation import assemble_session_bounce_profile
-    from .batch_equiv import SESSION_GAP
 
-    ev = (
-        stream_events(spark, sf_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-    )
-    q = (
-        ev.groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
+    sessions = (
+        _watermarked_events(spark, sf_dir)
+        .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -282,14 +262,10 @@ def run_session_bounce_stream(
             ).alias("day_epoch"),
             "n_events",
         )
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return assemble_session_bounce_profile(spark.table(query_name))
+    return assemble_session_bounce_profile(
+        _sink(spark, "complete", {query_name: sessions})[0]
+    )
 
 
 def run_click_error_join(
@@ -298,47 +274,20 @@ def run_click_error_join(
     """Stream-stream inner join with watermarks: clicks joined to errors of
     the same user within 30 minutes (the interval condition bounds join
     state on both sides — Structured Streaming requires exactly this shape
-    to GC buffered rows). Emits raw pairs; the batch twin
-    (batch_equiv.ev_click_error_join) aggregates the same pairs."""
+    to GC buffered rows). The sides and the join are the shared
+    ``batch_equiv.click_error_sides`` / ``click_error_pairs``; this job
+    emits the raw pairs, which the batch twin
+    (batch_equiv.ev_click_error_join) aggregates."""
     ev = stream_events(spark, sf_dir).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    errors = (
-        ev.filter(F.col("event_type") == "error")
-        .select(
-            F.col("user_id").alias("e_user"),
-            F.col("event_id").alias("error_id"),
-            F.col("ts").alias("error_ts"),
-        )
-        .withWatermark("error_ts", "1 hour")
-    )
-    from .batch_equiv import JOIN_WINDOW
-
-    pairs = clicks.join(
-        errors,
-        (F.col("c_user") == F.col("e_user"))
-        & (F.col("error_ts") >= F.col("click_ts"))
-        & (F.col("error_ts") <= F.col("click_ts") + F.expr(
-            f"INTERVAL {JOIN_WINDOW}")),
+    clicks, errors = click_error_sides(ev)
+    # Stream only: each side needs its own watermark before the join.
+    pairs = click_error_pairs(
+        clicks.withWatermark("click_ts", "1 hour"),
+        errors.withWatermark("error_ts", "1 hour"),
     ).select("c_user", "click_id", "error_id")
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _sink(spark, "append", {query_name: pairs})[0]
 
 
 # --------------------------------------------------------------------------
@@ -375,9 +324,10 @@ def run_user_totals_stream(
     event count + value total, state keyed by user_id. Update mode emits
     the latest state per key each micro-batch; the final row per key is the
     complete total (asserted against batch groupBy in tests)."""
-    ev = stream_events(spark, sf_dir).select("user_id", "value")
-    q = (
-        ev.groupBy("user_id")
+    totals = (
+        stream_events(spark, sf_dir)
+        .select("user_id", "value")
+        .groupBy("user_id")
         .applyInPandasWithState(
             _update_totals,
             outputStructType=_TOTALS_SCHEMA,
@@ -385,14 +335,8 @@ def run_user_totals_stream(
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _sink(spark, "update", {query_name: totals})[0]
 
 
 def run_error_rate_by_load_stream(
@@ -400,35 +344,23 @@ def run_error_rate_by_load_stream(
 ) -> DataFrame:
     """Streaming twin of ``operators.curation.ev_error_rate_by_load``
     (VERDICT r13 "Next round" #7): the load-vs-reliability readout a
-    live ops dashboard keeps. Hour-grain COMPLETE-mode aggregation —
-    the streaming state is exactly the calendar-bounded (hr, n_events,
-    n_errors) table (~720 rows/month, the same bound that justifies
-    the batch op's global rank window), and the decile rollup runs on
-    those bounded rows through the SHARED
-    ``assemble_error_rate_by_load`` contract, so the DuckDB oracle
-    gating the batch form transitively gates this stream."""
-    from ..operators.curation import assemble_error_rate_by_load
+    live ops dashboard keeps. Hour-grain COMPLETE-mode aggregation (the
+    SHARED ``error_rate_by_load_grain``) — the streaming state is
+    exactly the calendar-bounded (hr, n_events, n_errors) table (~720
+    rows/month, the same bound that justifies the batch op's global
+    rank window), and the decile rollup runs on those bounded rows
+    through the SHARED ``assemble_error_rate_by_load`` contract, so the
+    DuckDB oracle gating the batch form transitively gates this
+    stream."""
+    from ..operators.curation import (
+        assemble_error_rate_by_load,
+        error_rate_by_load_grain,
+    )
 
-    ev = stream_events(spark, sf_dir).select(
-        F.expr(
-            "unix_micros(cast(ts as timestamp)) div 3600000000"
-        ).alias("hr"),
-        (F.col("event_type") == "error").cast("long").alias("is_err"),
+    grain = error_rate_by_load_grain(stream_events(spark, sf_dir))
+    return assemble_error_rate_by_load(
+        _sink(spark, "complete", {query_name: grain})[0]
     )
-    q = (
-        ev.groupBy("hr")
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.sum("is_err").cast("long").alias("n_errors"),
-        )
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return assemble_error_rate_by_load(spark.table(query_name))
 
 
 def run_slo_burn_stream(
@@ -437,32 +369,15 @@ def run_slo_burn_stream(
     """Streaming twin of ``operators.curation.ev_slo_burn_rate`` — the
     burn-rate table IS an alerting surface, so the streaming form is
     the one an SRE deployment actually runs. Day-grain COMPLETE-mode
-    aggregation (state = the calendar-bounded daily error ledger); the
-    trailing-window burn math runs on those bounded rows through the
-    SHARED ``assemble_slo_burn`` contract, so the batch DuckDB oracle
-    transitively gates this stream."""
-    from ..operators.curation import assemble_slo_burn
+    aggregation (the SHARED ``slo_burn_grain``; state = the
+    calendar-bounded daily error ledger); the trailing-window burn math
+    runs on those bounded rows through the SHARED ``assemble_slo_burn``
+    contract, so the batch DuckDB oracle transitively gates this
+    stream."""
+    from ..operators.curation import assemble_slo_burn, slo_burn_grain
 
-    ev = stream_events(spark, sf_dir).select(
-        F.expr(
-            "unix_micros(cast(ts as timestamp)) div 86400000000"
-        ).alias("day"),
-        (F.col("event_type") == "error").cast("long").alias("is_err"),
-    )
-    q = (
-        ev.groupBy("day")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("is_err").cast("long").alias("e"),
-        )
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return assemble_slo_burn(spark.table(query_name))
+    grain = slo_burn_grain(stream_events(spark, sf_dir))
+    return assemble_slo_burn(_sink(spark, "complete", {query_name: grain})[0])
 
 
 def run_type_mix_drift_stream(
@@ -470,29 +385,20 @@ def run_type_mix_drift_stream(
 ) -> DataFrame:
     """Streaming twin of ``operators.curation.ev_type_mix_drift_weekly``
     — traffic-shape drift is a monitoring readout, so the streaming
-    form is the production surface. Week×type COMPLETE-mode counts
-    (state bounded by calendar×alphabet); the consecutive-week TV and
-    top-mover math runs through the SHARED ``assemble_type_mix_drift``
-    contract, so the batch oracle transitively gates this stream."""
-    from ..operators.curation import assemble_type_mix_drift
+    form is the production surface. Week×type COMPLETE-mode counts (the
+    SHARED ``type_mix_drift_grain``; state bounded by
+    calendar×alphabet); the consecutive-week TV and top-mover math runs
+    through the SHARED ``assemble_type_mix_drift`` contract, so the
+    batch oracle transitively gates this stream."""
+    from ..operators.curation import (
+        assemble_type_mix_drift,
+        type_mix_drift_grain,
+    )
 
-    ev = stream_events(spark, sf_dir).select(
-        F.expr(
-            "(unix_micros(cast(ts as timestamp)) div 86400000000) div 7"
-        ).alias("wek"),
-        "event_type",
+    grain = type_mix_drift_grain(stream_events(spark, sf_dir))
+    return assemble_type_mix_drift(
+        _sink(spark, "complete", {query_name: grain})[0]
     )
-    q = (
-        ev.groupBy("wek", "event_type")
-        .agg(F.count("*").cast("long").alias("x"))
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return assemble_type_mix_drift(spark.table(query_name))
 
 
 # ---------------------------------------------------------------------------
@@ -502,14 +408,7 @@ def run_type_mix_drift_stream(
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents fixture — the landing-directory
     shape a continuous corpus-ingest pipeline reads from."""
-    ensure_session_invariants(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    return (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sf_dir)
-    )
+    return _file_stream(spark, sf_dir, "documents")
 
 
 def run_clean_corpus_stream(
@@ -536,15 +435,7 @@ def run_clean_corpus_stream(
         ["content_hash"]
     )
     stats = corpus_lang_stats(deduped, include_first_doc=False)
-    q = (
-        stats.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _sink(spark, "complete", {query_name: stats})[0]
 
 
 def run_asset_ingest_stream(
@@ -558,42 +449,26 @@ def run_asset_ingest_stream(
     shards by the same key the batch pre-aggregation shuffles on), raw
     arrivals by a parallel counting query over the same source, and the
     dup ratio is assembled from the two materialized sinks with the
-    batch column contract. Two streaming queries because one query
-    cannot host both the pre- and post-dedup aggregations; a production
-    deployment runs exactly this pair off one source."""
+    batch column contract (the projection is this job's own copy: the
+    batch form's ``countDistinct`` has no streaming form). Two streaming
+    queries because one query cannot host both the pre- and post-dedup
+    aggregations; a production deployment runs exactly this pair off one
+    source."""
     from ..operators.multimodal import asset_fingerprint, project_assets
 
-    def _assets_stream() -> DataFrame:
-        return project_assets(stream_documents(spark, sf_dir)).select(
-            "media_type", asset_fingerprint().alias("fp")
-        )
-
-    uq = (
-        _assets_stream()
-        .dropDuplicates(["media_type", "fp"])
-        .groupBy("media_type")
-        .agg(F.count("*").alias("n_unique_fp"))
-        .writeStream.format("memory")
-        .queryName(f"{query_name}_uq")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    assets = project_assets(stream_documents(spark, sf_dir)).select(
+        "media_type", asset_fingerprint().alias("fp")
     )
-    seen = (
-        _assets_stream()
+    uq, seen = _sink(spark, "complete", {
+        f"{query_name}_uq": assets.dropDuplicates(["media_type", "fp"])
         .groupBy("media_type")
-        .agg(F.count("*").alias("n_assets"))
-        .writeStream.format("memory")
-        .queryName(f"{query_name}_seen")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    uq.awaitTermination()
-    seen.awaitTermination()
+        .agg(F.count("*").alias("n_unique_fp")),
+        f"{query_name}_seen": assets.groupBy("media_type").agg(
+            F.count("*").alias("n_assets")
+        ),
+    })
     return (
-        spark.table(f"{query_name}_seen")
-        .join(spark.table(f"{query_name}_uq"), "media_type")
+        seen.join(uq, "media_type")
         .select(
             "media_type",
             F.col("n_assets").cast("long").alias("n_assets"),
@@ -647,16 +522,8 @@ def run_span_decon_stream(
         F.col("doc_id") % SPAN_EVAL_MOD != 0
     )
     joined = span_window_fps(stream).join(F.broadcast(idx), "fp", "left")
-    q = (
-        span_hit_rollup(joined)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    rollup = span_hit_rollup(joined)
+    return _sink(spark, "complete", {query_name: rollup})[0]
 
 
 def run_byte_histogram_stream(
@@ -664,51 +531,30 @@ def run_byte_histogram_stream(
 ) -> DataFrame:
     """Streaming twin of ``operators.multimodal.mm_payload_byte_histogram``:
     assets arrive as a file stream, every payload byte is banded by the
-    SHARED ``payload_byte_bands`` projection, and two complete-mode
-    aggregations (per-(type, band) counts + per-type totals — one query
-    cannot host both grains, the asset-ingest-stream precedent)
-    materialize to memory sinks; the final share assembly reuses the
-    batch column contract (``assemble_byte_histogram``), so the DuckDB
-    oracle gating the batch form transitively gates this stream.
+    SHARED ``payload_byte_bands`` projection, and the two SHARED
+    ``byte_histogram_grains`` aggregations (per-(type, band) counts +
+    per-type totals — one query cannot host both grains, the
+    asset-ingest-stream precedent) run as complete-mode queries into
+    memory sinks; the final share assembly reuses the batch column
+    contract (``assemble_byte_histogram``), so the DuckDB oracle gating
+    the batch form transitively gates this stream. The batch form's
+    ``repartition`` ahead of the byte fan-out stays batch-only.
     stream == batch is pinned by
     tests/test_streaming.py::test_byte_histogram_stream_equals_batch."""
     from ..operators.multimodal import (
         assemble_byte_histogram,
+        byte_histogram_grains,
         payload_byte_bands,
         project_assets,
     )
 
-    def _bands() -> DataFrame:
-        return payload_byte_bands(
-            project_assets(stream_documents(spark, sf_dir))
-        )
-
-    per_band = (
-        _bands()
-        .groupBy("media_type", "band")
-        .agg(F.count("*").cast("long").alias("n_bytes"))
-        .writeStream.format("memory")
-        .queryName(f"{query_name}_bands")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    per_band, tot = byte_histogram_grains(
+        payload_byte_bands(project_assets(stream_documents(spark, sf_dir)))
     )
-    totals = (
-        _bands()
-        .groupBy("media_type")
-        .agg(F.count("*").cast("long").alias("n_total"))
-        .writeStream.format("memory")
-        .queryName(f"{query_name}_tot")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    per_band.awaitTermination()
-    totals.awaitTermination()
-    return assemble_byte_histogram(
-        spark.table(f"{query_name}_bands"),
-        spark.table(f"{query_name}_tot"),
-    )
+    return assemble_byte_histogram(*_sink(spark, "complete", {
+        f"{query_name}_bands": per_band,
+        f"{query_name}_tot": tot,
+    }))
 
 
 def run_byte_delta_stream(
@@ -717,48 +563,29 @@ def run_byte_delta_stream(
     """Streaming twin of ``operators.multimodal.mm_byte_delta_profile``:
     assets arrive as a file stream, adjacent-byte deltas are banded by
     the SHARED ``byte_delta_bands`` projection, and two complete-mode
-    aggregations (per-(type, band) counts + per-type totals) feed the
-    shared ``assemble_byte_delta_profile`` contract — the DuckDB oracle
-    gating the batch form transitively gates this stream.
+    aggregations (the SHARED per-(type, band) ``byte_delta_cells`` +
+    per-type totals) feed the shared ``assemble_byte_delta_profile``
+    contract — the DuckDB oracle gating the batch form transitively
+    gates this stream. The totals are the stream's own: the batch sums
+    the checkpointed cells, a chained aggregation one streaming query
+    cannot run, so the stream counts the bands in a second query.
     stream == batch is pinned by
     tests/test_streaming.py::test_byte_delta_stream_equals_batch."""
     from ..operators.multimodal import (
         assemble_byte_delta_profile,
         byte_delta_bands,
+        byte_delta_cells,
         project_assets,
     )
 
-    def _bands() -> DataFrame:
-        return byte_delta_bands(
-            project_assets(stream_documents(spark, sf_dir))
-        )
-
-    cnt = (
-        _bands()
-        .groupBy("media_type", "band")
-        .agg(F.count("*").cast("long").alias("n_deltas"))
-        .writeStream.format("memory")
-        .queryName(f"{query_name}_cnt")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    bands = byte_delta_bands(project_assets(stream_documents(spark, sf_dir)))
+    totals = bands.groupBy("media_type").agg(
+        F.count("*").cast("long").alias("n_total")
     )
-    totals = (
-        _bands()
-        .groupBy("media_type")
-        .agg(F.count("*").cast("long").alias("n_total"))
-        .writeStream.format("memory")
-        .queryName(f"{query_name}_tot")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    cnt.awaitTermination()
-    totals.awaitTermination()
-    return assemble_byte_delta_profile(
-        spark.table(f"{query_name}_cnt"),
-        spark.table(f"{query_name}_tot"),
-    )
+    return assemble_byte_delta_profile(*_sink(spark, "complete", {
+        f"{query_name}_cnt": byte_delta_cells(bands),
+        f"{query_name}_tot": totals,
+    }))
 
 
 def run_chunk_cdc_stream(
@@ -767,51 +594,28 @@ def run_chunk_cdc_stream(
     """Streaming twin of ``operators.curation.mm_chunk_cdc_profile``:
     assets arrive as a file stream, every payload is split by the
     SHARED ``cdc_chunks`` projection (identical boundaries and chunk
-    hashes), and two complete-mode aggregations — (media_type,
-    chunk_hash) occurrence rows and (media_type, doc_id) rows, the
-    shapes that make distinct-counts streamable as row counts — feed
-    the shared ``assemble_chunk_cdc_profile`` contract, so the DuckDB
-    oracle gating the batch form transitively gates this stream.
+    hashes), and the two SHARED ``chunk_cdc_grains`` aggregations —
+    (media_type, chunk_hash) occurrence rows and (media_type, doc_id)
+    rows, the shapes that make distinct-counts streamable as row counts
+    — run as complete-mode queries and feed the shared
+    ``assemble_chunk_cdc_profile`` contract, so the DuckDB oracle gating
+    the batch form transitively gates this stream.
     stream == batch is pinned by
     tests/test_streaming.py::test_chunk_cdc_stream_equals_batch."""
     from ..operators.curation import (
         assemble_chunk_cdc_profile,
         cdc_chunks,
+        chunk_cdc_grains,
     )
     from ..operators.multimodal import project_assets
 
-    def _chunks() -> DataFrame:
-        return cdc_chunks(project_assets(stream_documents(spark, sf_dir)))
-
-    by_hash = (
-        _chunks()
-        .groupBy("media_type", "chunk_hash")
-        .agg(
-            F.count("*").cast("long").alias("n_occurrences"),
-            F.min("chunk_len").cast("long").alias("chunk_len"),
-        )
-        .writeStream.format("memory")
-        .queryName(f"{query_name}_hash")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    by_hash, by_asset = chunk_cdc_grains(
+        cdc_chunks(project_assets(stream_documents(spark, sf_dir)))
     )
-    by_asset = (
-        _chunks()
-        .groupBy("media_type", "doc_id")
-        .agg(F.count("*").cast("long").alias("n_chunks_in_asset"))
-        .writeStream.format("memory")
-        .queryName(f"{query_name}_asset")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    by_hash.awaitTermination()
-    by_asset.awaitTermination()
-    return assemble_chunk_cdc_profile(
-        spark.table(f"{query_name}_hash"),
-        spark.table(f"{query_name}_asset"),
-    )
+    return assemble_chunk_cdc_profile(*_sink(spark, "complete", {
+        f"{query_name}_hash": by_hash,
+        f"{query_name}_asset": by_asset,
+    }))
 
 
 def run_corpus_funnel_stream(
@@ -821,7 +625,7 @@ def run_corpus_funnel_stream(
     per-source ingest funnel (raw arrivals → quality-gate survivors →
     distinct content hashes) computed incrementally off the landing
     directory. The gate is the SHARED ``corpus_quality_gate`` predicate
-    and the final projection reuses the batch column contract, so the
+    and the final projection repeats the batch column contract, so the
     DuckDB oracle gating the batch form transitively gates this stream;
     stream == batch is pinned by
     tests/test_streaming.py::test_corpus_funnel_stream_equals_batch.
@@ -831,48 +635,27 @@ def run_corpus_funnel_stream(
     precedent): raw counts, gated counts, and gated-unique counts via
     stateful ``dropDuplicates`` on (source, content_hash) — the state
     store shards on exactly the key the batch countDistinct shuffles
-    on."""
+    on (``countDistinct`` itself has no streaming form, so the
+    aggregation is this job's own code)."""
     from ..operators.text import corpus_quality_gate
 
-    raw = (
-        stream_documents(spark, sf_dir)
-        .groupBy("source")
-        .agg(F.count("*").alias("n_raw"))
-        .writeStream.format("memory")
-        .queryName(f"{query_name}_raw")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    gated = (
-        corpus_quality_gate(stream_documents(spark, sf_dir))
-        .groupBy("source")
-        .agg(F.count("*").alias("n_gated"))
-        .writeStream.format("memory")
-        .queryName(f"{query_name}_gated")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    uniq = (
-        corpus_quality_gate(stream_documents(spark, sf_dir))
-        .withColumn("content_hash", F.md5("text"))
+    docs = stream_documents(spark, sf_dir)
+    gated = corpus_quality_gate(docs)
+    raw, gated_n, uniq = _sink(spark, "complete", {
+        f"{query_name}_raw": docs.groupBy("source").agg(
+            F.count("*").alias("n_raw")
+        ),
+        f"{query_name}_gated": gated.groupBy("source").agg(
+            F.count("*").alias("n_gated")
+        ),
+        f"{query_name}_uq": gated.withColumn("content_hash", F.md5("text"))
         .dropDuplicates(["source", "content_hash"])
         .groupBy("source")
-        .agg(F.count("*").alias("n_unique"))
-        .writeStream.format("memory")
-        .queryName(f"{query_name}_uq")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    raw.awaitTermination()
-    gated.awaitTermination()
-    uniq.awaitTermination()
+        .agg(F.count("*").alias("n_unique")),
+    })
     return (
-        spark.table(f"{query_name}_raw")
-        .join(spark.table(f"{query_name}_gated"), "source", "left")
-        .join(spark.table(f"{query_name}_uq"), "source", "left")
+        raw.join(gated_n, "source", "left")
+        .join(uniq, "source", "left")
         .select(
             "source",
             F.col("n_raw").cast("long").alias("n_raw"),
@@ -892,28 +675,16 @@ def run_corpus_funnel_stream(
 def run_windowed_topk_stream(
     spark: SparkSession, sf_dir: str, query_name: str = "windowed_topk_stream"
 ) -> DataFrame:
-    """Streaming leaderboard: the windowed count runs as a STREAMING
-    aggregation (complete mode → the materialized per-window counts),
-    and the rank tail — which streaming aggregation cannot host, since
-    row_number needs the finished window — runs over the materialized
-    sink with the SAME shared tail as the batch twin
-    (batch_equiv.topk_rank_tail). This is the production two-stage
-    shape: stream pre-aggregates, the serving layer ranks."""
-    from .batch_equiv import topk_rank_tail
-
-    q = (
-        stream_events(spark, sf_dir)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("win_start"), "event_type", "n")
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return topk_rank_tail(spark.table(query_name))
+    """Streaming leaderboard: the windowed count (the shared
+    ``batch_equiv.topk_counts`` grain) runs as a STREAMING aggregation
+    (complete mode → the materialized per-window counts), and the rank
+    tail — which streaming aggregation cannot host, since row_number
+    needs the finished window — runs over the materialized sink with the
+    SAME shared tail as the batch twin (batch_equiv.topk_rank_tail).
+    This is the production two-stage shape: stream pre-aggregates, the
+    serving layer ranks."""
+    grain = topk_counts(stream_events(spark, sf_dir))
+    return topk_rank_tail(_sink(spark, "complete", {query_name: grain})[0])
 
 
 # ---------------------------------------------------------------------------
@@ -1003,23 +774,14 @@ def run_alert_debounce_stream(
             F.expr("unix_micros(cast(ts as timestamp))").alias("um"),
         )
     )
-    q = (
-        cand.groupBy("user_id")
-        .applyInPandasWithState(
-            _update_debounce,
-            outputStructType=_DEBOUNCE_SCHEMA,
-            stateStructType=_DEBOUNCE_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    alerts = cand.groupBy("user_id").applyInPandasWithState(
+        _update_debounce,
+        outputStructType=_DEBOUNCE_SCHEMA,
+        stateStructType=_DEBOUNCE_STATE,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _sink(spark, "append", {query_name: alerts})[0]
 
 
 # ---------------------------------------------------------------------------
@@ -1078,23 +840,14 @@ def run_user_gap_stream(
     pts = ev.select(
         "user_id", F.expr("unix_micros(cast(ts as timestamp))").alias("um")
     )
-    q = (
-        pts.groupBy("user_id")
-        .applyInPandasWithState(
-            _update_gap,
-            outputStructType=_GAP_SCHEMA,
-            stateStructType=_GAP_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    gaps = pts.groupBy("user_id").applyInPandasWithState(
+        _update_gap,
+        outputStructType=_GAP_SCHEMA,
+        stateStructType=_GAP_STATE,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _sink(spark, "update", {query_name: gaps})[0]
 
 
 def run_stream_static_enrich(
@@ -1113,22 +866,12 @@ def run_stream_static_enrich(
     re-read per micro-batch (exactly how a slowly-changing dimension
     behaves in production — a dim update between triggers is picked
     up), and every (segment, type) cell is emitted."""
-    from . import batch_equiv
-
     ev = stream_events(spark, sf_dir).select(
         "user_id", "event_type", "value"
     )
     cust = catalog.load(spark, sf_dir, "customer")
-    q = (
-        batch_equiv.segment_rollup(ev, cust)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    rollup = segment_rollup(ev, cust)
+    return _sink(spark, "complete", {query_name: rollup})[0]
 
 
 def run_friedman_stream(
@@ -1136,32 +879,16 @@ def run_friedman_stream(
 ) -> DataFrame:
     """Streaming twin of ``operators.analytics.stats_friedman_daily_types``
     — the "did the type ordering change today?" monitor a live feed
-    keeps. COMPLETE-mode (day × type) exact-decimal value sums (state
-    bounded by calendar×alphabet); the dense-grid ranking and the
-    Friedman χ² readout run through the SHARED ``assemble_friedman``
-    contract, so the batch DuckDB oracle transitively gates this
-    stream; stream == batch is pinned by
+    keeps. COMPLETE-mode (day × type) exact-decimal value sums (the
+    SHARED ``friedman_grain``; state bounded by calendar×alphabet); the
+    dense-grid ranking and the Friedman χ² readout run through the
+    SHARED ``assemble_friedman`` contract, so the batch DuckDB oracle
+    transitively gates this stream; stream == batch is pinned by
     tests/test_streaming.py::test_friedman_stream_equals_batch."""
-    from ..operators.analytics import assemble_friedman
+    from ..operators.analytics import assemble_friedman, friedman_grain
 
-    ev = stream_events(spark, sf_dir).select(
-        F.expr(
-            "unix_micros(cast(ts as timestamp)) div 86400000000"
-        ).alias("day"),
-        "event_type",
-        "value",
-    )
-    q = (
-        ev.groupBy("day", "event_type")
-        .agg(F.sum(F.col("value").cast("decimal(25,6)")).alias("s"))
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return assemble_friedman(spark.table(query_name))
+    grain = friedman_grain(stream_events(spark, sf_dir))
+    return assemble_friedman(_sink(spark, "complete", {query_name: grain})[0])
 
 
 def run_hurst_stream(
@@ -1169,30 +896,16 @@ def run_hurst_stream(
 ) -> DataFrame:
     """Streaming twin of ``operators.analytics.ev_hurst_variance_plot``
     — the long-memory/burstiness posture a capacity planner tracks on
-    the LIVE feed. COMPLETE-mode daily counts (state strictly
-    calendar-bounded: one long per day); the dyadic variance-time plot
-    and the OLS Hurst readout run through the SHARED
-    ``assemble_hurst`` contract, so the batch DuckDB oracle
-    transitively gates this stream; stream == batch is pinned by
+    the LIVE feed. COMPLETE-mode daily counts (the SHARED
+    ``hurst_grain``; state strictly calendar-bounded: one long per
+    day); the dyadic variance-time plot and the OLS Hurst readout run
+    through the SHARED ``assemble_hurst`` contract, so the batch DuckDB
+    oracle transitively gates this stream; stream == batch is pinned by
     tests/test_streaming.py::test_hurst_stream_equals_batch."""
-    from ..operators.analytics import assemble_hurst
+    from ..operators.analytics import assemble_hurst, hurst_grain
 
-    ev = stream_events(spark, sf_dir).select(
-        F.expr(
-            "unix_micros(cast(ts as timestamp)) div 86400000000"
-        ).alias("day")
-    )
-    q = (
-        ev.groupBy("day")
-        .agg(F.count("*").cast("long").alias("x"))
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return assemble_hurst(spark.table(query_name))
+    grain = hurst_grain(stream_events(spark, sf_dir))
+    return assemble_hurst(_sink(spark, "complete", {query_name: grain})[0])
 
 
 def run_max_drawdown_stream(
@@ -1202,30 +915,22 @@ def run_max_drawdown_stream(
     — drawdown-from-peak is a live monitoring readout (an alerting
     surface like the SLO burn table), so the streaming form is the one
     a revenue/load dashboard actually runs. Day-grain COMPLETE-mode
-    aggregation of exact micro-unit daily totals (state = the
-    calendar-bounded (type, day, dv) ledger); the running-peak window
-    and trough extraction run on those bounded rows through the SHARED
-    ``assemble_max_drawdown`` contract, so the batch DuckDB oracle
-    transitively gates this stream; stream == batch is pinned by
+    aggregation of exact micro-unit daily totals (the SHARED
+    ``max_drawdown_grain``; state = the calendar-bounded (type, day,
+    dv) ledger); the running-peak window and trough extraction run on
+    those bounded rows through the SHARED ``assemble_max_drawdown``
+    contract, so the batch DuckDB oracle transitively gates this
+    stream; stream == batch is pinned by
     tests/test_streaming.py::test_max_drawdown_stream_equals_batch."""
-    from ..operators.analytics import assemble_max_drawdown
+    from ..operators.analytics import (
+        assemble_max_drawdown,
+        max_drawdown_grain,
+    )
 
-    ev = stream_events(spark, sf_dir).select(
-        "event_type",
-        F.to_date("ts").alias("day"),
-        F.expr("cast(floor(value * 1000000 + 0.5) as bigint)").alias("v_us"),
+    grain = max_drawdown_grain(stream_events(spark, sf_dir))
+    return assemble_max_drawdown(
+        _sink(spark, "complete", {query_name: grain})[0]
     )
-    q = (
-        ev.groupBy("event_type", "day")
-        .agg(F.sum("v_us").cast("long").alias("dv"))
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return assemble_max_drawdown(spark.table(query_name))
 
 
 def run_kuiper_hour_stream(
@@ -1236,30 +941,15 @@ def run_kuiper_hour_stream(
     (a service whose hour-of-day mix suddenly concentrates is
     misbehaving), so the circular-uniformity TEST is a natural
     always-on readout. COMPLETE-mode state is exactly the (type × 24)
-    clock-cell counts; the grid fill, D⁺/D⁻ sup lanes and critical
-    band run through the SHARED ``assemble_kuiper`` contract, so the
-    batch DuckDB oracle transitively gates this stream; stream ==
-    batch is pinned by tests/test_streaming.py."""
-    from ..operators.analytics import assemble_kuiper
+    clock-cell counts (the SHARED ``kuiper_grain``); the grid fill,
+    D⁺/D⁻ sup lanes and critical band run through the SHARED
+    ``assemble_kuiper`` contract, so the batch DuckDB oracle
+    transitively gates this stream; stream == batch is pinned by
+    tests/test_streaming.py."""
+    from ..operators.analytics import assemble_kuiper, kuiper_grain
 
-    ev = stream_events(spark, sf_dir).select(
-        "event_type",
-        F.expr(
-            "cast((unix_micros(cast(ts as timestamp)) div 3600000000) % 24"
-            " as int)"
-        ).alias("h"),
-    )
-    q = (
-        ev.groupBy("event_type", "h")
-        .agg(F.count("*").cast("long").alias("c"))
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return assemble_kuiper(spark.table(query_name))
+    grain = kuiper_grain(stream_events(spark, sf_dir))
+    return assemble_kuiper(_sink(spark, "complete", {query_name: grain})[0])
 
 
 def run_capacity_shed_stream(
@@ -1269,26 +959,17 @@ def run_capacity_shed_stream(
     whatif`` — the what-if is a capacity-planning dial an operator
     wants LIVE ("if we clamped at p90 right now, who loses traffic").
     COMPLETE-mode state is the calendar×alphabet-bounded (hr, type)
-    count ledger; the exact p90 cap and the proportional allocation
-    run through the SHARED ``assemble_capacity_shed`` contract, so
-    the batch DuckDB oracle transitively gates this stream; stream ==
-    batch is pinned by tests/test_streaming.py."""
-    from ..operators.analytics import assemble_capacity_shed
+    count ledger (the SHARED ``capacity_shed_grain``); the exact p90
+    cap and the proportional allocation run through the SHARED
+    ``assemble_capacity_shed`` contract, so the batch DuckDB oracle
+    transitively gates this stream; stream == batch is pinned by
+    tests/test_streaming.py."""
+    from ..operators.analytics import (
+        assemble_capacity_shed,
+        capacity_shed_grain,
+    )
 
-    ev = stream_events(spark, sf_dir).select(
-        F.expr(
-            "unix_micros(cast(ts as timestamp)) div 3600000000"
-        ).alias("hr"),
-        "event_type",
+    grain = capacity_shed_grain(stream_events(spark, sf_dir))
+    return assemble_capacity_shed(
+        _sink(spark, "complete", {query_name: grain})[0]
     )
-    q = (
-        ev.groupBy("hr", "event_type")
-        .agg(F.count("*").cast("long").alias("c"))
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return assemble_capacity_shed(spark.table(query_name))

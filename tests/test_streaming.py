@@ -826,3 +826,32 @@ def test_capacity_shed_stream_equals_batch(spark):
         tuple(r) for r in ev_capacity_shed_whatif(spark, SF_DIR).collect()
     )
     assert got == want and len(got) > 0
+
+
+def test_jobs_start_queries_only_through_the_sink_helper():
+    """Every streaming job runs its queries through ``jobs._sink``: the
+    module's source holds exactly one ``.writeStream``, the one inside that
+    helper, so the availableNow memory-sink block is not copied per job."""
+    import inspect
+
+    assert inspect.getsource(jobs).count(".writeStream") == 1
+    assert ".writeStream" in inspect.getsource(jobs._sink)
+
+
+def test_registry_does_not_import_streaming_jobs():
+    """The batch side of each twin owns the shared grain and never imports
+    ``streaming.jobs``, so building the registry does not load it."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    probe = (
+        "import sys; from spark_dba_spark import registry; "
+        "registry.all_specs(); "
+        "print('spark_dba_spark.streaming.jobs' in sys.modules)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True,
+        check=True, cwd=Path(__file__).resolve().parent.parent,
+    )
+    assert out.stdout.strip() == "False"

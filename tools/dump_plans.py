@@ -1,5 +1,9 @@
 """Dump `.explain("formatted")` for the named registered queries to
 <outdir>/<name>_<suffix>.txt — the plans/rNN before/after evidence files.
+Each "wrote …" line carries the plan's fingerprint (perfbench's
+``plan_fingerprint``: expression and plan ids stripped, the fixture
+directory replaced), so two checkouts that build the same plan print the
+same hash.
 
     python tools/dump_plans.py --out plans/r15 --suffix after [names...]
 """
@@ -7,15 +11,28 @@ from __future__ import annotations
 
 import argparse
 import contextlib
+import importlib.util
 import io
 import os
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from spark_dba_spark import registry  # noqa: E402
 from spark_dba_spark.session import get_spark  # noqa: E402
+
+
+def _plan_fingerprint():
+    """``perfbench/layers.plan_fingerprint``; ``perfbench`` is no package,
+    so load the module by path."""
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_layers", ROOT / "perfbench" / "layers.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.plan_fingerprint
 
 
 def main() -> None:
@@ -30,6 +47,7 @@ def main() -> None:
     unknown = [n for n in args.names if n not in specs]
     if unknown:
         ap.error(f"unknown query names: {', '.join(unknown)}")
+    fingerprint = _plan_fingerprint()
     out = Path(args.out)
     out.mkdir(parents=True, exist_ok=True)
     spark = get_spark("dump-plans", driver_memory="8g")
@@ -38,8 +56,10 @@ def main() -> None:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        (out / f"{name}_{args.suffix}.txt").write_text(buf.getvalue())
-        print(f"wrote {name}_{args.suffix}.txt", flush=True)
+        plan = buf.getvalue()
+        (out / f"{name}_{args.suffix}.txt").write_text(plan)
+        print(f"wrote {name}_{args.suffix}.txt {fingerprint(plan, args.sf)}",
+              flush=True)
     spark.stop()
 
 
