@@ -2016,140 +2016,30 @@ def dedup_minhash_perm_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented truth convention: pairs no swept config can see are
     invisible to all of them by construction).
 
-    Scale: the production signature stage runs ONCE and is
-    checkpointed; each config is the banded groupBy pair expansion
-    (never a self-join); exact verification touches only the bounded
-    candidate union. Degenerate configs (zero candidates) emit NULL
-    precision rather than tripping ANSI division."""
-    from .dedup import MINHASH_R, MINHASH_TAU, _minhash_stages
+    Scale: as the planner's kernel, ``dedup._band_sweep``. Degenerate
+    configs (zero candidates) emit NULL precision rather than tripping
+    ANSI division."""
+    from .dedup import MINHASH_R, _band_sweep
 
-    docs, sig, _ = _minhash_stages(spark, sf_dir)
-    sigc = sig.localCheckpoint(eager=True)  # one signature pass, 3 configs
-    docsc = docs.localCheckpoint(eager=True)  # verify joins, both sides
-    # r15 optimization round: all swept perm budgets expand in ONE pass
-    # over the checkpointed signatures (exploded config literal) instead
-    # of a branch-per-config union, and the band key is the raw
-    # (b, slice) struct instead of a rendered string — the key is
-    # grouping-internal and the digit rendering is injective, so the
-    # bucket sets are identical by construction (same change as
-    # dedup_lsh_band_planner; gated A/B there: 4.58s → 2.76s min).
-    cfg_lit = F.array(
-        *[
-            F.struct(
-                F.lit(p).cast("long").alias("num_perm"),
-                F.lit(p // MINHASH_R).alias("bn"),
-            )
-            for p in PERM_SWEEP
-        ]
-    )
-    allb = (
-        sigc.select("doc_id", "sig", F.explode(cfg_lit).alias("c"))
-        .select(
-            "doc_id",
-            F.col("c.num_perm").alias("num_perm"),
-            "sig",
-            F.explode(F.expr("sequence(0, c.bn - 1)")).alias("b"),
-        )
-        .select(
-            "doc_id",
-            "num_perm",
-            F.struct(
-                F.col("b"),
-                F.expr(f"slice(sig, b * {MINHASH_R} + 1, {MINHASH_R})")
-                .alias("k"),
-            ).alias("band_key"),
-        )
-    )
-    buckets = (
-        allb.groupBy("num_perm", "band_key")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .localCheckpoint(eager=True)  # feeds totals + pair expansion
-    )
-    totals = buckets.groupBy("num_perm").agg(
-        F.count("*").cast("long").alias("n_buckets_multi"),
-        F.sum(F.expr("size(ids) * (size(ids) - 1) div 2"))
-        .cast("long")
-        .alias("cand_pairs_total"),
-    )
-    pairs = (
-        buckets.select(
-            "num_perm",
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x as doc_a, y as doc_b))))"
-                )
-            ).alias("pr"),
-        )
-        .select("num_perm", "pr.doc_a", "pr.doc_b")
-        .distinct()
-        .localCheckpoint(eager=True)  # feeds union truth + config counts
-    )
-    uni = pairs.select("doc_a", "doc_b").distinct()
-    x = docsc.select(
-        F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sha")
-    )
-    y = docsc.select(
-        F.col("doc_id").alias("doc_b"), F.col("shingles").alias("shb")
-    )
-    truth = (
-        uni.join(x, "doc_a")
-        .join(y, "doc_b")
-        .filter(
-            F.size(F.array_intersect("sha", "shb")) * 1.0
-            / F.size(F.array_union("sha", "shb"))
-            >= MINHASH_TAU
-        )
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)  # truth count + per-config verify
-    )
-    tn = truth.agg(F.count("*").cast("long").alias("truth_n"))
-    nc = pairs.groupBy("num_perm").agg(
-        F.count("*").cast("long").alias("n_candidates")
-    )
-    ver = (
-        pairs.join(truth, ["doc_a", "doc_b"], "semi")
-        .groupBy("num_perm")
-        .agg(F.count("*").cast("long").alias("n_verified"))
-    )
-    spine = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(p).cast("long") for p in PERM_SWEEP])
-        ).alias("num_perm")
-    )
+    configs = [(p // MINHASH_R, MINHASH_R) for p in PERM_SWEEP]
     return (
-        spine.join(totals, "num_perm", "left")
-        .join(nc, "num_perm", "left")
-        .join(ver, "num_perm", "left")
-        .crossJoin(F.broadcast(tn))
+        _band_sweep(spark, sf_dir, configs)
         .select(
-            "num_perm",
-            F.expr(f"num_perm div {MINHASH_R}").alias("bands"),
-            F.coalesce("n_buckets_multi", F.lit(0))
-            .cast("long")
-            .alias("n_buckets_multi"),
-            F.coalesce("cand_pairs_total", F.lit(0))
-            .cast("long")
-            .alias("cand_pairs_total"),
-            F.coalesce("n_candidates", F.lit(0))
-            .cast("long")
-            .alias("n_candidates"),
-            F.coalesce("n_verified", F.lit(0))
-            .cast("long")
-            .alias("n_verified"),
+            (F.col("bands") * F.col("rpb")).cast("long").alias("num_perm"),
+            F.col("bands").cast("long").alias("bands"),
+            "n_buckets_multi",
+            "cand_pairs_total",
+            F.col("cand_pairs_distinct").alias("n_candidates"),
+            "n_verified",
             F.expr(
-                "case when coalesce(n_candidates, 0) = 0"
+                "case when cand_pairs_distinct = 0"
                 " then cast(null as double) else "
-                + rat_round6_spark(
-                    "coalesce(n_verified, 0)", "coalesce(n_candidates, 0)"
-                )
+                + rat_round6_spark("n_verified", "cand_pairs_distinct")
                 + " end"
             ).alias("precision_r6"),
             F.expr(
                 "case when truth_n = 0 then cast(null as double) else "
-                + rat_round6_spark("coalesce(n_verified, 0)", "truth_n")
+                + rat_round6_spark("n_verified", "truth_n")
                 + " end"
             ).alias("recall_vs_union_r6"),
         )

@@ -3309,6 +3309,7 @@ def dedup_band_precision_profile(
         MINHASH_R,
         MINHASH_TAU,
         _minhash_stages,
+        bucket_pairs,
     )
 
     docs, sig, _ = _minhash_stages(spark, sf_dir)
@@ -3322,27 +3323,15 @@ def dedup_band_precision_profile(
         # grouping-internal key: the raw signature slice, not a rendered
         # string — identical buckets (injective rendering), no per-row
         # int→string concat work (r15 optimization round, same change as
-        # _minhash_stages/dedup_lsh_band_planner)
+        # _minhash_stages/_band_sweep)
         F.expr(f"slice(sig, b * {MINHASH_R} + 1, {MINHASH_R})").alias("bkey"),
     )
-    cand = (
+    cand = bucket_pairs(
         bands.groupBy("b", "bkey")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(
-            "b",
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x as doc_a, y as doc_b))))"
-                )
-            ).alias("p"),
-        )
-        .select("b", F.col("p.doc_a").alias("doc_a"),
-                F.col("p.doc_b").alias("doc_b"))
-        .distinct()
-    )
+        .filter(F.size("ids") > 1),
+        keep=("b",),
+    ).distinct()
     x = docs.select(F.col("doc_id").alias("doc_a"),
                     F.col("shingles").alias("sha"))
     y = docs.select(F.col("doc_id").alias("doc_b"),
@@ -9293,129 +9282,27 @@ def dedup_lsh_band_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     measurable truth set (documented: pairs no config can see are
     invisible to all of them by construction).
 
-    Scale: the signature stage is computed ONCE and checkpointed; each
-    config is a banded groupBy pair expansion (the production posture —
-    never a self-join), and the exact verify runs only on the bounded
-    candidate union."""
-    from .dedup import MINHASH_TAU, _minhash_stages
+    Scale: as its kernel, ``dedup._band_sweep``."""
+    from .dedup import _band_sweep
 
-    docs, sig, _ = _minhash_stages(spark, sf_dir)
-    sigc = sig.localCheckpoint(eager=True)  # one signature pass, 4 configs
-    # r15 optimization round: the four configs expand in ONE pass over the
-    # checkpointed signatures (exploded config literal array) instead of a
-    # 4-branch union — one scan leg, one codegen span — and the band key
-    # is the raw (b, slice) struct instead of a rendered string (the key
-    # is grouping-internal; digit renders are injective, so the bucket
-    # sets are identical by construction). Gated order-balanced A/B at
-    # sf0.1: 4.58s → 2.76s min, output row-identical
-    # (tools/exp_bandplanner_r15.py).
-    cfg_lit = F.array(
-        *[
-            F.struct(F.lit(b).alias("bands"), F.lit(r).alias("rpb"))
-            for b, r in PLANNER_CONFIGS
-        ]
-    )
-    allb = (
-        sigc.select("doc_id", "sig", F.explode(cfg_lit).alias("c"))
-        .select(
-            "doc_id",
-            F.col("c.bands").alias("bands"),
-            F.col("c.rpb").alias("rpb"),
-            "sig",
-            F.explode(F.expr("sequence(0, c.bands - 1)")).alias("b"),
-        )
-        .select(
-            "doc_id",
-            "bands",
-            "rpb",
-            F.struct(
-                F.col("b"), F.expr("slice(sig, b * rpb + 1, rpb)").alias("k")
-            ).alias("band_key"),
-        )
-    )
-    buckets = (
-        allb.groupBy("bands", "rpb", "band_key")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .localCheckpoint(eager=True)  # feeds totals + pair expansion
-    )
-    totals = buckets.groupBy("bands", "rpb").agg(
-        F.count("*").cast("long").alias("n_buckets_multi"),
-        F.sum(F.expr("size(ids) * (size(ids) - 1) div 2")).cast("long")
-        .alias("cand_pairs_total"),
-    )
-    pairs = (
-        buckets.select(
-            "bands",
-            "rpb",
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x as doc_a, y as doc_b))))"
-                )
-            ).alias("p"),
-        )
-        .select("bands", "rpb", "p.doc_a", "p.doc_b")
-        .distinct()
-        .localCheckpoint(eager=True)  # feeds counts + union + capture
-    )
-    pcnt = pairs.groupBy("bands", "rpb").agg(
-        F.count("*").cast("long").alias("cand_pairs_distinct")
-    )
-    up = pairs.select("doc_a", "doc_b").distinct()
-    x = docs.select(F.col("doc_id").alias("doc_a"),
-                    F.col("shingles").alias("sha"))
-    y = docs.select(F.col("doc_id").alias("doc_b"),
-                    F.col("shingles").alias("shb"))
-    truth = (
-        up.join(x, "doc_a")
-        .join(y, "doc_b")
-        .filter(
-            F.size(F.array_intersect("sha", "shb")) * 1.0
-            / F.size(F.array_union("sha", "shb"))
-            >= MINHASH_TAU
-        )
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)  # feeds global count + per-config
-    )
-    tr = truth.agg(F.count("*").cast("long").alias("n_true_ref"))
-    cap = (
-        pairs.join(truth, ["doc_a", "doc_b"])
-        .groupBy("bands", "rpb")
-        .agg(F.count("*").cast("long").alias("n_true_captured"))
-    )
-    spine = spark.createDataFrame(
-        list(PLANNER_CONFIGS), "bands int, rpb int"
-    )
-    out = (
-        spine.join(totals, ["bands", "rpb"], "left")
-        .join(pcnt, ["bands", "rpb"], "left")
-        .join(cap, ["bands", "rpb"], "left")
-        .crossJoin(F.broadcast(tr))
+    return (
+        _band_sweep(spark, sf_dir, PLANNER_CONFIGS)
         .select(
             "bands",
             "rpb",
-            F.coalesce("n_buckets_multi", F.lit(0)).cast("long")
-            .alias("n_buckets_multi"),
-            F.coalesce("cand_pairs_total", F.lit(0)).cast("long")
-            .alias("cand_pairs_total"),
-            F.coalesce("cand_pairs_distinct", F.lit(0)).cast("long")
-            .alias("cand_pairs_distinct"),
-            "n_true_ref",
-            F.coalesce("n_true_captured", F.lit(0)).cast("long")
-            .alias("n_true_captured"),
+            "n_buckets_multi",
+            "cand_pairs_total",
+            "cand_pairs_distinct",
+            F.col("truth_n").alias("n_true_ref"),
+            F.col("n_verified").alias("n_true_captured"),
             F.expr(
-                "case when n_true_ref > 0 then "
-                + rat_round6_spark(
-                    "coalesce(n_true_captured, 0)", "n_true_ref"
-                )
+                "case when truth_n > 0 then "
+                + rat_round6_spark("n_verified", "truth_n")
                 + " end"
             ).alias("recall_r6"),
         )
         .orderBy("rpb")
     )
-    return out
 
 
 def _oracle_band_planner() -> str:

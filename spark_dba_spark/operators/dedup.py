@@ -166,6 +166,34 @@ FROM documents
 # N-gram Jaccard near-dup (inverted-index join, DF-pruned)
 # --------------------------------------------------------------------------
 
+def bucket_pairs(
+    buckets: DataFrame,
+    ids: str = "ids",
+    keep=(),
+    a: str = "doc_a",
+    b: str = "doc_b",
+) -> DataFrame:
+    """Every in-bucket pair of a frame whose ``ids`` column holds a
+    sorted array: one row ``(*keep, a, b)`` per index pair i < j, so
+    ``a < b`` under the array's order (items may be structs). Singleton
+    and empty buckets yield no rows.
+
+    The pair expansion behind every inverted-index and LSH candidate
+    stage: one groupBy builds the buckets, then this map-side
+    ``explode`` enumerates each bucket's pairs — never a self-join,
+    whose plan duplicates the bucket build per side. Callers keep their
+    own bucket build (collect_list or collect_set, size filters) and
+    their own tail (count, distinct, checkpoint)."""
+    pair = (
+        f"flatten(transform({ids}, (x, i) -> "
+        f"transform(slice({ids}, i + 2, size({ids}) - i - 1), "
+        f"y -> struct(x as {a}, y as {b}))))"
+    )
+    return buckets.select(
+        *keep, F.explode(F.expr(pair)).alias("p")
+    ).select(*keep, f"p.{a}", f"p.{b}")
+
+
 def _pair_sims(sh: DataFrame) -> DataFrame:
     """Shared inverted-index candidate machinery over a (doc_id, sh)
     stream: every nonzero-overlap pair with its intersection and both
@@ -175,9 +203,14 @@ def _pair_sims(sh: DataFrame) -> DataFrame:
     Stop-shingle pruning (a shingle in >MAX_DF docs contributes O(df²)
     pairs) is just a size filter on the postings list — the r1 version
     paid a separate full-stream window shuffle for the DF count, and then
-    a self-join that recomputed the exploded stream per branch. (sizes and
-    pairs share the groupBy exchange via ReusedExchange — no persist: the
-    postings frame is O(distinct shingles), corpus-scale.)"""
+    a self-join that recomputed the exploded stream per branch. Sizes and
+    pairs share only the shingle shuffle (ReusedExchange): the
+    ``collect_list`` aggregation behind the postings runs once per branch,
+    and AQE coalesces each run to one task. No persist: the postings
+    frame is O(distinct shingles), corpus-scale. A variant that runs the
+    aggregation once, with self-pairs carrying the sizes, was slower on
+    dedup_ngram_jaccard at sf0.01 (median 1.49 → 1.73 s over 8
+    interleaved passes)."""
     postings = (
         sh.groupBy("sh")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
@@ -188,20 +221,11 @@ def _pair_sims(sh: DataFrame) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count("*").alias("n"))
     )
-    # In-bucket pair expansion (ids sorted → doc_a < doc_b), then count how
-    # many shingles each pair shares = |intersection|.
+    # ids sorted → doc_a < doc_b; count how many shingles each pair
+    # shares = |intersection|.
     pairs = (
-        postings.filter(F.size("ids") > 1)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x as doc_a, y as doc_b))))"
-                )
-            ).alias("p")
-        )
-        .groupBy("p.doc_a", "p.doc_b")
+        bucket_pairs(postings.filter(F.size("ids") > 1))
+        .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("inter"))
     )
     sx = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
@@ -450,23 +474,132 @@ def _minhash_stages(spark: SparkSession, sf_dir: str):
             ).alias("band_key"),
         )
     )
-    cand = (
+    cand = bucket_pairs(
         bands.groupBy("band_key")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") > 1)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x as doc_a, y as doc_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    ).distinct()
     return docs, sig, cand
+
+
+def _band_sweep(spark: SparkSession, sf_dir: str, configs) -> DataFrame:
+    """MinHash-LSH banding cost and capture per (bands, rows-per-band)
+    config over the production signatures (:func:`_minhash_stages`) —
+    the kernel behind the two tuning sweeps, dedup_lsh_band_planner
+    (bands × rows at 100 perms) and dedup_minhash_perm_sweep (a ``p``-perm
+    signature is the config (p/4, 4), a prefix of the production one).
+
+    One row per config: ``bands``, ``rpb``, ``n_buckets_multi`` (buckets
+    holding >1 doc), ``cand_pairs_total`` (Σ C(m, 2) over those buckets —
+    the candidate volume without bucket dedup), ``cand_pairs_distinct``,
+    ``n_verified`` (distinct candidates at exact Jaccard ≥ MINHASH_TAU)
+    and ``truth_n``: the union of every config's candidates,
+    exact-verified — the measurable truth set (pairs no config can see
+    are invisible to all of them by construction).
+
+    Scale: the signature stage runs ONCE and is checkpointed; each
+    config is a banded groupBy pair expansion (never a self-join), and
+    the exact verify touches only the bounded candidate union."""
+    docs, sig, _ = _minhash_stages(spark, sf_dir)
+    sigc = sig.localCheckpoint(eager=True)  # one signature pass, all configs
+    # r15 optimization round: every config expands in ONE pass over the
+    # checkpointed signatures (exploded config literal array) instead of
+    # a branch-per-config union — one scan leg, one codegen span — and
+    # the band key is the raw (b, slice) struct instead of a rendered
+    # string (the key is grouping-internal; digit renders are injective,
+    # so the bucket sets are identical by construction). Gated
+    # order-balanced A/B at sf0.1 on the band planner: 4.58s → 2.76s
+    # min, output row-identical (OPTIMIZATION_r15.md).
+    cfg_lit = F.array(
+        *[
+            F.struct(F.lit(b).alias("bands"), F.lit(r).alias("rpb"))
+            for b, r in configs
+        ]
+    )
+    allb = (
+        sigc.select("doc_id", "sig", F.explode(cfg_lit).alias("c"))
+        .select(
+            "doc_id",
+            F.col("c.bands").alias("bands"),
+            F.col("c.rpb").alias("rpb"),
+            "sig",
+            F.explode(F.expr("sequence(0, c.bands - 1)")).alias("b"),
+        )
+        .select(
+            "doc_id",
+            "bands",
+            "rpb",
+            F.struct(
+                F.col("b"), F.expr("slice(sig, b * rpb + 1, rpb)").alias("k")
+            ).alias("band_key"),
+        )
+    )
+    buckets = (
+        allb.groupBy("bands", "rpb", "band_key")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
+        .filter(F.size("ids") > 1)
+        .localCheckpoint(eager=True)  # feeds totals + pair expansion
+    )
+    totals = buckets.groupBy("bands", "rpb").agg(
+        F.count("*").alias("n_buckets_multi"),
+        F.sum(F.expr("size(ids) * (size(ids) - 1) div 2"))
+        .alias("cand_pairs_total"),
+    )
+    pairs = (
+        bucket_pairs(buckets, keep=("bands", "rpb"))
+        .distinct()
+        .localCheckpoint(eager=True)  # feeds counts + union + capture
+    )
+    pcnt = pairs.groupBy("bands", "rpb").agg(
+        F.count("*").alias("cand_pairs_distinct")
+    )
+    up = pairs.select("doc_a", "doc_b").distinct()
+    x = docs.select(F.col("doc_id").alias("doc_a"),
+                    F.col("shingles").alias("sha"))
+    y = docs.select(F.col("doc_id").alias("doc_b"),
+                    F.col("shingles").alias("shb"))
+    truth = (
+        up.join(x, "doc_a")
+        .join(y, "doc_b")
+        .filter(
+            F.size(F.array_intersect("sha", "shb")) * 1.0
+            / F.size(F.array_union("sha", "shb"))
+            >= MINHASH_TAU
+        )
+        .select("doc_a", "doc_b")
+        .localCheckpoint(eager=True)  # feeds global count + per-config
+    )
+    tn = truth.agg(F.count("*").cast("long").alias("truth_n"))
+    ver = (
+        pairs.join(truth, ["doc_a", "doc_b"], "semi")
+        .groupBy("bands", "rpb")
+        .agg(F.count("*").alias("n_verified"))
+    )
+    # The config literal is the row spine too: a one-row Range the
+    # planner can size, so every per-config count joins by broadcast. A
+    # createDataFrame spine is an RDD scan of unknown size, and under it
+    # the verified-count join planned as a sort-merge join.
+    spine = spark.range(1).select(F.explode(cfg_lit).alias("c")).select(
+        "c.bands", "c.rpb"
+    )
+    counts = (
+        "n_buckets_multi",
+        "cand_pairs_total",
+        "cand_pairs_distinct",
+        "n_verified",
+    )
+    return (
+        spine.join(totals, ["bands", "rpb"], "left")
+        .join(pcnt, ["bands", "rpb"], "left")
+        .join(ver, ["bands", "rpb"], "left")
+        .crossJoin(F.broadcast(tn))
+        .select(
+            "bands",
+            "rpb",
+            *[F.coalesce(c, F.lit(0)).cast("long").alias(c) for c in counts],
+            "truth_n",
+        )
+    )
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -600,23 +733,17 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Same groupBy-bucket pair expansion as dedup_minhash_lsh — one shuffle
     # of narrow band rows instead of a plan-duplicating self-join.
-    return (
+    buckets = (
         bands.groupBy("band_key")
         .agg(F.array_sort(F.collect_list("ds")).alias("ids"))
         .filter(F.size("ids") > 1)
+    )
+    return (
+        bucket_pairs(buckets, a="a", b="b")
         .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x as a, y as b))))"
-                )
-            ).alias("p")
-        )
-        .select(
-            F.col("p.a.doc_id").alias("doc_a"),
-            F.col("p.b.doc_id").alias("doc_b"),
-            F.expr("bit_count(p.a.simhash ^ p.b.simhash)").alias("hamming"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.expr("bit_count(a.simhash ^ b.simhash)").alias("hamming"),
         )
         .distinct()
         .filter(F.col("hamming") <= SIMHASH_MAXHAM)
@@ -896,16 +1023,8 @@ def dedup_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("srcs") > 1)
     )
     return (
-        per_hash.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(srcs, (x, i) -> "
-                    "transform(slice(srcs, i + 2, size(srcs) - i - 1), "
-                    "y -> struct(x as source_a, y as source_b))))"
-                )
-            ).alias("p")
-        )
-        .groupBy("p.source_a", "p.source_b")
+        bucket_pairs(per_hash, ids="srcs", a="source_a", b="source_b")
+        .groupBy("source_a", "source_b")
         .agg(F.count("*").alias("shared_texts"))
         .orderBy("source_a", "source_b")
     )
@@ -929,43 +1048,16 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     = inter/min(|A|,|B|). Jaccard misses subset duplicates — a short doc
     quoted whole inside a long one scores J = |A|/|B| ≈ 0 but containment
     1.0 (the quoted-email / boilerplate-wrapper case a dedup pass must
-    catch). Same inverted-index machinery as dedup_ngram_jaccard (one
-    postings groupBy, MAX_DF stop-shingle prune, in-bucket pair
-    expansion — no O(n²)); only the final score differs, and jaccard
-    rides along for contrast."""
+    catch). Same inverted-index machinery as dedup_ngram_jaccard
+    (:func:`_pair_sims`: one postings groupBy, MAX_DF stop-shingle prune,
+    in-bucket pair expansion — no O(n²)); only the final score differs,
+    and jaccard rides along for contrast."""
     docs = _docs_par(spark, sf_dir)
     sh = docs.select(
         "doc_id", F.explode(word_ngrams("text", NGRAM)).alias("sh")
     )
-    postings = (
-        sh.groupBy("sh")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") <= MAX_DF)
-    )
-    sizes = (
-        postings.select(F.explode("ids").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n"))
-    )
-    pairs = (
-        postings.filter(F.size("ids") > 1)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x as doc_a, y as doc_b))))"
-                )
-            ).alias("p")
-        )
-        .groupBy("p.doc_a", "p.doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sx = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sy = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     return (
-        pairs.join(sx, "doc_a")
-        .join(sy, "doc_b")
+        _pair_sims(sh)
         .withColumn(
             "containment",
             F.col("inter") * 1.0 / F.least(F.col("na"), F.col("nb")),

@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 from .. import catalog
 from ..functions.numeric import rat_round6_duck, rat_round6_spark
 from ..registry import QuerySpec
+from .dedup import bucket_pairs
 
 try:  # pragma: no cover - the real decoder is not installed in this env
     import PIL.Image  # noqa: F401
@@ -818,16 +819,8 @@ def mm_neardup_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     pairs = (
-        pruned.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x as doc_a, y as doc_b))))"
-                )
-            ).alias("p")
-        )
-        .groupBy("p.doc_a", "p.doc_b")
+        bucket_pairs(pruned)
+        .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("m"))
         .filter(F.col("m") >= MIN_BLOCK_MATCH)
     )
@@ -1174,16 +1167,8 @@ def mm_video_keyframe_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.size("ids") <= MAX_FRAME_DF) & (F.size("ids") > 1))
     )
     pairs = (
-        pruned.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x as doc_a, y as doc_b))))"
-                )
-            ).alias("p")
-        )
-        .groupBy("p.doc_a", "p.doc_b")
+        bucket_pairs(pruned)
+        .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("m"))
         .filter(F.col("m") >= MIN_FRAME_MATCH)
         .select("doc_a", "doc_b")
@@ -1516,16 +1501,8 @@ def mm_audio_fingerprint_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.size("ids") <= MAX_LANDMARK_DF) & (F.size("ids") > 1))
     )
     return (
-        pruned.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x as doc_a, y as doc_b))))"
-                )
-            ).alias("p")
-        )
-        .groupBy("p.doc_a", "p.doc_b")
+        bucket_pairs(pruned)
+        .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("m"))
         .filter(F.col("m") >= MIN_LANDMARKS)
         .select(

@@ -16,6 +16,17 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from spark_dba_spark import registry  # noqa: E402
 
 
+def row(name, spec) -> str:
+    """One inventory row after its ``#`` cell. The source is the module
+    only: a line number would move with every edit above the builder."""
+    mod = inspect.getmodule(spec.builder)
+    src = mod.__name__.replace("spark_dba_spark.", "") if mod else "?"
+    return (
+        f"`{name}` | {'sql' if spec.oracle else 'rows-only'} | "
+        f"{'yes' if spec.bench else ''} | {', '.join(spec.tags)} | {src}"
+    )
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default="OPERATORS.md")
@@ -34,17 +45,7 @@ def main() -> int:
         "|---|---|---|---|---|---|",
     ]
     for i, (name, spec) in enumerate(specs.items(), 1):
-        mod = inspect.getmodule(spec.builder)
-        src = mod.__name__.replace("spark_dba_spark.", "") if mod else "?"
-        try:
-            line = inspect.getsourcelines(spec.builder)[1]
-            src = f"{src}:{line}"
-        except (OSError, TypeError):
-            pass
-        lines.append(
-            f"| {i} | `{name}` | {'sql' if spec.oracle else 'rows-only'} | "
-            f"{'yes' if spec.bench else ''} | {', '.join(spec.tags)} | {src} |"
-        )
+        lines.append(f"| {i} | {row(name, spec)} |")
     lines += [
         "",
         "Order = driver-sweep priority, derived by `registry.prioritize` "
